@@ -101,7 +101,9 @@ class Collection:
         return compact(self.spark, self.root, self.cfg)
 
     def search(self, query, k: int = 10, **kw) -> DataFrame:
-        from fastcatsearch3_spark.plans.search import search_index
+        # cached results come back as Arrow-backed local frames, so
+        # collecting a cache hit starts no Spark job
+        from fastcatsearch3_spark.plans.search import local_frame, search_index
 
         cacheable = self.cache_size > 0 and all(
             not isinstance(v, DataFrame) for v in kw.values()
@@ -117,7 +119,7 @@ class Collection:
             self._cache.move_to_end(key)
             self.cache_hits += 1
             schema, rows = hit
-            return self.spark.createDataFrame(rows, schema=schema)
+            return local_frame(self.spark, schema, rows)
         if self._shared is not None:
             got = self._shared.get(repr(key), key[0])
             if got is not None:
@@ -131,7 +133,7 @@ class Collection:
                 self._cache[key] = (schema, rows)
                 while len(self._cache) > self.cache_size:
                     self._cache.popitem(last=False)
-                return self.spark.createDataFrame(rows, schema=schema)
+                return local_frame(self.spark, schema, rows)
         self.cache_misses += 1
         out = search_index(self.spark, self.store, query, k=k, **kw)
         rows = out.collect()  # ≤ k result rows — never O(corpus)
@@ -140,7 +142,7 @@ class Collection:
             self._cache.popitem(last=False)
         if self._shared is not None:
             self._shared.put(repr(key), key[0], out.schema.json(), rows)
-        return self.spark.createDataFrame(rows, schema=out.schema)
+        return local_frame(self.spark, out.schema, rows)
 
     def search_many(self, queries: dict, k: int = 10, **kw) -> DataFrame:
         from fastcatsearch3_spark.plans.search import search_many

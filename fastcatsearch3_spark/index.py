@@ -24,6 +24,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from fastcatsearch3_spark.config import EngineConfig
 
+# Driver-route cap: an index whose postings plus docmap files hold fewer
+# bytes than this serves search_index / search_many on the driver
+# (pyarrow reads + the shard kernels in-process, no Spark job); larger
+# indexes keep the Spark plan. See CHANGES.md for the measurement.
+LOCAL_MAX_BYTES = 16 << 20
+
 
 def recover_interrupted_compact(root: str | Path) -> bool:
     """Roll back a compaction swap that crashed mid-window (ST-4).
@@ -133,6 +139,93 @@ class IndexStore:
                 if p.name not in (out.name,) and not p.name.endswith(".tmp"):
                     shutil.rmtree(p, ignore_errors=True)
         return spark.read.parquet(str(out))
+
+    def _local_state(self) -> dict:
+        """Per-epoch driver-side state of the small-index read route,
+        re-keyed on every ``epoch()`` change as ``df_for_terms`` re-keys
+        its lexicon cache: the on-disk size listing (``bytes``) and,
+        once ``local_view`` has asked for them, the postings dataset, the
+        hydrate docmap and the denied set."""
+        ep = self.epoch()
+        st = getattr(self, "_local", None)
+        if st is None or st["epoch"] != ep:
+            st = self._local = {"epoch": ep, "bytes": self._disk_bytes()}
+        return st
+
+    def _disk_bytes(self) -> int:
+        """Postings plus docmap bytes on disk (data files only)."""
+        total = 0
+        for sub in ("postings", "docmap"):
+            base = Path(self._p(sub))
+            if base.exists():
+                total += sum(
+                    p.stat().st_size
+                    for p in base.rglob("*")
+                    if p.is_file() and not p.name.startswith(("_", "."))
+                )
+        return total
+
+    def local_view(
+        self, terms: list[str], columns: list[str], with_deletes: bool
+    ):
+        """Inputs of the driver read route, all from ONE per-epoch state,
+        so a write racing the request cannot mix two epochs' files:
+        (the query terms' postings rows, the denied set or None, the
+        docmap), as pandas frames read with pyarrow (no Spark job).
+
+        None when the index holds ``LOCAL_MAX_BYTES`` or more, or when
+        pyarrow fails to read it (a missing column included) — the
+        caller then runs the Spark plan, as ``_lexicon_lookup_arrow``'s
+        callers do."""
+        st = self._local_state()
+        if st["bytes"] >= LOCAL_MAX_BYTES:
+            return None
+        try:
+            import pyarrow.dataset as pds
+
+            if "docmap" not in st:
+                st["postings"] = pds.dataset(
+                    self._p("postings"), format="parquet", partitioning="hive"
+                )
+                st["docmap"] = (
+                    pds.dataset(
+                        self._p("docmap"), format="parquet", partitioning="hive"
+                    )
+                    .to_table(columns=["segment_id", "shard", "docno", "doc_id"])
+                    .to_pandas()
+                )
+            if with_deletes and "denied" not in st:
+                st["denied"] = self._denied_local(st["docmap"])
+            cand = (
+                st["postings"]
+                .to_table(columns=columns, filter=pds.field("term").isin(terms))
+                .to_pandas()
+            )
+        except Exception:  # noqa: BLE001 — any reader failure → Spark path
+            return None
+        return cand, st["denied"] if with_deletes else None, st["docmap"]
+
+    def _denied_local(self, dm):
+        """The denied set (segment_id, shard, docno) in pandas: docmap ⋈
+        deletes under ``denied_mask``'s predicate (``dm.doc_id =
+        dl.doc_id AND dm.segment_id < dl.segment_id``). Empty when
+        nothing is deleted."""
+        import pyarrow.dataset as pds
+
+        dl = dm.iloc[:0][["doc_id", "segment_id"]]
+        if self.has_deletes():
+            dl = (
+                pds.dataset(self._p("deletes"), format="parquet")
+                .to_table(columns=["doc_id", "segment_id"])
+                .to_pandas()
+            )
+        j = dm.merge(dl, on="doc_id", suffixes=("", "_dl"))
+        return (
+            j.loc[j["segment_id"] < j["segment_id_dl"],
+                  ["segment_id", "shard", "docno"]]
+            .drop_duplicates()
+            .reset_index(drop=True)
+        )
 
     def df_for_terms(self, spark: SparkSession, terms: list[str]) -> dict:
         """term → df for the given terms, from a driver-resident lexicon

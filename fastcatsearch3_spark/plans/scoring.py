@@ -854,7 +854,6 @@ def score_group_factored(
         )
     sel_docnos, sel_finals = _topk(finals, docnos, k)
     # map selection back to bm25/factor (docnos unique within a shard)
-    pos = {int(d): i for i, d in enumerate(docnos)}
-    idx = np.fromiter((pos[int(d)] for d in sel_docnos), dtype=np.int64,
-                      count=sel_docnos.size)
+    order = np.argsort(docnos)
+    idx = order[np.searchsorted(docnos[order], sel_docnos)]
     return sel_docnos, bm25[idx], fac[idx], sel_finals

@@ -2,25 +2,52 @@
 
 Reference read path: SearchAction → Query tree → per-segment
 SegmentSearcher doc-at-a-time clause evaluation → per-node top-k →
-cluster merge (server:…job.ClusterSearchJob [K]). Spark mapping:
+cluster merge (server:…job.ClusterSearchJob [K]).
 
-  Q-3  candidate fetch: postings scan filtered to the analyzed query
-       terms — an `isin` predicate pushed to Parquet (bloom filter on
-       `term` set at write time), NOT a join, so only matching row-groups
-       are read;
-  Q-4  scoring: applyInPandas kernel per (segment_id, shard) group —
-       every group holds all of its docs' postings for all query terms,
-       so AND/OR/NOT and block-max pruning are shard-local and exact;
-  Q-6  scatter-gather: each group emits its local top-k; the global
-       orderBy(score desc, doc_id asc).limit(k) compiles to Spark's
-       TakeOrderedAndProject — the same partial/final top-k merge the
-       reference's ClusterSearchJob hand-rolls over netty;
-  Q-5  hydrate: the ≤ k×groups surviving hits are joined (broadcast)
-       back to docmap for doc_ids, then optionally to the corpus for
-       stored fields.
+``search_index`` and ``search_many`` are cost-routed between two
+executors that run the SAME per-(segment, shard) kernel closures and
+rank in the same order, so they return identical answers:
+
+* **Driver route** — taken when no ``allow_doc_ids`` frame is given,
+  ``_return_all`` is off and the index is small (postings plus docmap
+  bytes on disk under ``index.LOCAL_MAX_BYTES``). On indexes this small
+  a read's cost is crossing into Spark (several jobs per request), not
+  computing, so the driver does it all in-process and starts no job:
+
+    Q-3  candidate fetch: pyarrow reads the query terms' postings rows
+         (``IndexStore.local_view``);
+    Q-4  scoring: ``_run_local`` calls the kernel closure once per local
+         (segment_id, shard) group, with that group's slice of the
+         per-epoch denied set (docmap ⋈ deletes in pandas);
+    Q-6  top-k: pandas sorts the hits (score desc, doc_id asc) and pages
+         them (offset / after), per query_id for a batch;
+    Q-5  hydrate: doc_ids come from the per-epoch docmap; the result
+         goes back as an Arrow-backed frame (``local_frame``), so
+         collecting it runs no Spark job either.
+
+  Any pyarrow read failure falls back to the Spark route.
+
+* **Spark route** — every other request:
+
+    Q-3  candidate fetch: postings scan filtered to the analyzed query
+         terms — an `isin` predicate pushed to Parquet (bloom filter on
+         `term` set at write time), NOT a join, so only matching
+         row-groups are read;
+    Q-4  scoring: applyInPandas kernel per (segment_id, shard) group —
+         every group holds all of its docs' postings for all query
+         terms, so AND/OR/NOT and block-max pruning are shard-local and
+         exact;
+    Q-6  scatter-gather: each group emits its local top-k; the global
+         orderBy(score desc, doc_id asc).limit(k) compiles to Spark's
+         TakeOrderedAndProject — the same partial/final top-k merge the
+         reference's ClusterSearchJob hand-rolls over netty;
+    Q-5  hydrate: the ≤ k×groups surviving hits are joined (broadcast)
+         back to docmap for doc_ids, then optionally to the corpus for
+         stored fields.
 
 Filters/deletes (P-2..P-7) resolve to shard-local docno sets cogrouped
-into the kernel so exclusion happens BEFORE top-k selection.
+into the kernel so exclusion happens BEFORE top-k selection. Empty
+early returns are Arrow-backed local frames too (``local_frame``).
 """
 
 from __future__ import annotations
@@ -48,6 +75,102 @@ from fastcatsearch3_spark.plans.scoring import (
 )
 
 KERNEL_SCHEMA = "segment_id int, shard int, docno bigint, score double"
+HITS_SCHEMA = "doc_id long, score double"
+BATCH_HITS_SCHEMA = "query_id string, doc_id long, score double"
+
+# parsing a DDL schema is a JVM round trip (~4 ms); parse each one once
+_DDL_CACHE: dict = {}
+
+
+def local_frame(spark: SparkSession, schema, rows=None) -> DataFrame:
+    """A driver-resident result frame backed by an Arrow table. It plans
+    as a ``LocalTableScan``, so collecting it starts no Spark job; a
+    frame built from a Python list is an RDD scan whose collect runs one
+    (≈0.4 s on a local session, even when empty). ``schema``: a DDL
+    string or a StructType; ``rows``: a pandas frame holding the
+    schema's columns, a list of tuples / Rows, or None for no rows."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    st = schema
+    if isinstance(schema, str):
+        st = _DDL_CACHE.get(schema)
+        if st is None:
+            st = _DDL_CACHE[schema] = DataType.fromDDL(schema)
+    asch = to_arrow_schema(st)
+    if isinstance(rows, pd.DataFrame):
+        tbl = pa.Table.from_pandas(
+            rows[st.names], schema=asch, preserve_index=False
+        )
+    else:
+        cols = list(zip(*rows)) if rows else [()] * len(asch)
+        tbl = pa.Table.from_arrays(
+            [pa.array(list(c), type=f.type) for c, f in zip(cols, asch)],
+            schema=asch,
+        )
+    return spark.createDataFrame(tbl, st)
+
+
+def _local_inputs(
+    store, terms: list[str], columns: list[str], apply_deletes: bool
+):
+    """Inputs of the driver route (``IndexStore.local_view``) with the
+    denied set as a kind=-1 kernel mask (None when nothing is denied),
+    or None when the request must take the Spark plan."""
+    view = store.local_view(terms, columns, apply_deletes)
+    if view is None:
+        return None
+    cand, denied, dm = view
+    mask = denied.assign(kind=-1) if denied is not None and len(denied) else None
+    return cand, mask, dm
+
+
+def _run_local(
+    kernel, cand: pd.DataFrame, mask: pd.DataFrame | None
+) -> pd.DataFrame | None:
+    """Run a shard-kernel closure on the driver once per (segment_id,
+    shard) group of ``cand``, as the Spark plan's (co)grouped
+    applyInPandas does. With ``mask`` the closure is the two-arg
+    cogrouped form and gets the group's mask rows (an empty frame when
+    it has none, as a cogroup passes); otherwise the one-arg form.
+    Returns the concatenated non-empty outputs, or None."""
+    if mask is not None:
+        by_key = dict(iter(mask.groupby(["segment_id", "shard"])))
+        none = mask.iloc[:0]
+    outs = []
+    for key, g in cand.groupby(["segment_id", "shard"], sort=True):
+        g = g.reset_index(drop=True)
+        if mask is None:
+            outs.append(kernel(g))
+        else:
+            outs.append(kernel(g, by_key.get(key, none).reset_index(drop=True)))
+    outs = [o for o in outs if len(o)]
+    return pd.concat(outs, ignore_index=True) if outs else None
+
+
+def _rank_local(
+    hits: pd.DataFrame | None, dm: pd.DataFrame, k: int, by_query: bool = False,
+    offset: int = 0, after: "tuple[float, int] | None" = None,
+) -> pd.DataFrame | None:
+    """Hydrate kernel hits to doc_ids and rank them in the Spark route's
+    order: (score desc, doc_id asc), paged by ``offset`` / ``after``;
+    with ``by_query``, the top k per query_id, ordered by query_id."""
+    if hits is None:
+        return None
+    out = hits.merge(dm, on=["segment_id", "shard", "docno"])
+    if after is not None:
+        s0, i0 = float(after[0]), int(after[1])
+        out = out[
+            (out["score"] < s0) | ((out["score"] == s0) & (out["doc_id"] > i0))
+        ]
+    if by_query:
+        out = out.sort_values(
+            ["query_id", "score", "doc_id"], ascending=[True, False, True]
+        )
+        return out.groupby("query_id", sort=False).head(k)
+    out = out.sort_values(["score", "doc_id"], ascending=[False, True])
+    return out.iloc[offset:offset + k]
 
 
 def _make_kernel(
@@ -518,8 +641,8 @@ def explain_scores(
     cfg = store.config()
     pq = parse_query(query, cfg) if isinstance(query, str) else query
     pq = _expand_prefixes(spark, store, pq, cfg)
-    empty = spark.createDataFrame(
-        [],
+    empty = local_frame(
+        spark,
         "doc_id long, term string, tf bigint, dl bigint, df bigint,"
         " idf double, boost double, partial double",
     )
@@ -691,8 +814,8 @@ def correct_query(
     cfg = store.config()
     toks = tokenize_text(text, cfg)
     if not toks:
-        return spark.createDataFrame(
-            [],
+        return local_frame(
+            spark,
             "pos long, word string, suggestion string, dist long, df long",
         )
     qdf = spark.createDataFrame(
@@ -800,7 +923,7 @@ def more_like_this(
         .collect()
     )
     if not row:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, HITS_SCHEMA)
     toks = tokenize_text(row[0]["content"], cfg)
     tf: dict[str, int] = {}
     for t in toks:
@@ -821,7 +944,7 @@ def more_like_this(
     )[:m]
     terms = [t for _, t in scored]
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, HITS_SCHEMA)
     pq = ParsedQuery(terms=terms, op="OR")
     hits = search_index(spark, store, pq, k=k + 1, mode="taat")
     return (
@@ -873,8 +996,8 @@ def related_keywords(
     cfg = store.config()
     pq = parse_query(query, cfg) if isinstance(query, str) else query
     if pq is None or not pq.terms:
-        return spark.createDataFrame(
-            [], "term string, fg_df long, bg_df long, score double"
+        return local_frame(
+            spark, "term string, fg_df long, bg_df long, score double"
         )
     # expand prefix/wildcard/fuzzy placeholders BEFORE computing the
     # exclusion set: the lexicon-expanded terms are the ones that drove
@@ -882,8 +1005,8 @@ def related_keywords(
     # just echo the query back (they trivially dominate foreground df)
     pq = _expand_prefixes(spark, store, pq, cfg)
     if pq is None:  # an AND-required placeholder matched nothing
-        return spark.createDataFrame(
-            [], "term string, fg_df long, bg_df long, score double"
+        return local_frame(
+            spark, "term string, fg_df long, bg_df long, score double"
         )
     qterms = list(
         dict.fromkeys(
@@ -970,11 +1093,11 @@ def rescore_topk(
     # would re-execute the whole first-pass search for each use
     win_rows = search_index(spark, store, query, k=window).collect()
     if not win_rows:
-        return spark.createDataFrame(
-            [],
+        return local_frame(
+            spark,
             "doc_id long, first_score double, rescore double, score double",
         )
-    win = spark.createDataFrame(win_rows, "doc_id long, score double")
+    win = local_frame(spark, HITS_SCHEMA, win_rows)
     resc = search_index(
         spark,
         store,
@@ -1321,8 +1444,8 @@ def function_score_topk(
     cfg = store.config()
     pq = parse_query(query, cfg) if isinstance(query, str) else query
     pq = _expand_prefixes(spark, store, pq, cfg)
-    empty = spark.createDataFrame(
-        [], "doc_id long, score double, factor double, final double"
+    empty = local_frame(
+        spark, "doc_id long, score double, factor double, final double"
     )
     if pq is None or not pq.terms:
         return empty
@@ -1441,8 +1564,8 @@ def rescore_many(
     (score desc, doc_id asc) top-k."""
     if k > window:
         raise ValueError("k must be <= window")
-    empty = spark.createDataFrame(
-        [],
+    empty = local_frame(
+        spark,
         "query_id string, doc_id long, first_score double,"
         " rescore double, score double",
     )
@@ -1456,9 +1579,7 @@ def rescore_many(
     win_rows = first.collect()
     if not win_rows:
         return empty
-    win = spark.createDataFrame(
-        win_rows, "query_id string, doc_id long, score double"
-    )
+    win = local_frame(spark, BATCH_HITS_SCHEMA, win_rows)
     second = search_many(
         spark,
         store,
@@ -1527,8 +1648,8 @@ def function_score_many(
 
     if boost_mode not in ("multiply", "sum"):
         raise ValueError("boost_mode must be 'multiply' or 'sum'")
-    empty = spark.createDataFrame(
-        [],
+    empty = local_frame(
+        spark,
         "query_id string, doc_id long, score double,"
         " factor double, final double",
     )
@@ -1797,7 +1918,7 @@ def match_doc_ids(
     cfg = store.config()
     pq = parse_query(query, cfg) if isinstance(query, str) else query
     pq = _expand_prefixes(spark, store, pq, cfg)
-    empty = spark.createDataFrame([], "doc_id long")
+    empty = local_frame(spark, "doc_id long")
     if pq is None or not pq.terms:
         return empty
     if pq.phrases:
@@ -1943,7 +2064,7 @@ def search_index(
     pq = parse_query(query, cfg) if isinstance(query, str) else query
     pq = _expand_prefixes(spark, store, pq, cfg)
     if pq is None:  # an AND'd prefix matched nothing in the lexicon
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, HITS_SCHEMA)
     stats = store.stats()
     n_docs, avgdl = stats["n_docs"], stats["avgdl"]
     # field-qualified terms normalize against their own field's avgdl
@@ -1956,13 +2077,13 @@ def search_index(
 
     all_terms = list(dict.fromkeys(pq.terms + pq.not_terms))
     if not pq.terms or n_docs == 0:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, HITS_SCHEMA)
 
     dfmap = store.df_for_terms(spark, all_terms)
     if pq.op == "AND" and pq.tree is None:
         if pq.groups is None:
             if any(t not in dfmap for t in pq.terms):
-                return spark.createDataFrame([], "doc_id long, score double")
+                return local_frame(spark, HITS_SCHEMA)
         else:
             # synonym groups: AND fails only if a whole group is missing
             # (a term credits every group it belongs to)
@@ -1971,7 +2092,7 @@ def search_index(
                 for gid in gs
             }
             if len(present_groups) < pq.n_groups:
-                return spark.createDataFrame([], "doc_id long, score double")
+                return local_frame(spark, HITS_SCHEMA)
     terms = [t for t in pq.terms if t in dfmap]
     term_groups = (
         {t: gs for t, gs in zip(pq.terms, pq.groups) if t in dfmap}
@@ -1980,7 +2101,7 @@ def search_index(
     )
     not_terms = [t for t in pq.not_terms if t in dfmap]
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, HITS_SCHEMA)
     if pq.msm is not None and pq.op == "OR" and pq.tree is None:
         # enough distinct terms/groups must exist at all to reach msm
         n_present = (
@@ -1989,7 +2110,7 @@ def search_index(
             else len(terms)
         )
         if n_present < pq.msm:
-            return spark.createDataFrame([], "doc_id long, score double")
+            return local_frame(spark, HITS_SCHEMA)
     qidf = {t: float(bm25_idf(n_docs, dfmap[t])) for t in terms}
     # caret boosts (J-6 per clause): scale the term's idf weight — the
     # kernel and every scoring mode see the boost through TermPostings.idf
@@ -2008,7 +2129,7 @@ def search_index(
     if pq.phrases and len(phrases) < len(pq.phrases):
         if pq.op == "AND" or pq.tree is not None:
             # a required phrase containing an unindexed term never matches
-            return spark.createDataFrame([], "doc_id long, score double")
+            return local_frame(spark, HITS_SCHEMA)
         # OR: the dead phrase clause just never matches — but its
         # phrase-only member terms must not score as free terms either
         viable_members = {t for ph in phrases for t in ph}
@@ -2019,7 +2140,7 @@ def search_index(
                 qidf.pop(t, None)
             phrase_only -= dead
         if not terms and not phrases:
-            return spark.createDataFrame([], "doc_id long, score double")
+            return local_frame(spark, HITS_SCHEMA)
     if (
         pq.op == "OR"
         and pq.tree is None
@@ -2041,19 +2162,64 @@ def search_index(
             n_free = len([t for t in terms if t not in phrase_only])
         n_clauses = n_free + len(phrases)
         if n_clauses < pq.msm:
-            return spark.createDataFrame([], "doc_id long, score double")
-    postings_df = store.postings(spark)
-    if phrases and "positions" not in postings_df.columns:
-        raise ValueError(
-            "phrase query against an index without positions — rebuild with "
-            "EngineConfig(store_positions=True)"
-        )
+            return local_frame(spark, HITS_SCHEMA)
     fetch_terms = terms + not_terms
     # explicit projection: the positions sidecar column is scanned ONLY
     # when a phrase needs it (column pruning = Lucene's .pos file split)
     cols = ["segment_id", "shard", "term", "postings"] + (
         ["positions"] if phrases else []
     )
+
+    def make_kernel(with_mask: bool):
+        return _make_kernel(
+            qidf,
+            set(not_terms),
+            # each shard holds offset+k hits so the global merge can page
+            # exactly; with an `after` cursor, k (+ ties, kept in-kernel)
+            # is enough; _return_all disables truncation entirely
+            k=(1 << 62) if _return_all else (k if after is not None else offset + k),
+            op=pq.op,
+            mode=mode,
+            k1=cfg.k1,
+            b=cfg.b,
+            avgdl=avgdl,
+            n_required=len(terms),
+            with_mask=with_mask,
+            allow_active=allow_doc_ids is not None,
+            term_groups=term_groups,
+            n_groups=pq.n_groups if term_groups is not None else None,
+            msm=pq.msm,
+            phrases=phrases or None,
+            phrase_slops=phrase_slops or None,
+            term_avgdl=term_avgdl or None,
+            tree=pq.tree,
+            tree_pos_terms=set(terms) if pq.tree is not None else None,
+            phrase_only_terms=phrase_only or None,
+            after_score=float(after[0]) if after is not None else None,
+        )
+
+    # driver route (module docstring): small index, no allow frame
+    local = (
+        _local_inputs(store, fetch_terms, cols, apply_deletes)
+        if allow_doc_ids is None and not _return_all
+        else None
+    )
+    if local is not None:
+        cand_pdf, mask_pdf, dm = local
+        kernel = make_kernel(mask_pdf is not None)
+        top = _rank_local(
+            _run_local(kernel, cand_pdf, mask_pdf), dm, k,
+            offset=offset, after=after,
+        )
+        out = local_frame(spark, HITS_SCHEMA, top)
+        return _hydrate(spark, store, out, hydrate, corpus_df)
+
+    postings_df = store.postings(spark)
+    if phrases and "positions" not in postings_df.columns:
+        raise ValueError(
+            "phrase query against an index without positions — rebuild with "
+            "EngineConfig(store_positions=True)"
+        )
     cand = (
         store.postings(spark)
         .where(F.col("term").isin(fetch_terms))
@@ -2083,32 +2249,7 @@ def search_index(
                 )
             )
 
-    kernel = _make_kernel(
-        qidf,
-        set(not_terms),
-        # each shard holds offset+k hits so the global merge can page
-        # exactly; with an `after` cursor, k (+ ties, kept in-kernel) is
-        # enough; _return_all disables truncation entirely
-        k=(1 << 62) if _return_all else (k if after is not None else offset + k),
-        op=pq.op,
-        mode=mode,
-        k1=cfg.k1,
-        b=cfg.b,
-        avgdl=avgdl,
-        n_required=len(terms),
-        with_mask=bool(masks),
-        allow_active=allow_doc_ids is not None,
-        term_groups=term_groups,
-        n_groups=pq.n_groups if term_groups is not None else None,
-        msm=pq.msm,
-        phrases=phrases or None,
-        phrase_slops=phrase_slops or None,
-        term_avgdl=term_avgdl or None,
-        tree=pq.tree,
-        tree_pos_terms=set(terms) if pq.tree is not None else None,
-        phrase_only_terms=phrase_only or None,
-        after_score=float(after[0]) if after is not None else None,
-    )
+    kernel = make_kernel(bool(masks))
     if masks:
         mask_df = masks[0]
         for m in masks[1:]:
@@ -2173,9 +2314,9 @@ def search_index(
         return _hydrate(spark, store, out, hydrate, corpus_df)
     hit_rows = hits.collect()
     if not hit_rows:
-        out = spark.createDataFrame([], "doc_id long, score double")
+        out = local_frame(spark, HITS_SCHEMA)
     else:
-        hits_df = spark.createDataFrame(hit_rows, schema=hits.schema)
+        hits_df = local_frame(spark, hits.schema, hit_rows)
         by_part: dict[tuple[int, int], list[int]] = {}
         for r in hit_rows:
             by_part.setdefault((r["segment_id"], r["shard"]), []).append(
@@ -2365,7 +2506,7 @@ def search_many(
     n_docs, avgdl = stats["n_docs"], stats["avgdl"]
     avgdl_by_field = stats.get("avgdl_by_field") or {}
     if n_docs == 0 or not queries:
-        return spark.createDataFrame([], "query_id string, doc_id long, score double")
+        return local_frame(spark, BATCH_HITS_SCHEMA)
 
     parsed: dict[str, ParsedQuery] = {}
     f_queries: dict[str, Bm25fQuery] = {}
@@ -2502,24 +2643,8 @@ def search_many(
         f_specs.append((qid, words))
 
     if not specs and not f_specs:
-        return spark.createDataFrame([], "query_id string, doc_id long, score double")
+        return local_frame(spark, BATCH_HITS_SCHEMA)
 
-    postings_df = store.postings(spark)
-    if phrase_terms and "positions" not in postings_df.columns:
-        raise ValueError(
-            "phrase query against an index without positions — rebuild with "
-            "EngineConfig(store_positions=True)"
-        )
-    sel = [F.col(c) for c in ("segment_id", "shard", "term", "postings")]
-    if phrase_terms:
-        # positions sidecar bytes flow to the kernel ONLY for phrase
-        # terms — other terms carry NULL so the shuffle stays postings-sized
-        sel.append(
-            F.when(
-                F.col("term").isin(sorted(phrase_terms)), F.col("positions")
-            ).alias("positions")
-        )
-    cand = postings_df.where(F.col("term").isin(sorted(fetch))).select(*sel)
     k1, b = cfg.k1, cfg.b
 
     # allow-filter bookkeeping: which queries have an allow set in force
@@ -2728,6 +2853,46 @@ def search_many(
             return _EMPTY_BATCH
         return pd.concat(outs, ignore_index=True)
 
+    # driver route (module docstring): small index, no allow frame
+    cols = ["segment_id", "shard", "term", "postings"] + (
+        ["positions"] if phrase_terms else []
+    )
+    local = (
+        _local_inputs(store, sorted(fetch), cols, apply_deletes)
+        if allow_doc_ids is None
+        else None
+    )
+    if local is not None:
+        cand_pdf, mask_pdf, dm = local
+        if phrase_terms:
+            # as on the Spark route: positions only for phrase terms
+            cand_pdf.loc[~cand_pdf["term"].isin(phrase_terms), "positions"] = None
+        kernel = (
+            _score_batch if mask_pdf is not None
+            else (lambda pdf: _score_batch(pdf, None))
+        )
+        top = _rank_local(
+            _run_local(kernel, cand_pdf, mask_pdf), dm, k, by_query=True
+        )
+        return local_frame(spark, BATCH_HITS_SCHEMA, top)
+
+    postings_df = store.postings(spark)
+    if phrase_terms and "positions" not in postings_df.columns:
+        raise ValueError(
+            "phrase query against an index without positions — rebuild with "
+            "EngineConfig(store_positions=True)"
+        )
+    sel = [F.col(c) for c in ("segment_id", "shard", "term", "postings")]
+    if phrase_terms:
+        # positions sidecar bytes flow to the kernel ONLY for phrase
+        # terms — other terms carry NULL so the shuffle stays postings-sized
+        sel.append(
+            F.when(
+                F.col("term").isin(sorted(phrase_terms)), F.col("positions")
+            ).alias("positions")
+        )
+    cand = postings_df.where(F.col("term").isin(sorted(fetch))).select(*sel)
+
     masks = []
     if allow_doc_ids is not None:
         qcol = (
@@ -2845,12 +3010,10 @@ def hybrid_search(
         raise ValueError("norm must be 'none', 'minmax' or 'zscore'")
     hit_rows = search_index(spark, store, query, k=rerank_k).collect()
     if not hit_rows:
-        return spark.createDataFrame(
-            [], "doc_id long, score double, cosine double, blended double"
+        return local_frame(
+            spark, "doc_id long, score double, cosine double, blended double"
         )
-    hits = spark.createDataFrame(
-        hit_rows, "doc_id long, score double"
-    )
+    hits = local_frame(spark, HITS_SCHEMA, hit_rows)
     ids = [r["doc_id"] for r in hit_rows]
     cand = (
         emb.where(F.col("vec_id").isin(ids))
@@ -2936,10 +3099,10 @@ def hybrid_search_rrf(
 
     hit_rows = search_index(spark, store, query, k=rerank_k).collect()
     if not hit_rows:
-        return spark.createDataFrame(
-            [], "doc_id long, lex_rank int, dense_rank int, rrf_e6 long"
+        return local_frame(
+            spark, "doc_id long, lex_rank int, dense_rank int, rrf_e6 long"
         )
-    hits = spark.createDataFrame(hit_rows, "doc_id long, score double")
+    hits = local_frame(spark, HITS_SCHEMA, hit_rows)
     ids = [r["doc_id"] for r in hit_rows]
     cand = emb.where(F.col("vec_id").isin(ids)).select(
         F.col("vec_id").alias("doc_id"), _dvec("embedding").alias("vec")
@@ -3075,11 +3238,6 @@ def dfu_for_terms(
             for f in fields
             for b in missing
         }
-        cand = (
-            store.postings(spark)
-            .where(F.col("term").isin(keys))
-            .select("segment_id", "shard", "term", "postings")
-        )
 
         def union_counts(pdf: pd.DataFrame) -> pd.DataFrame:
             per_base: dict[str, list[np.ndarray]] = {}
@@ -3095,15 +3253,30 @@ def dfu_for_terms(
                 {"base": list(rows), "dfu": list(rows.values())}
             )
 
-        part = cand.groupBy("segment_id", "shard").applyInPandas(
-            union_counts, "base string, dfu long"
-        )
-        got = {
-            r["base"]: int(r["dfu"])
-            for r in part.groupBy("base")
-            .agg(F.sum("dfu").alias("dfu"))
-            .collect()
-        }
+        cols = ["segment_id", "shard", "term", "postings"]
+        local = store.local_view(keys, cols, with_deletes=False)
+        if local is not None:  # driver route: same kernel, no Spark job
+            part = _run_local(union_counts, local[0], None)
+            got = (
+                {}
+                if part is None
+                else part.groupby("base")["dfu"].sum().astype(int).to_dict()
+            )
+        else:
+            cand = (
+                store.postings(spark)
+                .where(F.col("term").isin(keys))
+                .select(*cols)
+            )
+            part = cand.groupBy("segment_id", "shard").applyInPandas(
+                union_counts, "base string, dfu long"
+            )
+            got = {
+                r["base"]: int(r["dfu"])
+                for r in part.groupBy("base")
+                .agg(F.sum("dfu").alias("dfu"))
+                .collect()
+            }
         for b in missing:
             store._dfu_cache[b] = got.get(b, 0)
     return {b: store._dfu_cache[b] for b in bases}
@@ -3144,13 +3317,13 @@ def search_bm25f(
             raise ValueError(f"query word {w!r} analyzed to nothing")
         bases.extend(t for t in toks if t not in bases)
     if not bases or n_docs == 0:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, HITS_SCHEMA)
 
     fields = list(field_weights)
     dfu = dfu_for_terms(spark, store, bases, fields)
     if any(dfu.get(b, 0) == 0 for b in bases):
         # AND semantics: a word absent from every field matches nothing
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, HITS_SCHEMA)
     word_idf = {b: float(bm25_idf(n_docs, dfu[b])) for b in bases}
     key_of = {
         (f, b): (b if f == "content" else f"{f}:{b}")

@@ -312,9 +312,15 @@ def compact(
 
     tmp = root / ".compact"
     shutil.rmtree(tmp, ignore_errors=True)
-    packed.write.mode("overwrite").option(
-        "parquet.bloom.filter.enabled#term", "true"
-    ).parquet(str(tmp / "postings" / "segment_id=0"))
+    # adaptive: size each file's term bloom filter to its distinct terms;
+    # unsized, parquet-mr writes its 1 MB maximum into every file, ~10x a
+    # small compacted index (which then misses the driver read route)
+    (
+        packed.write.mode("overwrite")
+        .option("parquet.bloom.filter.enabled#term", "true")
+        .option("parquet.bloom.filter.adaptive.enabled", "true")
+        .parquet(str(tmp / "postings" / "segment_id=0"))
+    )
 
     new_docmap = new_assign.select(
         F.col("nshard").alias("shard"),

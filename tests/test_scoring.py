@@ -366,3 +366,32 @@ def test_hybrid_search_blend(spark):
         atol=1e-12,
     )
     assert (mid["cosine"].abs() <= 1.0 + 1e-9).all()
+
+
+@pytest.mark.parametrize("seed", [0, 1])
+@pytest.mark.parametrize("op", ["OR", "AND"])
+@pytest.mark.parametrize("boost_mode", ["multiply", "sum"])
+def test_factored_selection_maps_back_to_its_bm25_and_factor(seed, op, boost_mode):
+    """score_group_factored returns, per selected docno, the bm25 and the
+    factor of THAT doc: the selection is mapped back by argsort +
+    searchsorted over the unique candidate docnos."""
+    from fastcatsearch3_spark.plans.scoring import score_group_factored
+
+    rng = np.random.default_rng(seed)
+    n_docs = 2000
+    mat, dls = make_corpus(rng, n_docs=n_docs, n_terms=2 if op == "AND" else 4)
+    tps = build_tps(mat, dls, n_docs)
+    avgdl = float(dls.mean())
+    factors = rng.uniform(0.5, 3.0, size=n_docs)
+    sel, bm25, fac, finals = score_group_factored(
+        tps, k=25, op=op, k1=K1, b=B, avgdl=avgdl, factors=factors,
+        boost_mode=boost_mode,
+    )
+    cand, scores = brute_force(mat, dls, range(len(tps)), avgdl, n_docs, op=op)
+    assert sel.size == min(25, cand.size) > 0
+    ref = dict(zip(cand.tolist(), scores.tolist()))
+    dn = sel.astype(np.int64)
+    np.testing.assert_allclose(bm25, [ref[d] for d in dn.tolist()], rtol=1e-12)
+    np.testing.assert_array_equal(fac, factors[dn])
+    combined = bm25 * fac if boost_mode == "multiply" else bm25 + fac
+    np.testing.assert_allclose(finals, combined, rtol=1e-12)
