@@ -169,6 +169,17 @@ def synonym_map(entries: tuple[str, ...]) -> dict[str, tuple[str, ...]]:
     return {w: tuple(sorted(v)) for w, v in m.items() if v}
 
 
+def _post_filter(cfg: EngineConfig):
+    """The registry analyzer's own post-filter (F-5) as a token
+    predicate: stopwords, plus the min/max length bounds on every chain
+    but ``whitespace`` (which applies none)."""
+    sw = frozenset(cfg.stopwords)
+    lo, hi = cfg.min_token_len, cfg.max_token_len
+    if cfg.analyzer == "whitespace" or not (sw or lo > 1 or hi):
+        return lambda t: t not in sw
+    return lambda t: lo <= len(t) <= hi and t not in sw
+
+
 def get_analyzer(cfg: EngineConfig):
     """INDEX-side analysis chain: the registry analyzer composed with the
     index-time synonym dictionary (F-6 at analysis time — the reference
@@ -180,11 +191,17 @@ def get_analyzer(cfg: EngineConfig):
     occurrence of a group member emits the other members once). The
     query side deliberately does NOT run this composition — a query term
     hits the group directly because the index already carries every
-    member wherever any member occurred."""
+    member wherever any member occurred. Appended members pass the base
+    chain's post-filter too: a stopword or out-of-range member could
+    never be queried, so it is not indexed."""
     fn = ANALYZERS[cfg.analyzer]
     if not cfg.index_synonyms:
         return fn
-    m = synonym_map(tuple(cfg.index_synonyms))
+    keep = _post_filter(cfg)
+    m = {
+        w: tuple(x for x in syns if keep(x))
+        for w, syns in synonym_map(tuple(cfg.index_synonyms)).items()
+    }
 
     def with_synonyms(s: pd.Series, c: EngineConfig) -> pd.Series:
         toks = fn(s, c)

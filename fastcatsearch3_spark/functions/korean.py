@@ -37,7 +37,7 @@ decompounding token filters):
     (an ``lru_cache``) while the scan itself stays in pandas' C regex
     paths.
 
-Determinism: segmentation depends only on (run, dictionary version) —
+Determinism: segmentation depends only on (run, dictionary contents) —
 no frequency model, no randomness — so the DuckDB oracle can replicate
 it by construction and index/query sides can never drift.
 
@@ -53,6 +53,7 @@ survey mandates.
 
 from __future__ import annotations
 
+import hashlib
 import re
 from functools import lru_cache
 
@@ -152,12 +153,14 @@ _TOKEN = re.compile(
 class KoreanDictionary:
     """Immutable lookup structures for the segmenter.
 
-    ``version`` keys the per-eojeol memo cache AND (via the config, see
-    module docstring) the build-manifest reindex guard.
+    ``digest`` (a hash of the words, compounds and josa) keys the
+    per-eojeol memo cache, so two dictionaries segment alike only when
+    their contents match; ``version`` rides the config into the
+    build-manifest reindex guard (see module docstring).
     """
 
     __slots__ = ("words", "compounds", "josa", "max_word_len",
-                 "max_josa_len", "version")
+                 "max_josa_len", "version", "digest")
 
     def __init__(
         self,
@@ -187,6 +190,13 @@ class KoreanDictionary:
         if user_dict:
             version = f"{version}+user:{','.join(sorted(user_dict))}"
         self.version = version
+        self.digest = hashlib.sha256(
+            repr((
+                sorted(self.words),
+                sorted(self.compounds.items()),
+                sorted(self.josa),
+            )).encode()
+        ).hexdigest()
 
 
 _DEFAULT_DICT = KoreanDictionary()
@@ -242,22 +252,22 @@ def _segment_uncached(run: str, dic: KoreanDictionary) -> tuple[str, ...]:
 
 
 @lru_cache(maxsize=65536)
-def _segment_cached(run: str, version: str) -> tuple[str, ...]:
-    # version -> dictionary indirection keeps the memo key tiny; the
-    # registry below only ever passes dictionaries it created
-    return _segment_uncached(run, _DICTS_BY_VERSION[version])
+def _segment_cached(run: str, digest: str) -> tuple[str, ...]:
+    # digest -> dictionary indirection keeps the memo key small; the
+    # registry below only ever passes dictionaries it has seen
+    return _segment_uncached(run, _DICTS_BY_DIGEST[digest])
 
 
-_DICTS_BY_VERSION: dict[str, KoreanDictionary] = {
-    _DEFAULT_DICT.version: _DEFAULT_DICT
+_DICTS_BY_DIGEST: dict[str, KoreanDictionary] = {
+    _DEFAULT_DICT.digest: _DEFAULT_DICT
 }
 
 
 def segment_eojeol(run: str, dic: KoreanDictionary | None = None) -> list[str]:
     """Segment one Hangul run into morpheme tokens (public test surface)."""
     dic = dic or _DEFAULT_DICT
-    _DICTS_BY_VERSION.setdefault(dic.version, dic)
-    return list(_segment_cached(run, dic.version))
+    _DICTS_BY_DIGEST.setdefault(dic.digest, dic)
+    return list(_segment_cached(run, dic.digest))
 
 
 def korean_tokenize_series(
@@ -274,8 +284,8 @@ def korean_tokenize_series(
     C paths exactly like the standard chain; only Hangul runs detour
     through the memoized segmenter."""
     dic = dic or _DEFAULT_DICT
-    _DICTS_BY_VERSION.setdefault(dic.version, dic)
-    version = dic.version
+    _DICTS_BY_DIGEST.setdefault(dic.digest, dic)
+    digest = dic.digest
     s = s.fillna("").astype(str)
     s = s.str.replace(_CAMEL1, " ", regex=True).str.replace(
         _CAMEL2, " ", regex=True
@@ -287,7 +297,7 @@ def korean_tokenize_series(
         toks: list[str] = []
         for han, big, iso, asc in lst:
             if han:
-                toks.extend(_segment_cached(han, version))
+                toks.extend(_segment_cached(han, digest))
             else:
                 toks.append(big or iso or asc)
         if stopwords or min_len > 1 or max_len:

@@ -24,11 +24,18 @@ from pyspark.sql import DataFrame, SparkSession
 
 from fastcatsearch3_spark.config import EngineConfig
 
-# Driver-route cap: an index whose postings plus docmap files hold fewer
-# bytes than this serves search_index / search_many on the driver
-# (pyarrow reads + the shard kernels in-process, no Spark job); larger
-# indexes keep the Spark plan. See CHANGES.md for the measurement.
+# Driver-route caps (see CHANGES.md for the measurements behind each).
+# An index whose postings plus docmap files hold fewer bytes than
+# LOCAL_MAX_BYTES serves search_index / search_many on the driver
+# (pyarrow reads + the shard kernels in-process, no Spark job), and its
+# appends and deletes of at most LOCAL_MAX_ROWS batch rows run on the
+# driver too (one bounded Spark job collects the batch). Compaction runs
+# on the driver below LOCAL_COMPACT_MAX_BYTES: its decode and re-pack
+# cost grows with the whole index on one core, so it crosses over to
+# the Spark plan earlier. Larger indexes and batches keep the Spark plans.
 LOCAL_MAX_BYTES = 16 << 20
+LOCAL_MAX_ROWS = 5_000
+LOCAL_COMPACT_MAX_BYTES = 6 << 20
 
 
 def recover_interrupted_compact(root: str | Path) -> bool:
@@ -165,6 +172,41 @@ class IndexStore:
                 )
         return total
 
+    def local_batch(self, df: DataFrame):
+        """A small append or delete batch as a pandas frame, or None when
+        the write keeps its Spark plan: the index holds
+        ``LOCAL_MAX_BYTES`` or more, the batch holds more than
+        ``LOCAL_MAX_ROWS`` rows or none, or the collect fails.
+
+        ONE bounded Spark job: an Arrow collect of ``limit(cap + 1)``
+        (``toPandas``/``collect`` of a limit scan partitions in up to
+        three scale-up jobs). Catalyst's size estimate cannot stand in
+        for the row count: it is ``Long.MaxValue`` for a frame made from
+        local pandas rows."""
+        if LOCAL_MAX_ROWS <= 0 or self._disk_bytes() >= LOCAL_MAX_BYTES:
+            return None
+        try:
+            pdf = df.limit(LOCAL_MAX_ROWS + 1).toArrow().to_pandas()
+        except Exception:  # noqa: BLE001 — any collect failure → Spark path
+            return None
+        return pdf if 0 < len(pdf) <= LOCAL_MAX_ROWS else None
+
+    def compacts_local(self) -> bool:
+        """True when ``compact`` runs on the driver (index under
+        ``LOCAL_COMPACT_MAX_BYTES``)."""
+        return self._disk_bytes() < LOCAL_COMPACT_MAX_BYTES
+
+    def local_table(self, sub: str, columns: list[str] | None = None):
+        """``<root>/<sub>`` read with pyarrow as a pandas frame (hive
+        partitioning: ``segment_id`` comes from the directory names)."""
+        import pyarrow.dataset as pds
+
+        return (
+            pds.dataset(self._p(sub), format="parquet", partitioning="hive")
+            .to_table(columns=columns)
+            .to_pandas()
+        )
+
     def local_view(
         self, terms: list[str], columns: list[str], with_deletes: bool
     ):
@@ -187,12 +229,8 @@ class IndexStore:
                 st["postings"] = pds.dataset(
                     self._p("postings"), format="parquet", partitioning="hive"
                 )
-                st["docmap"] = (
-                    pds.dataset(
-                        self._p("docmap"), format="parquet", partitioning="hive"
-                    )
-                    .to_table(columns=["segment_id", "shard", "docno", "doc_id"])
-                    .to_pandas()
+                st["docmap"] = self.local_table(
+                    "docmap", ["segment_id", "shard", "docno", "doc_id"]
                 )
             if with_deletes and "denied" not in st:
                 st["denied"] = self._denied_local(st["docmap"])
@@ -210,15 +248,9 @@ class IndexStore:
         deletes under ``denied_mask``'s predicate (``dm.doc_id =
         dl.doc_id AND dm.segment_id < dl.segment_id``). Empty when
         nothing is deleted."""
-        import pyarrow.dataset as pds
-
         dl = dm.iloc[:0][["doc_id", "segment_id"]]
         if self.has_deletes():
-            dl = (
-                pds.dataset(self._p("deletes"), format="parquet")
-                .to_table(columns=["doc_id", "segment_id"])
-                .to_pandas()
-            )
+            dl = self.local_table("deletes", ["doc_id", "segment_id"])
         j = dm.merge(dl, on="doc_id", suffixes=("", "_dl"))
         return (
             j.loc[j["segment_id"] < j["segment_id_dl"],

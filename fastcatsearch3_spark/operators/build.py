@@ -793,6 +793,147 @@ def build_segment(
 
 
 # ---------------------------------------------------------------------------
+# Driver route: the same kernels in-process, files written with pyarrow
+# (small appends and compactions — streaming/incremental.py)
+# ---------------------------------------------------------------------------
+
+_ARROW_TYPES = {"int": "int32", "bigint": "int64", "string": "string", "binary": "binary"}
+
+
+def write_parquet_local(
+    pdf: pd.DataFrame, struct, out_dir: Path, partitioned: bool = True
+) -> None:
+    """Write ``pdf`` as one snappy parquet file in ``out_dir`` with the
+    pinned types of ``struct`` (a ``schemas`` StructType). In a
+    ``partitioned`` write, ``segment_id`` is carried by the directory
+    name, as in Spark's partitioned writes, not by a column. The file is
+    written under a hidden name and then renamed, so a reader never sees
+    it half-written."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = pa.schema(
+        [
+            pa.field(f.name, _ARROW_TYPES[f.dataType.simpleString()])
+            for f in struct.fields
+            if not (partitioned and f.name == "segment_id")
+        ]
+    )
+    tbl = pa.Table.from_pandas(
+        pdf[schema.names], schema=schema, preserve_index=False
+    ).replace_schema_metadata(None)
+    out_dir.mkdir(parents=True, exist_ok=True)
+    name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+    tmp = out_dir / f".{name}.tmp"
+    pq.write_table(tbl, tmp, compression="snappy")
+    tmp.rename(out_dir / name)
+
+
+def build_segment_local(
+    batch: pd.DataFrame,
+    index_root: str,
+    cfg: EngineConfig,
+    segment_id: int,
+    lineage: dict | None = None,
+) -> dict:
+    """``build_segment`` on the driver for a small deduplicated batch
+    already collected as pandas (CORPUS columns plus ``shard`` and
+    ``pk_hash``): the same content_sha256 gate, stage kernel (dl),
+    tokenize kernel per indexed field and pack kernel, run once each.
+    Docnos are dense per shard from 0 in doc_id order. Both directories
+    are written under a hidden staging directory and renamed into place,
+    docmap first, then the manifest is written. Returns the manifest."""
+    import hashlib
+    import shutil
+    from functools import reduce
+    from operator import xor
+
+    root = Path(index_root)
+    t0 = time.monotonic()
+    for doc_id, content, sha in zip(
+        batch["doc_id"], batch["content"], batch["content_sha256"]
+    ):
+        if content is None or hashlib.sha256(content.encode()).hexdigest() != sha:
+            raise ValueError(
+                f"segment {segment_id}: content_sha256 invariant violated "
+                f"(content_sha256 invariant violated for doc_id={doc_id})"
+            )
+    extra_fields = [f for f in cfg.indexed_fields if f != "content"]
+    src = (
+        batch.sort_values(["shard", "doc_id"], kind="stable")
+        .reset_index(drop=True)
+        .assign(pid=0)
+    )
+    offsets = {(0, int(s)): 0 for s in src["shard"].unique()}
+    stage = make_stage_stream(cfg, offsets, extra_fields)
+    staged = next(stage(iter([src])))
+    t_stage = time.monotonic()
+
+    tmp = root / f".local-segment_id={segment_id}"
+    shutil.rmtree(tmp, ignore_errors=True)
+    docmap = staged[["shard", "docno", "doc_id", "pk_hash", "dl", "content_sha256"]]
+    write_parquet_local(docmap, schemas.DOCMAP, tmp / "docmap")
+    t_docmap = time.monotonic()
+
+    tf_rows = [
+        rows
+        for field in ["content", *extra_fields]
+        for rows in make_tokenize_combine_stream(
+            cfg, "" if field == "content" else f"{field}:"
+        )(iter([staged[["shard", "docno"]].assign(content=staged[field])]))
+    ]
+    packed = (
+        _pack_frame(
+            pd.concat(tf_rows, ignore_index=True), cfg.block_size, combine=False
+        )
+        if tf_rows
+        else _PACK_EMPTY
+    )
+    if cfg.store_positions and "positions" not in packed.columns:
+        packed = packed.assign(positions=pd.Series([], dtype=object))
+    write_parquet_local(
+        packed,
+        schemas.POSTINGS_POS if cfg.store_positions else schemas.POSTINGS,
+        tmp / "postings",
+    )
+    for sub in ("docmap", "postings"):
+        dest = root / sub / f"segment_id={segment_id}"
+        shutil.rmtree(dest, ignore_errors=True)
+        dest.parent.mkdir(parents=True, exist_ok=True)
+        (tmp / sub).rename(dest)
+    shutil.rmtree(tmp, ignore_errors=True)
+
+    n_docs = len(docmap)
+    elapsed = time.monotonic() - t0
+    manifest = {
+        "segment_id": segment_id,
+        "status": "complete",
+        "n_docs": n_docs,
+        "total_tokens": int(docmap["dl"].sum()),
+        # build_segment's bit_xor(conv(substr(sha, 1, 15), 16, 10))
+        "sha_xor15": reduce(
+            xor, (int(h[:15], 16) for h in docmap["content_sha256"]), 0
+        ),
+        "config": cfg.to_dict(),
+        "lineage": lineage or {},
+        "metrics": {
+            "elapsed_sec": round(elapsed, 3),
+            "docs_per_sec": round(n_docs / elapsed, 1) if elapsed > 0 else None,
+            "phases": {
+                "stage_sec": round(t_stage - t0, 3),
+                "docmap_sec": round(t_docmap - t_stage, 3),
+                "postings_sec": round(elapsed - (t_docmap - t0), 3),
+            },
+            "staged_checkpoint": False,
+        },
+    }
+    write_manifest(index_root, segment_id, manifest)
+    return manifest
+
+
+# ---------------------------------------------------------------------------
 # Manifest I/O (I-8)
 # ---------------------------------------------------------------------------
 
@@ -923,6 +1064,40 @@ def publish_lexicon(
     # corpus stats: summed from per-segment manifests (already audited at
     # write time via Observation) — no docmap re-scan job; fall back to a
     # docmap scan only if a manifest predates the total_tokens field
+    def docmap_totals():
+        docmap = spark.read.parquet(str(root / "docmap"))
+        r = docmap.agg(
+            F.count("*").alias("n_docs"), F.sum("dl").alias("total_tokens")
+        ).collect()[0]
+        return r["n_docs"], r["total_tokens"]
+
+    # per-field avgdl (multi-index collections): Σcf of a field's terms is
+    # exactly that field's total token count — one tiny agg over the
+    # already-aggregated lexicon rows, no extra corpus pass
+    def field_tokens():
+        fld = F.when(
+            F.col("term").contains(":"), F.split("term", ":", 2)[0]
+        ).otherwise(F.lit("content"))
+        return {
+            r["field"]: r["toks"]
+            for r in postings.groupBy(fld.alias("field"))
+            .agg(F.sum("cf").alias("toks"))
+            .collect()
+        }
+
+    _publish_stats(index_root, cfg, n_segments, docmap_totals, field_tokens)
+
+
+def _publish_stats(
+    index_root: str, cfg: EngineConfig, n_segments: int, docmap_totals,
+    field_tokens,
+) -> None:
+    """Write ``stats.json`` (tmp + rename). n_docs and total_tokens are
+    summed from the segment manifests; ``docmap_totals()`` → (n_docs,
+    total_tokens) is called only when a manifest predates those fields,
+    and ``field_tokens()`` → {field: token count} only for a
+    multi-field config."""
+    root = Path(index_root)
     seg_ids = sorted(
         int(p.stem.split("-", 1)[1])
         for p in (root / "manifest").glob("segment-*.json")
@@ -933,31 +1108,19 @@ def publish_lexicon(
     ):
         n_docs = sum(m["n_docs"] for m in manifests)
         total_tokens = sum(m["total_tokens"] for m in manifests)
-        row = {"n_docs": n_docs, "total_tokens": total_tokens}
     else:
-        docmap = spark.read.parquet(str(root / "docmap"))
-        row = docmap.agg(
-            F.count("*").alias("n_docs"), F.sum("dl").alias("total_tokens")
-        ).collect()[0]
-    n_docs = int(row["n_docs"]) or 0
-    # per-field avgdl (multi-index collections): Σcf of a field's terms is
-    # exactly that field's total token count — one tiny agg over the
-    # already-aggregated lexicon rows, no extra corpus pass
+        n_docs, total_tokens = docmap_totals()
+    n_docs = int(n_docs or 0)
+    total_tokens = int(total_tokens or 0)
     avgdl_by_field = {}
     if n_docs and len(cfg.indexed_fields) > 1:
-        fld = F.when(
-            F.col("term").contains(":"), F.split("term", ":", 2)[0]
-        ).otherwise(F.lit("content"))
-        for r in (
-            postings.groupBy(fld.alias("field"))
-            .agg(F.sum("cf").alias("toks"))
-            .collect()
-        ):
-            avgdl_by_field[r["field"]] = (r["toks"] or 0) / n_docs
+        avgdl_by_field = {
+            f: (toks or 0) / n_docs for f, toks in field_tokens().items()
+        }
     stats = {
         "n_docs": n_docs,
-        "total_tokens": int(row["total_tokens"] or 0),
-        "avgdl": (row["total_tokens"] or 0) / n_docs if n_docs else 0.0,
+        "total_tokens": total_tokens,
+        "avgdl": total_tokens / n_docs if n_docs else 0.0,
         "avgdl_by_field": avgdl_by_field,
         "n_segments": n_segments,
         "config": cfg.to_dict(),
@@ -966,6 +1129,53 @@ def publish_lexicon(
     tmp = sp.with_suffix(".json.tmp")
     tmp.write_text(json.dumps(stats, indent=2, sort_keys=True))
     tmp.rename(sp)
+
+
+def publish_lexicon_local(
+    index_root: str, cfg: EngineConfig, n_segments: int
+) -> None:
+    """``publish_lexicon`` on the driver for a small index, with no Spark
+    job: pyarrow reads every postings row's (term, df, cf), pandas sums
+    them per term, and the lexicon is written as ONE term-sorted file in
+    a hidden directory that is then swapped in for ``lexicon/``. The
+    per-field token counts for ``stats.json`` come from the same
+    frame."""
+    import shutil
+    import uuid
+
+    import pyarrow.dataset as pds
+
+    root = Path(index_root)
+    post = (
+        pds.dataset(str(root / "postings"), format="parquet", partitioning="hive")
+        .to_table(columns=["term", "df", "cf"])
+        .to_pandas()
+    )
+    lex = post.groupby("term", sort=True)[["df", "cf"]].sum().reset_index()
+    tag = uuid.uuid4().hex
+    tmp, old = root / f".lexicon-{tag}", root / f".lexicon-old-{tag}"
+    write_parquet_local(lex, schemas.LEXICON, tmp)
+    if (root / "lexicon").exists():
+        (root / "lexicon").rename(old)
+    tmp.rename(root / "lexicon")
+    shutil.rmtree(old, ignore_errors=True)
+
+    def docmap_totals():
+        dl = (
+            pds.dataset(str(root / "docmap"), format="parquet", partitioning="hive")
+            .to_table(columns=["dl"])
+            .column("dl")
+        )
+        return len(dl), int(dl.to_numpy().sum())
+
+    def field_tokens():
+        term = post["term"]
+        field = term.str.split(":", n=1).str[0].where(
+            term.str.contains(":", regex=False), "content"
+        )
+        return {f: int(t) for f, t in post["cf"].groupby(field).sum().items()}
+
+    _publish_stats(index_root, cfg, n_segments, docmap_totals, field_tokens)
 
 
 def read_stats(index_root: str) -> dict:

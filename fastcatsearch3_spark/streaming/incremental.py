@@ -6,33 +6,69 @@ over older segments (server:org.fastcatsearch.job.indexing.
 IncrementIndexingJob, core:ir.index.DeleteIdSet [K]); a periodic optimize
 job merges segments back into one (ST-4).
 
-Spark design:
+Operations:
   * append_segment — one micro-batch → one new segment. Within-batch upsert
-    is a window dedup (W-2: latest commit per pk wins); cross-segment upsert
-    is a tombstone row (doc_id, segment_id=N) masking copies in segments <N.
+    is a dedup (W-2: latest commit per pk wins); cross-segment upsert is a
+    tombstone row (doc_id, segment_id=N) masking copies in segments <N.
     No index files are rewritten — segments are immutable, exactly the
     reference's model and the only model that scales to 100 TB appends.
   * delete_by_pk — tombstones without new docs (ST-2 delete payload).
   * run_incremental_stream — Structured Streaming over a parquet directory,
     Trigger.AvailableNow, foreachBatch(append_segment): restart-safe via the
     stream checkpoint + the build manifests (I-8).
+  * compact — ST-4: decode all live postings (vectorized VByte), drop
+    superseded/tombstoned docs, reassign dense docnos (rank by doc_id
+    within the shard), re-pack into a single fresh segment, swap
+    atomically. Its cost scales with live index size, not with
+    accumulated garbage.
+
+Routing: each write picks one of two executors by a fixed rule (the caps
+are constants in ``index``; there is no option). Both run the same
+kernels and write the same file format, so they leave identical answers,
+lexicon and stats (tests/test_write_route.py).
+  * Driver route — an append or delete whose index holds fewer than
+    ``index.LOCAL_MAX_BYTES`` of postings plus docmap, and whose batch
+    holds at most ``index.LOCAL_MAX_ROWS`` rows. ONE bounded Spark job
+    collects the batch (the normalized corpus plus its shard and pk_hash
+    projections, or the keys' pk_hash) as Arrow; a larger batch is
+    dropped and the Spark plan runs. On the driver an append then runs
+    a pandas dedup with dedup_latest's order, the content_sha256 gate,
+    the stage kernel (``make_stage_stream``: dl, dense per-shard docnos
+    from 0 in doc_id order), the tokenize kernel once per indexed field
+    (``make_tokenize_combine_stream``) and the pack kernel
+    (``_pack_frame``); tombstones are the older segments' pyarrow docmap
+    rows with the batch's pk_hash; the lexicon and stats.json come from
+    ``publish_lexicon_local``. A compaction under
+    ``index.LOCAL_COMPACT_MAX_BYTES`` runs on the driver with no Spark
+    job: live docmap = pyarrow docmap minus ``_denied_local``'s denied
+    set, then per shard ``_decode_iter``, the remap merge and
+    ``_pack_frame``. No thread or process pool is started.
+  * Spark route — every other write: the distributed plans (window
+    dedup, ``build_segment``, mapInPandas decode + shuffle re-pack,
+    ``publish_lexicon``).
+
+Publication protocol (both routes): a new segment's docmap and postings
+are published before its manifest, and the manifest before any
+tombstone, so a crash mid-append leaves the old copies live (a retry's
+tombstones resolve the duplicates). On the driver route every file is
+written under a hidden name (or inside a hidden directory) and renamed
+into place; a segment directory is renamed in whole, and the lexicon is
+written to a hidden directory that is swapped in for ``lexicon/``.
+Compaction writes under ``.compact/`` and swaps it in crash-safely
+(``_swap_compacted``; ``index.recover_interrupted_compact`` rolls an
+interrupted swap back), then drops the stale per-epoch ``.denied``
+masks.
+
 Stats semantics (documented contract): like Lucene segment readers and the
 reference's live-segment search, df/cf/avgdl/n_docs keep counting superseded
 and tombstoned docs until ``compact`` runs — masked docs can never be HITS,
 but they still weigh on the collection statistics, because their content is
 gone and their term contributions cannot be subtracted cheaply at append
 time. ``compact`` purges them, restoring exact live-corpus statistics.
-
-  * compact — ST-4: decode all live postings (vectorized VByte), drop
-    superseded/tombstoned docs, reassign dense docnos, re-pack into a single
-    fresh segment, swap atomically. The decode→shuffle→re-pack is the same
-    dataflow as the original build, so its cost scales with live index size,
-    not with accumulated garbage.
 """
 
 from __future__ import annotations
 
-import json
 import shutil
 import time
 from pathlib import Path
@@ -50,10 +86,17 @@ from fastcatsearch3_spark.functions.vbyte import decode_postings
 from fastcatsearch3_spark.index import IndexStore
 from fastcatsearch3_spark.operators.build import (
     PACK_SCHEMA,
+    PACK_SCHEMA_POS,
+    _PACK_EMPTY,
+    _pack_frame,
     build_segment,
+    build_segment_local,
     make_pack_stream,
     publish_lexicon,
+    publish_lexicon_local,
+    read_manifest,
     write_manifest,
+    write_parquet_local,
 )
 from fastcatsearch3_spark.operators.ingest import normalize_corpus
 
@@ -72,6 +115,27 @@ def dedup_latest(corpus: DataFrame) -> DataFrame:
         corpus.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn")
+    )
+
+
+def _dedup_latest_local(batch: pd.DataFrame) -> pd.DataFrame:
+    """``dedup_latest`` in pandas, same survivor: one row per pk_hash,
+    commit descending with nulls last, then doc_id descending."""
+    return batch.sort_values(
+        ["pk_hash", "commit", "doc_id"],
+        ascending=[True, False, False],
+        na_position="last",
+        kind="stable",
+    ).drop_duplicates("pk_hash", keep="first")
+
+
+def _with_keys(corpus: DataFrame, num_shards: int) -> DataFrame:
+    """Normalized corpus plus the narrow ``shard`` and ``pk_hash``
+    projections build_segment derives (no shuffle)."""
+    return corpus.select(
+        "*",
+        F.pmod(F.xxhash64("doc_id"), F.lit(num_shards)).cast("int").alias("shard"),
+        F.xxhash64("repo", "path").alias("pk_hash"),
     )
 
 
@@ -101,6 +165,17 @@ def _append_deletes(spark: SparkSession, index_root: str, rows: DataFrame) -> in
     return int(n)
 
 
+def _append_deletes_local(index_root: str, rows: pd.DataFrame) -> int:
+    """``_append_deletes`` on the driver: one new part file in
+    ``deletes/`` (hidden name, then renamed), none when ``rows`` is
+    empty."""
+    if len(rows):
+        write_parquet_local(
+            rows, schemas.DELETES, Path(index_root) / "deletes", partitioned=False
+        )
+    return len(rows)
+
+
 # ---------------------------------------------------------------------------
 # ST-1 / ST-2: append one micro-batch as a new segment (+ tombstones)
 # ---------------------------------------------------------------------------
@@ -119,7 +194,11 @@ def append_segment(
     segs = store.segments()
     next_id = (max(segs) + 1) if segs else 0
 
-    batch = dedup_latest(normalize_corpus(new_docs))
+    corpus = normalize_corpus(new_docs)
+    small = store.local_batch(_with_keys(corpus, cfg.num_shards))
+    if small is not None:
+        return _append_local(store, small, cfg, next_id)
+    batch = dedup_latest(corpus)
 
     # Crash-safety ordering (ADVICE r01): the replacement segment is built
     # and its manifest PUBLISHED before any tombstone is written. A crash
@@ -155,6 +234,29 @@ def append_segment(
     return manifest
 
 
+def _append_local(
+    store: IndexStore, batch: pd.DataFrame, cfg: EngineConfig, next_id: int
+) -> dict:
+    """append_segment's driver route, in the same publication order:
+    the segment and its manifest first, then the tombstones, then the
+    lexicon and stats."""
+    batch = _dedup_latest_local(batch)
+    manifest = build_segment_local(
+        batch, store.root, cfg, segment_id=next_id,
+        lineage={"kind": "incremental"},
+    )
+    if next_id:  # older segments exist
+        dm = store.local_table("docmap", ["segment_id", "doc_id", "pk_hash"])
+        old = dm.loc[
+            (dm["segment_id"] < next_id) & dm["pk_hash"].isin(batch["pk_hash"]),
+            ["doc_id"],
+        ].drop_duplicates().assign(segment_id=next_id)
+        manifest["lineage"]["tombstones"] = _append_deletes_local(store.root, old)
+        write_manifest(store.root, next_id, manifest)
+    publish_lexicon_local(store.root, cfg, n_segments=next_id + 1)
+    return manifest
+
+
 def delete_by_pk(
     spark: SparkSession, index_root: str, keys: DataFrame
 ) -> int:
@@ -165,6 +267,15 @@ def delete_by_pk(
     if not segs:
         return 0
     epoch = max(segs) + 1  # masks every existing segment
+    small = store.local_batch(
+        keys.select(F.xxhash64("repo", "path").alias("pk_hash"))
+    )
+    if small is not None:
+        dm = store.local_table("docmap", ["doc_id", "pk_hash"])
+        old = dm.loc[dm["pk_hash"].isin(small["pk_hash"]), ["doc_id"]]
+        return _append_deletes_local(
+            index_root, old.drop_duplicates().assign(segment_id=epoch)
+        )
     pks = keys.select(F.xxhash64("repo", "path").alias("pk_hash")).distinct()
     old = (
         store.docmap(spark)
@@ -269,15 +380,47 @@ def compact(
     """Rewrite all live segments as a single fresh segment 0.
 
     Dataflow: live docmap → new dense (shard, docno) assignment; packed
-    postings → mapInPandas VByte decode → inner join with the remap (the
-    join IS the tombstone purge — dead docnos have no remap row) →
-    groupBy(shard, bucket) re-pack. Then swap directories + manifests."""
+    postings → VByte decode → inner join with the remap (the join IS the
+    tombstone purge — dead docnos have no remap row) → re-pack per
+    (shard, term), written under ``.compact/``. Then swap directories +
+    manifests. Small indexes run it on the driver (``_compact_local``),
+    others as Spark jobs (``_compact_spark``)."""
     store = IndexStore(index_root)
     cfg = cfg or store.config()
     root = Path(index_root)
     t0 = time.monotonic()
     old_segments = store.segments()
 
+    totals = _compact_local(store, cfg) if store.compacts_local() else None
+    local = totals is not None
+    if not local:
+        totals = _compact_spark(spark, store, cfg)
+    n_docs, total_tokens = totals
+    _swap_compacted(root)
+
+    elapsed = time.monotonic() - t0
+    manifest = {
+        "segment_id": 0,
+        "status": "complete",
+        "n_docs": int(n_docs),
+        "total_tokens": int(total_tokens or 0),
+        "config": cfg.to_dict(),
+        "lineage": {"kind": "compaction", "compacted_from": old_segments},
+        "metrics": {"elapsed_sec": round(elapsed, 3)},
+    }
+    write_manifest(index_root, 0, manifest)
+    if local:
+        publish_lexicon_local(index_root, cfg, n_segments=1)
+    else:
+        publish_lexicon(spark, index_root, cfg, n_segments=1)
+    return manifest
+
+
+def _compact_spark(
+    spark: SparkSession, store: IndexStore, cfg: EngineConfig
+) -> tuple[int, int]:
+    """Compaction's Spark plan: writes the new segment under
+    ``.compact/``; returns (n_docs, total_tokens)."""
     dm_live = live_docmap(spark, store)
     new_assign = dm_live.withColumn(
         "nshard", F.pmod(F.xxhash64("doc_id"), F.lit(cfg.num_shards)).cast("int")
@@ -303,14 +446,13 @@ def compact(
         *(["pos"] if with_pos else []),
     )
     npart = 2 * max(spark.sparkContext.defaultParallelism, cfg.num_shards)
-    from fastcatsearch3_spark.operators.build import PACK_SCHEMA_POS
 
     packed = tf_rows.repartition(npart, "shard", "term").mapInPandas(
         make_pack_stream(cfg.block_size, combine=False),
         PACK_SCHEMA_POS if with_pos else PACK_SCHEMA,
     )
 
-    tmp = root / ".compact"
+    tmp = Path(store.root) / ".compact"
     shutil.rmtree(tmp, ignore_errors=True)
     # adaptive: size each file's term bloom filter to its distinct terms;
     # unsized, parquet-mr writes its 1 MB maximum into every file, ~10x a
@@ -341,14 +483,62 @@ def compact(
         .agg(F.count("*").alias("n"), F.sum("dl").alias("toks"))
         .collect()[0]
     )
-    n_docs = stats_row["n"]
+    return stats_row["n"], stats_row["toks"]
 
-    # Crash-safe swap (ADVICE r01): the live directories are renamed ASIDE
-    # (.old suffix) first, the new ones renamed in, and only then are the
-    # .old copies deleted. A crash anywhere in the window leaves either
-    # the old index intact or both copies on disk — never an index with no
-    # postings/docmap. recover_interrupted_compact() (called by IndexStore)
-    # rolls an interrupted swap back to the .old copies on next open.
+
+def _compact_local(store: IndexStore, cfg: EngineConfig) -> tuple[int, int] | None:
+    """Compaction on the driver, with no Spark job: the live docmap is the
+    pyarrow docmap minus ``_denied_local``'s denied set; ``ndocno`` is the
+    rank by doc_id within the shard; then per shard ``_decode_iter``,
+    the remap join and ``_pack_frame``, written under ``.compact/``.
+    Returns (n_docs, total_tokens), or None — the caller then runs the
+    Spark plan — unless every segment was built with ``cfg.num_shards``:
+    only then is the new shard, pmod(xxhash64(doc_id), num_shards), the
+    old one."""
+    manifests = [read_manifest(store.root, s) for s in store.segments()]
+    if not all(m and m["config"]["num_shards"] == cfg.num_shards for m in manifests):
+        return None
+    dm = store.local_table("docmap")
+    dead = store._denied_local(dm).assign(_dead=True)
+    live = dm.merge(dead, on=["segment_id", "shard", "docno"], how="left")
+    live = live[live["_dead"].isna()].sort_values(["shard", "doc_id"], kind="stable")
+    live["ndocno"] = live.groupby("shard").cumcount().astype(np.int64)
+    remap = live[["segment_id", "shard", "docno", "ndocno"]]
+
+    post = store.local_table("postings")
+    with_pos = "positions" in post.columns
+    packs = [_PACK_EMPTY.assign(positions=None) if with_pos else _PACK_EMPTY]
+    for _, group in post.groupby("shard", sort=True):
+        for entries in _decode_iter(iter([group])):
+            rows = entries.merge(remap, on=["segment_id", "shard", "docno"])
+            rows["docno"] = rows["ndocno"]
+            packs.append(_pack_frame(rows, cfg.block_size, combine=False))
+
+    tmp = Path(store.root) / ".compact"
+    shutil.rmtree(tmp, ignore_errors=True)
+    write_parquet_local(
+        pd.concat(packs, ignore_index=True),
+        schemas.POSTINGS_POS if with_pos else schemas.POSTINGS,
+        tmp / "postings" / "segment_id=0",
+    )
+    write_parquet_local(
+        live.assign(docno=live["ndocno"]),
+        schemas.DOCMAP,
+        tmp / "docmap" / "segment_id=0",
+    )
+    return len(live), int(live["dl"].sum())
+
+
+def _swap_compacted(root: Path) -> None:
+    """Swap ``.compact/``'s postings and docmap in for the live ones.
+
+    Crash-safe swap (ADVICE r01): the live directories are renamed ASIDE
+    (.old suffix) first, the new ones renamed in, and only then are the
+    .old copies deleted. A crash anywhere in the window leaves either
+    the old index intact or both copies on disk — never an index with no
+    postings/docmap. recover_interrupted_compact() (called by IndexStore)
+    rolls an interrupted swap back to the .old copies on next open."""
+    tmp = root / ".compact"
     swap_subs = ("postings", "docmap", "deletes", "manifest")
     for sub in swap_subs:
         if (root / sub).exists():
@@ -360,17 +550,3 @@ def compact(
         shutil.rmtree(root / f"{sub}.old", ignore_errors=True)
     shutil.rmtree(root / ".denied", ignore_errors=True)  # epoch masks are stale
     shutil.rmtree(tmp, ignore_errors=True)
-
-    elapsed = time.monotonic() - t0
-    manifest = {
-        "segment_id": 0,
-        "status": "complete",
-        "n_docs": int(n_docs),
-        "total_tokens": int(stats_row["toks"] or 0),
-        "config": cfg.to_dict(),
-        "lineage": {"kind": "compaction", "compacted_from": old_segments},
-        "metrics": {"elapsed_sec": round(elapsed, 3)},
-    }
-    write_manifest(index_root, 0, manifest)
-    publish_lexicon(spark, index_root, cfg, n_segments=1)
-    return manifest

@@ -78,6 +78,26 @@ def test_analyzer_appends_members_after_stream():
     ]
 
 
+def test_appended_members_pass_the_chain_post_filter():
+    """A synonym member that is a configured stopword, or outside the
+    token length bounds, is not appended: it could never be queried."""
+    cfg = EngineConfig(
+        index_synonyms=("laptop,the,notebook,pc",),
+        stopwords=("the",),
+        min_token_len=3,
+    )
+    out = get_analyzer(cfg)(pd.Series(["fast laptop"]), cfg).iloc[0]
+    assert out == ["fast", "laptop", "notebook"]
+    ws = EngineConfig(
+        analyzer="whitespace", index_synonyms=("laptop,the,pc",),
+        stopwords=("the",),
+    )
+    # the whitespace chain has no length bounds: only the stopword goes
+    assert get_analyzer(ws)(pd.Series(["laptop"]), ws).iloc[0] == [
+        "laptop", "pc",
+    ]
+
+
 def test_index_time_matches_all_group_members(spark, tmp_path):
     cfg = EngineConfig(num_shards=2, index_synonyms=SYN_GROUPS)
     store = _build(spark, tmp_path, "syn", cfg)

@@ -87,6 +87,20 @@ def test_user_dictionary_compound():
     assert segment_eojeol("김치찌개를") == ["김치찌개"]
 
 
+def test_memo_keyed_on_dictionary_contents():
+    """Two dictionaries sharing a version but not their nouns segment
+    differently: the memo is keyed on the dictionary's contents."""
+    from fastcatsearch3_spark.functions.korean import SEED_NOUNS
+
+    custom = KoreanDictionary(nouns=SEED_NOUNS + ("김치", "찌개"))
+    assert custom.version == KoreanDictionary().version
+    assert segment_eojeol("김치찌개를") == ["김치찌개"]
+    assert segment_eojeol("김치찌개를", custom) == ["김치", "찌개"]
+    s = pd.Series(["김치찌개를 주문"])
+    assert korean_tokenize_series(s).iloc[0] == ["김치찌개", "주문"]
+    assert korean_tokenize_series(s, dic=custom).iloc[0] == ["김치", "찌개", "주문"]
+
+
 def test_user_dictionary_simple_word():
     dic = KoreanDictionary(user_dict=("책상",))
     assert segment_eojeol("책상이", dic) == ["책상"]
