@@ -474,17 +474,42 @@ def make_pack_stream(block_size: int, combine: bool = True):
 # Segment build (I-1..I-4)
 # ---------------------------------------------------------------------------
 
+def _stable_leaves(df: DataFrame) -> bool:
+    """True when every leaf of ``df``'s executed plan is a file-source
+    scan (split planning is a pure function of files and reader confs,
+    and parquet rows stream in row-group order) or an existing-RDD scan
+    (a parallelized collection — what ``createDataFrame`` builds with
+    Arrow off). An allow-list: any other leaf is False. A
+    ``LocalTableScan`` (``createDataFrame`` with Arrow on) is one — the
+    optimiser folds projections over it into the leaf and evaluates
+    them on the driver, ``spark_partition_id()`` included, so every row
+    reads partition 0."""
+    try:
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            plan = plan.executedPlan()
+        leaves = plan.collectLeaves()
+        kinds = {
+            leaves.apply(i).getClass().getSimpleName()
+            for i in range(leaves.size())
+        }
+    except Exception:
+        return False
+    return kinds <= {"FileSourceScanExec", "RDDScanExec"}
+
+
 def _order_stable_plan(df: DataFrame) -> bool:
     """True when re-evaluating ``df`` in separate jobs is guaranteed to
     produce the same rows in the same order per partition — the condition
     for eliding the staged checkpoint (docmap and postings passes then
     re-derive identical docnos independently).
 
-    Holds for file-source scans plus narrow deterministic operators: split
-    planning is a pure function of (files, reader confs) and parquet rows
-    stream in row-group order. Broken by any Exchange (shuffle reduce-side
+    Holds for plans whose leaves pass ``_stable_leaves`` under narrow
+    deterministic operators. Broken by any Exchange (shuffle reduce-side
     fetch order is nondeterministic across jobs) or nondeterministic
     expression; those fall back to the staged-checkpoint path."""
+    if not _stable_leaves(df):
+        return False
     try:
         plan = df._jdf.queryExecution().executedPlan().toString()
     except Exception:
@@ -532,8 +557,13 @@ def build_segment(
     # max(parallelism, num_shards) put ~1800 tasks through a 256-shard
     # build regardless of corpus size, ~100 s of pure overhead at
     # local[2].
+    # A plan with any other leaf than ``_stable_leaves`` allows is
+    # repartitioned too: the partition ids the offsets pass and the stage
+    # pass read must come from real partitions.
     target = spark.sparkContext.defaultParallelism
-    need_guard = corpus.rdd.getNumPartitions() < target
+    need_guard = (
+        corpus.rdd.getNumPartitions() < target or not _stable_leaves(corpus)
+    )
     if need_guard:
         # hash repartition (NOT round-robin): partition membership must be
         # a pure function of doc_id so the offsets pass and the stage pass

@@ -4,9 +4,27 @@ Reference read path: SearchAction → Query tree → per-segment
 SegmentSearcher doc-at-a-time clause evaluation → per-node top-k →
 cluster merge (server:…job.ClusterSearchJob [K]).
 
-``search_index`` and ``search_many`` are cost-routed between two
-executors that run the SAME per-(segment, shard) kernel closures and
-rank in the same order, so they return identical answers:
+Every BM25 read is one computation, written once:
+
+* ``query_spec`` — the presence gates. A parsed query against the
+  lexicon dfs becomes its spec (idf with caret boosts, NOT set, synonym
+  groups, msm, surviving phrases, clause tree), or None when it cannot
+  match.
+* ``make_kernel`` — the per-(segment, shard) scoring function. It scores
+  a list of specs (and BM25F specs) against one group's posting rows,
+  decoding each blob header once for the whole list, and emits each
+  query's local top-k as (query_id, segment_id, shard, docno, score).
+* ``_score_shards`` — runs that kernel on one of the two routes below.
+
+``search_many`` scores N specs in one pass. ``search_index`` is a batch
+of one with its own tail (offset / after paging, ``_return_all`` and
+the docmap pushdown). ``search_bm25f``, ``rescore_topk`` and
+``function_score_topk`` are one-query calls of ``search_many``,
+``rescore_many`` and ``function_score_many``; the last runs the one
+other kernel, the factor-aware MaxScore.
+
+The two routes run the same kernel and rank in the same order, so they
+return identical answers:
 
 * **Driver route** — taken when no ``allow_doc_ids`` frame is given,
   ``_return_all`` is off and the index is small (postings plus docmap
@@ -16,7 +34,7 @@ rank in the same order, so they return identical answers:
 
     Q-3  candidate fetch: pyarrow reads the query terms' postings rows
          (``IndexStore.local_view``);
-    Q-4  scoring: ``_run_local`` calls the kernel closure once per local
+    Q-4  scoring: ``_run_local`` calls the kernel once per local
          (segment_id, shard) group, with that group's slice of the
          per-epoch denied set (docmap ⋈ deletes in pandas);
     Q-6  top-k: pandas sorts the hits (score desc, doc_id asc) and pages
@@ -33,10 +51,10 @@ rank in the same order, so they return identical answers:
          terms — an `isin` predicate pushed to Parquet (bloom filter on
          `term` set at write time), NOT a join, so only matching
          row-groups are read;
-    Q-4  scoring: applyInPandas kernel per (segment_id, shard) group —
-         every group holds all of its docs' postings for all query
-         terms, so AND/OR/NOT and block-max pruning are shard-local and
-         exact;
+    Q-4  scoring: applyInPandas kernel per (segment_id, shard) group
+         (``_group_apply``) — every group holds all of its docs'
+         postings for all query terms, so AND/OR/NOT and block-max
+         pruning are shard-local and exact;
     Q-6  scatter-gather: each group emits its local top-k; the global
          orderBy(score desc, doc_id asc).limit(k) compiles to Spark's
          TakeOrderedAndProject — the same partial/final top-k merge the
@@ -53,6 +71,7 @@ early returns are Arrow-backed local frames too (``local_frame``).
 from __future__ import annotations
 
 from dataclasses import dataclass as _dataclass
+from typing import NamedTuple
 
 import re as _re
 
@@ -74,7 +93,9 @@ from fastcatsearch3_spark.plans.scoring import (
     score_group_factored,
 )
 
-KERNEL_SCHEMA = "segment_id int, shard int, docno bigint, score double"
+KERNEL_SCHEMA = (
+    "query_id string, segment_id int, shard int, docno bigint, score double"
+)
 HITS_SCHEMA = "doc_id long, score double"
 BATCH_HITS_SCHEMA = "query_id string, doc_id long, score double"
 
@@ -112,39 +133,22 @@ def local_frame(spark: SparkSession, schema, rows=None) -> DataFrame:
     return spark.createDataFrame(tbl, st)
 
 
-def _local_inputs(
-    store, terms: list[str], columns: list[str], apply_deletes: bool
-):
-    """Inputs of the driver route (``IndexStore.local_view``) with the
-    denied set as a kind=-1 kernel mask (None when nothing is denied),
-    or None when the request must take the Spark plan."""
-    view = store.local_view(terms, columns, apply_deletes)
-    if view is None:
-        return None
-    cand, denied, dm = view
-    mask = denied.assign(kind=-1) if denied is not None and len(denied) else None
-    return cand, mask, dm
-
-
 def _run_local(
     kernel, cand: pd.DataFrame, mask: pd.DataFrame | None
 ) -> pd.DataFrame | None:
-    """Run a shard-kernel closure on the driver once per (segment_id,
-    shard) group of ``cand``, as the Spark plan's (co)grouped
-    applyInPandas does. With ``mask`` the closure is the two-arg
-    cogrouped form and gets the group's mask rows (an empty frame when
-    it has none, as a cogroup passes); otherwise the one-arg form.
-    Returns the concatenated non-empty outputs, or None."""
+    """Run a shard kernel ``kernel(pdf, mask_pdf)`` on the driver once
+    per (segment_id, shard) group of ``cand``, as the Spark route's
+    (co)grouped applyInPandas does (``_group_apply``): with ``mask`` each
+    group gets its mask rows (an empty frame when it has none, as a
+    cogroup passes), otherwise None. Returns the concatenated non-empty
+    outputs, or None."""
     if mask is not None:
         by_key = dict(iter(mask.groupby(["segment_id", "shard"])))
         none = mask.iloc[:0]
     outs = []
     for key, g in cand.groupby(["segment_id", "shard"], sort=True):
-        g = g.reset_index(drop=True)
-        if mask is None:
-            outs.append(kernel(g))
-        else:
-            outs.append(kernel(g, by_key.get(key, none).reset_index(drop=True)))
+        m = None if mask is None else by_key.get(key, none).reset_index(drop=True)
+        outs.append(kernel(g.reset_index(drop=True), m))
     outs = [o for o in outs if len(o)]
     return pd.concat(outs, ignore_index=True) if outs else None
 
@@ -173,150 +177,458 @@ def _rank_local(
     return out.iloc[offset:offset + k]
 
 
-def _make_kernel(
-    qidf: dict[str, float],
-    not_terms: set[str],
+class QuerySpec(NamedTuple):
+    """One query's scoring spec, built by ``query_spec``. Every term in
+    it is in the lexicon."""
+
+    qid: str
+    qidf: dict  # positive term → idf × caret boost
+    nset: frozenset  # NOT terms
+    op: str
+    groups: "dict | None"  # term → synonym/prefix group ids
+    n_groups: "int | None"
+    msm: "int | None"
+    phrases: "list | None"  # the phrases whose every term is indexed
+    slops: "list | None"
+    tree: object  # plans.query.Node; None for a flat query
+    phrase_only: "frozenset | None"
+
+
+def query_spec(
+    qid: str, pq: ParsedQuery, dfmap: dict, n_docs: int
+) -> QuerySpec | None:
+    """The presence gates: the spec of ``pq`` over the terms the lexicon
+    holds (``dfmap``: term → df), or None when no doc can match — an
+    AND'd term or synonym group or a required phrase has an unindexed
+    term, or too few terms / clauses are indexed to reach msm. Every
+    BM25 read builds its specs here."""
+    flat = pq.tree is None
+    terms = [t for t in pq.terms if t in dfmap]
+    if not terms:
+        return None
+    tg = (
+        {t: gs for t, gs in zip(pq.terms, pq.groups) if t in dfmap}
+        if pq.groups is not None
+        else None
+    )
+    present = (
+        len({g for gs in tg.values() for g in gs}) if tg is not None
+        else len(terms)
+    )
+    if flat and pq.op == "AND":
+        # a term credits every group it belongs to, so AND fails only
+        # when a whole group (without groups: any term) is unindexed
+        if present < (pq.n_groups if tg is not None else len(pq.terms)):
+            return None
+    if flat and pq.op == "OR" and pq.msm is not None and present < pq.msm:
+        return None
+    # caret boosts (J-6 per clause) scale the term's idf weight, so every
+    # scoring mode sees them through TermPostings.idf
+    qidf = {t: float(bm25_idf(n_docs, dfmap[t])) for t in terms}
+    for t, w in (pq.boosts or {}).items():
+        if t in qidf:
+            qidf[t] *= w
+    kept = [
+        (ph, sl)
+        for ph, sl in zip(pq.phrases, pq.phrase_slops)
+        if all(t in dfmap for t in ph)
+    ]
+    phrase_only = set(pq.phrase_only_terms) & set(terms)
+    if len(kept) < len(pq.phrases):
+        if pq.op == "AND" or not flat:
+            return None  # a required phrase with an unindexed term never matches
+        # OR: the dead phrase clause never matches, and its phrase-only
+        # member terms must not score as free terms either
+        viable = {t for ph, _ in kept for t in ph}
+        for t in phrase_only - viable:
+            qidf.pop(t)
+        phrase_only &= viable
+        if not qidf:
+            return None
+    if flat and pq.op == "OR" and pq.msm is not None and kept:
+        # msm counts CLAUSES here: free terms (with synonym/prefix groups,
+        # distinct free-term groups) plus viable phrases
+        free = [t for t in qidf if t not in phrase_only]
+        n_free = (
+            len({g for t in free for g in tg[t]}) if tg is not None
+            else len(free)
+        )
+        if n_free + len(kept) < pq.msm:
+            return None
+    return QuerySpec(
+        qid=qid,
+        qidf=qidf,
+        nset=frozenset(t for t in pq.not_terms if t in dfmap),
+        op=pq.op,
+        groups=tg,
+        n_groups=pq.n_groups if tg is not None else None,
+        msm=pq.msm,
+        phrases=[ph for ph, _ in kept] or None,
+        slops=[sl for _, sl in kept] or None,
+        tree=pq.tree,
+        phrase_only=frozenset(phrase_only) or None,
+    )
+
+
+def _kernel_rows(qid, seg: int, shard: int, docnos: np.ndarray, **cols):
+    """Kernel output rows for one query in one (segment, shard) group."""
+    return pd.DataFrame(
+        {
+            "query_id": qid,
+            "segment_id": np.full(docnos.size, seg, np.int32),
+            "shard": np.full(docnos.size, shard, np.int32),
+            "docno": docnos.astype(np.int64),
+            **cols,
+        }
+    )
+
+
+_NO_DOCNOS = np.zeros(0, dtype=np.uint64)
+_EMPTY_HITS = _kernel_rows(None, 0, 0, _NO_DOCNOS, score=np.zeros(0))
+
+
+def make_kernel(
+    specs: "list[QuerySpec]",
+    f_specs: "list[tuple]" = (),
     *,
     k: int,
-    op: str,
     mode: str,
     k1: float,
     b: float,
     avgdl: float,
-    n_required: int,
-    with_mask: bool,
-    allow_active: bool,
-    term_groups: dict[str, tuple[int, ...]] | None = None,
-    n_groups: int | None = None,
-    msm: int | None = None,
-    phrases: list[list[str]] | None = None,
-    phrase_slops: list[int] | None = None,
-    term_avgdl: dict[str, float] | None = None,
-    tree=None,  # plans.query.Node — nested boolean clause tree
-    tree_pos_terms: set[str] | None = None,
-    phrase_only_terms: set[str] | None = None,
+    term_avgdl: dict,
+    allow_qids: "set | frozenset" = frozenset(),
+    per_query_allow: bool = False,
     after_score: float | None = None,
 ):
-    """Build the per-(segment, shard) scoring function (U-5).
-    ``term_avgdl``: per-term avgdl overrides for field-qualified terms
-    (per-field BM25 length norm). With ``tree``, every fetched term's
-    postings go to the kernel whole (NOT leaves are evaluated inside the
-    tree) and the flat-path gates are bypassed."""
+    """The per-(segment, shard) scoring kernel (U-5) of every BM25 read:
+    ``kernel(pdf, mask_pdf)`` scores each spec against one group's
+    posting rows and returns the local top-k of each as
+    ``KERNEL_SCHEMA`` rows.
 
-    _EMPTY = pd.DataFrame(
-        {
-            "segment_id": pd.Series([], dtype="int32"),
-            "shard": pd.Series([], dtype="int32"),
-            "docno": pd.Series([], dtype="int64"),
-            "score": pd.Series([], dtype="float64"),
-        }
-    )
+    ``pdf``: the group's rows of the fetched terms (``positions`` set
+    only for phrase terms). Each blob's header is decoded once and
+    shared by every spec. ``mask_pdf`` (or None): the group's mask rows,
+    kind -1 denied docnos and kind 1 allowed docnos — per query_id when
+    ``per_query_allow``, else for every query. A query in ``allow_qids``
+    with no allow rows here matches nothing here. ``term_avgdl``:
+    per-term avgdl of field-qualified terms (per-field length norm).
 
-    def score_rows(pdf: pd.DataFrame, mask_pdf: pd.DataFrame | None) -> pd.DataFrame:
+    ``f_specs``: BM25F specs ``(qid, words)``, per word ``(idf,
+    [(field weight, field avgdl, term key), ...])``; a word's field tfs
+    merge before the single saturation (``score_bm25f``), AND across
+    words. ``after_score``: the cursor of ``search_index``'s ``after``
+    paging (``score_group``)."""
+
+    def kernel(pdf: pd.DataFrame, mask_pdf: pd.DataFrame | None) -> pd.DataFrame:
         if len(pdf) == 0:
-            return _EMPTY
+            return _EMPTY_HITS
         seg = int(pdf["segment_id"].iloc[0])
         shard = int(pdf["shard"].iloc[0])
-        pos_blobs = (
-            pdf["positions"] if "positions" in pdf.columns else [None] * len(pdf)
-        )
-        pos_tps, neg_tps, pos_groups = [], [], []
-        by_term: dict[str, TermPostings] = {}
-        for term, blob, pblob in zip(pdf["term"], pdf["postings"], pos_blobs):
-            tp = TermPostings(
-                term=term,
-                idf=qidf.get(term, 0.0),
-                blob=bytes(blob),
-                pos_blob=bytes(pblob) if pblob is not None else None,
-                avgdl=(term_avgdl or {}).get(term),
-            )
-            by_term[term] = tp
-            if tree is None and term in not_terms:
-                neg_tps.append(tp)
-            else:
-                pos_tps.append(tp)
-                if term_groups is not None:
-                    pos_groups.append(term_groups[term])
-        phrase_tps = None
-        if phrases:
-            phrase_tps = []
-            for ph in phrases:
-                if any(t not in by_term for t in ph):
-                    if op == "AND" or tree is not None:
-                        # required phrase, a term absent here → no match
-                        return _EMPTY
-                    # OR: this phrase clause can't match in this shard;
-                    # the other SHOULD clauses still can
-                    phrase_tps.append(None)
-                else:
-                    phrase_tps.append([by_term[t] for t in ph])
-        if op == "AND" and tree is None:
-            # required coverage in this shard: every term (or, with synonym
-            # groups, every group) must have at least one posting list here
-            covered = (
-                len({gid for gs in pos_groups for gid in gs})
-                if term_groups is not None
-                else len(pos_tps)
-            )
-            required = n_groups if term_groups is not None else n_required
-            if covered < required:
-                return _EMPTY
-        if not pos_tps:
-            return _EMPTY
-        allow = deny = None
-        if allow_active:
-            # an allow-filter is in force: an empty allow set for this
-            # shard means nothing here passes the filter
-            a = (
-                mask_pdf.loc[mask_pdf["kind"] == 1, "docno"].to_numpy(np.int64)
-                if mask_pdf is not None and len(mask_pdf)
-                else np.zeros(0, dtype=np.int64)
-            )
-            allow = np.sort(a).astype(np.uint64)
+        deny = None
+        allow_by_qid: dict = {}
+        allow_all = _NO_DOCNOS
         if mask_pdf is not None and len(mask_pdf):
             d = mask_pdf.loc[mask_pdf["kind"] == -1, "docno"].to_numpy(np.int64)
             if d.size:
                 deny = np.sort(d).astype(np.uint64)
-        docnos, scores = score_group(
-            pos_tps,
-            k=k,
-            op=op,
-            mode=mode,
-            k1=k1,
-            b=b,
-            avgdl=avgdl,
-            not_terms=neg_tps,
-            allow_docnos=allow,
-            deny_docnos=deny,
-            groups=pos_groups if term_groups is not None else None,
-            n_groups=n_groups,
-            msm=msm,
-            phrase_tps=phrase_tps,
-            phrase_slops=phrase_slops,
-            tree=tree,
-            tree_pos_terms=tree_pos_terms,
-            phrase_only_terms=phrase_only_terms,
-            after_score=after_score,
+            if allow_qids:
+                al = mask_pdf.loc[mask_pdf["kind"] == 1]
+                if per_query_allow:
+                    for aq, grp in al.groupby("query_id"):
+                        allow_by_qid[aq] = np.sort(
+                            grp["docno"].to_numpy(np.int64)
+                        ).astype(np.uint64)
+                else:
+                    allow_all = np.sort(
+                        al["docno"].to_numpy(np.int64)
+                    ).astype(np.uint64)
+
+        def allow(qid):
+            if qid not in allow_qids:
+                return None
+            return allow_by_qid.get(qid, _NO_DOCNOS) if per_query_allow else allow_all
+
+        pos_blobs = (
+            pdf["positions"] if "positions" in pdf.columns else [None] * len(pdf)
         )
-        return pd.DataFrame(
-            {
-                "segment_id": np.full(docnos.size, seg, dtype=np.int32),
-                "shard": np.full(docnos.size, shard, dtype=np.int32),
-                "docno": docnos.astype(np.int64),
-                "score": scores,
-            }
+        blobs: dict[str, tuple] = {}
+        for t, bl, pbl in zip(pdf["term"], pdf["postings"], pos_blobs):
+            raw = bytes(bl)
+            pos = bytes(pbl) if pbl is not None else None
+            blobs[t] = (raw, pos, decode_meta(raw))
+
+        def posting(t: str, idf: float, adl: float | None) -> TermPostings | None:
+            ent = blobs.get(t)
+            if ent is None:
+                return None
+            return TermPostings(
+                term=t, idf=idf, blob=ent[0], pos_blob=ent[1], avgdl=adl,
+                meta=ent[2],
+            )
+
+        outs = []
+        for s in specs:
+            flat = s.tree is None
+            by_term = {}
+            for t, idf in s.qidf.items():
+                tp = posting(t, idf, term_avgdl.get(t))
+                if tp is not None:
+                    by_term[t] = tp
+            if not by_term:
+                continue
+            phrase_tps = None
+            if s.phrases:
+                phrase_tps = [
+                    [by_term[t] for t in ph]
+                    if all(t in by_term for t in ph) else None
+                    for ph in s.phrases
+                ]
+                # a required phrase with a term absent here matches nothing
+                # here; under OR a dead phrase clause just never matches
+                if (s.op == "AND" or not flat) and any(
+                    p is None for p in phrase_tps
+                ):
+                    continue
+            if flat and s.op == "AND":
+                # required coverage here: every term (with synonym groups,
+                # every group) must have a posting list in this group
+                covered = (
+                    len({g for t in by_term for g in s.groups[t]})
+                    if s.groups is not None else len(by_term)
+                )
+                if covered < (s.n_groups if s.groups is not None else len(s.qidf)):
+                    continue
+            pos_tps = list(by_term.values())
+            neg_tps = []
+            for t in s.nset:
+                tp = posting(t, 0.0, term_avgdl.get(t))
+                if tp is None:
+                    continue
+                if flat:
+                    neg_tps.append(tp)
+                elif t not in by_term:
+                    # tree NOT leaves are evaluated inside the tree
+                    pos_tps.append(tp)
+            docnos, scores = score_group(
+                pos_tps, k=k, op=s.op, mode=mode, k1=k1, b=b, avgdl=avgdl,
+                not_terms=neg_tps, allow_docnos=allow(s.qid), deny_docnos=deny,
+                groups=(
+                    [s.groups[t] for t in by_term] if s.groups is not None
+                    else None
+                ),
+                n_groups=s.n_groups, msm=s.msm,
+                phrase_tps=phrase_tps, phrase_slops=s.slops,
+                tree=s.tree, tree_pos_terms=None if flat else set(s.qidf),
+                phrase_only_terms=s.phrase_only, after_score=after_score,
+            )
+            if docnos.size:
+                outs.append(_kernel_rows(s.qid, seg, shard, docnos, score=scores))
+        for qid, words in f_specs:
+            ws = []
+            for idf, fkeys in words:
+                ftps = [
+                    (wgt, tp) for wgt, adl, key in fkeys
+                    if (tp := posting(key, idf, adl)) is not None
+                ]
+                if not ftps:
+                    break  # AND: this word is absent from this group
+                ws.append((idf, ftps))
+            if len(ws) < len(words):
+                continue
+            docnos, scores = score_bm25f(
+                ws, k=k, k1=k1, b=b, avgdl=avgdl,
+                deny_docnos=deny, allow_docnos=allow(qid),
+            )
+            if docnos.size:
+                outs.append(_kernel_rows(qid, seg, shard, docnos, score=scores))
+        if len(outs) > 1:
+            return pd.concat(outs, ignore_index=True)
+        return outs[0] if outs else _EMPTY_HITS
+
+    return kernel
+
+
+def _group_apply(cand: DataFrame, masks: list, kernel, schema: str) -> DataFrame:
+    """The Spark route's kernel call: ``kernel(pdf, mask_pdf)`` once per
+    (segment_id, shard) group of ``cand``. With ``masks`` (frames keyed
+    by segment_id, shard, docno) each group is cogrouped with its rows
+    of their union — a column one frame lacks reads null there, and a
+    group with no mask rows gets an empty frame; without, mask_pdf is
+    None."""
+    keys = ("segment_id", "shard")
+    if not masks:
+        def grouped(pdf: pd.DataFrame) -> pd.DataFrame:
+            return kernel(pdf, None)
+
+        return cand.groupBy(*keys).applyInPandas(grouped, schema)
+    mask_df = masks[0]
+    for m in masks[1:]:
+        mask_df = mask_df.unionByName(m, allowMissingColumns=True)
+    # a two-arg function: cogroup passes it (left, right)
+    return (
+        cand.groupBy(*keys)
+        .cogroup(mask_df.groupBy(*keys))
+        .applyInPandas(kernel, schema)
+    )
+
+
+def _denied_rows(spark: SparkSession, store) -> list:
+    """The epoch's denied set as kernel mask rows (kind -1) — materialized
+    once per index epoch (``IndexStore.denied_mask``); a tombstone
+    written at segment N masks copies in segments < N only, the
+    reference's per-segment DeleteIdSet (core:ir.index.DeleteIdSet [K]).
+    A one-frame list, empty when nothing is denied."""
+    denied = store.denied_mask(spark)
+    if denied is None:
+        return []
+    return [
+        denied.select("segment_id", "shard", "docno", F.lit(-1).alias("kind"))
+    ]
+
+
+def _with_doc_ids(
+    spark: SparkSession, store, hits: DataFrame, broadcast: bool = True
+) -> DataFrame:
+    """Kernel hits joined to the docmap, which adds their doc_id. The
+    hits are broadcast unless they are the full match set."""
+    return (
+        store.docmap(spark)
+        .select("segment_id", "shard", "docno", "doc_id")
+        .join(
+            F.broadcast(hits) if broadcast else hits,
+            ["segment_id", "shard", "docno"],
         )
+    )
 
-    if with_mask:
-        def cogrouped(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            return score_rows(left, right)
 
-        return cogrouped
+def _top_per_query(df: DataFrame, k: int, by: str = "score") -> DataFrame:
+    """Per query_id the top k rows by (``by`` desc, doc_id asc), one
+    window over a result-sized relation; ordered by query_id, then rank."""
+    from pyspark.sql import Window as W
 
-    def grouped(pdf: pd.DataFrame) -> pd.DataFrame:
-        return score_rows(pdf, None)
+    rank = [F.desc(by), F.asc("doc_id")]
+    rn = F.row_number().over(W.partitionBy("query_id").orderBy(*rank))
+    return (
+        df.withColumn("_rn", rn)
+        .where(F.col("_rn") <= k)
+        .drop("_rn")
+        .orderBy("query_id", *rank)
+    )
 
-    return grouped
+
+def _term_avgdl(terms: list[str], stats: dict) -> dict:
+    """avgdl of each field-qualified term among ``terms``: such a term
+    normalizes against its own field's avgdl (per-field BM25 length
+    norm)."""
+    by_field = stats.get("avgdl_by_field") or {}
+    return {
+        t: by_field[t.split(":", 1)[0]]
+        for t in terms
+        if ":" in t and t.split(":", 1)[0] in by_field
+    }
+
+
+def _score_shards(
+    spark: SparkSession,
+    store,
+    cfg: EngineConfig,
+    stats: dict,
+    specs: "list[QuerySpec]",
+    f_specs: "list[tuple]" = (),
+    *,
+    k: int,
+    mode: str = "bmw",
+    allow_doc_ids: DataFrame | None = None,
+    apply_deletes: bool = True,
+    after_score: float | None = None,
+    local: bool = True,
+):
+    """Run the kernel (``make_kernel``) over every (segment, shard) group
+    that holds a fetched term. Takes the driver route (module docstring)
+    when ``local``, no ``allow_doc_ids`` frame is given and the index is
+    small; returns ``(hits, docmap)`` there, pandas frames (hits None
+    when nothing scored). Otherwise takes the Spark route and returns
+    ``(hits, None)`` with hits a DataFrame. Hits are ``KERNEL_SCHEMA``
+    rows, each group's local top-k per query.
+
+    ``allow_doc_ids``: a doc_id frame restricting every query, or, with a
+    query_id column, each row restricting only that query (the others
+    stay unfiltered). ``cfg`` and ``stats``: the store's, read once by
+    the caller."""
+    fetch: set[str] = set()
+    phrase_terms: set[str] = set()
+    for s in specs:
+        fetch.update(s.qidf)
+        fetch.update(s.nset)
+        phrase_terms.update(t for ph in s.phrases or () for t in ph)
+    for _, words in f_specs:
+        fetch.update(key for _, fkeys in words for _, _, key in fkeys)
+    fetch = sorted(fetch)
+    term_avgdl = _term_avgdl(fetch, stats)
+    per_query_allow = (
+        allow_doc_ids is not None and "query_id" in allow_doc_ids.columns
+    )
+    if per_query_allow:
+        allow_qids = {
+            r[0] for r in allow_doc_ids.select("query_id").distinct().collect()
+        }
+    elif allow_doc_ids is not None:
+        allow_qids = {s.qid for s in specs} | {qid for qid, _ in f_specs}
+    else:
+        allow_qids = set()
+    kernel = make_kernel(
+        specs, f_specs, k=k, mode=mode, k1=cfg.k1, b=cfg.b,
+        avgdl=stats["avgdl"], term_avgdl=term_avgdl, allow_qids=allow_qids,
+        per_query_allow=per_query_allow, after_score=after_score,
+    )
+    # the positions sidecar column is read only when a phrase needs it
+    # (column pruning = Lucene's .pos file split)
+    cols = ["segment_id", "shard", "term", "postings"] + (
+        ["positions"] if phrase_terms else []
+    )
+    view = (
+        store.local_view(fetch, cols, apply_deletes)
+        if local and allow_doc_ids is None
+        else None
+    )
+    if view is not None:
+        cand, denied, dm = view
+        if phrase_terms:
+            # as on the Spark route: positions only for phrase terms
+            cand.loc[~cand["term"].isin(phrase_terms), "positions"] = None
+        mask = denied.assign(kind=-1) if denied is not None and len(denied) else None
+        return _run_local(kernel, cand, mask), dm
+
+    postings = store.postings(spark)
+    if phrase_terms and "positions" not in postings.columns:
+        raise ValueError(
+            "phrase query against an index without positions — rebuild with "
+            "EngineConfig(store_positions=True)"
+        )
+    sel = [F.col(c) for c in cols[:4]]
+    if phrase_terms:
+        # other terms carry NULL so the shuffle stays postings-sized
+        sel.append(
+            F.when(
+                F.col("term").isin(sorted(phrase_terms)), F.col("positions")
+            ).alias("positions")
+        )
+    # an `isin` predicate pushed to Parquet (bloom filter on `term`), so
+    # only the row groups holding query terms are read
+    cand = postings.where(F.col("term").isin(fetch)).select(*sel)
+    masks = _denied_rows(spark, store) if apply_deletes else []
+    if allow_doc_ids is not None:
+        qcol = ["query_id"] if per_query_allow else []
+        masks.append(
+            store.docmap(spark)
+            .join(allow_doc_ids.select("doc_id", *qcol), "doc_id")
+            .select(
+                "segment_id", "shard", "docno", F.lit(1).alias("kind"),
+                *(F.col(c).cast("string").alias(c) for c in qcol),
+            )
+        )
+    return _group_apply(cand, masks, kernel, KERNEL_SCHEMA), None
 
 
 def _wildcard_to_regex(pat: str) -> tuple[str, str]:
@@ -1078,48 +1390,14 @@ def rescore_topk(
     (``k ≤ window`` required; output: doc_id, first_score, rescore,
     score ordered by score desc, doc_id asc).
 
-    Scale shape: the second pass pushes the window into the kernels as
-    an allow MASK (docmap join → per-shard docno mask), so it decodes
-    only the rescore query's posting lists and scores only window docs
-    — cost tracks the window and the rescore terms, never the corpus.
-    The final blend is a broadcast-sized join (≤ window rows). The
-    rescore pass reads GLOBAL df/avgdl stats, so a window doc's second
-    score equals its unrestricted score for the rescore query."""
-    if k > window:
-        raise ValueError("k must be <= window")
-    # the window is result-sized (≤ window rows) and is needed TWICE —
-    # as the second pass's allow mask and in the final blend — so pin it
-    # to the driver once (the hybrid_search pattern); leaving it lazy
-    # would re-execute the whole first-pass search for each use
-    win_rows = search_index(spark, store, query, k=window).collect()
-    if not win_rows:
-        return local_frame(
-            spark,
-            "doc_id long, first_score double, rescore double, score double",
-        )
-    win = local_frame(spark, HITS_SCHEMA, win_rows)
-    resc = search_index(
-        spark,
-        store,
-        rescore_query,
-        allow_doc_ids=win.select("doc_id"),
-        _return_all=True,
-    ).withColumnRenamed("score", "rescore")
-    second = F.coalesce(F.col("rescore"), F.lit(0.0))
-    return (
-        win.join(F.broadcast(resc), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.col("score").alias("first_score"),
-            second.alias("rescore"),
-            (
-                F.lit(float(query_weight)) * F.col("score")
-                + F.lit(float(rescore_weight)) * second
-            ).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    One query of ``rescore_many``, which has the plan: the second pass
+    scores only window docs, with GLOBAL df/avgdl stats, so a window
+    doc's second score equals its unrestricted score for the rescore
+    query."""
+    return rescore_many(
+        spark, store, {"": (query, rescore_query)}, k=k, window=window,
+        query_weight=query_weight, rescore_weight=rescore_weight,
+    ).drop("query_id")
 
 
 def function_score(
@@ -1255,11 +1533,15 @@ def build_factor_artifact(
 
     The modifier/weight are folded in AT BUILD (only static modifiers —
     ln1p/sqrt/none; decay depends on a query-time origin and stays on the
-    full-eval path). Values are clamped to ≥ 0 — non-negativity is what
-    makes factor-combined MaxScore pruning sound (score monotone in
-    accumulated BM25). ``missing`` substitutes null raw values like
-    function_score; docs absent from ``fields_df`` simply have no row and
-    get the boost-mode-neutral factor at query time.
+    full-eval path), with ``function_score``'s missing-value policy:
+    every docmap doc is left-joined to ``fields_df``, and ``missing``
+    (if given) stands in for a null, NaN or absent raw value; a doc
+    still without a value has no row and gets the boost-mode-neutral
+    factor at query time. Factor-combined MaxScore pruning is sound only
+    for factors ≥ 0 (score monotone in accumulated BM25), so a factor
+    that would be negative — ``weight < 0``, or ``modifier='none'`` with
+    a negative value or ``missing`` — raises ValueError; such factors
+    need ``function_score``.
 
     The artifact records the index epoch; ``function_score_topk`` refuses
     a stale artifact (same pattern as the ``.denied`` epoch masks). Cost:
@@ -1274,27 +1556,43 @@ def build_factor_artifact(
             "factor artifacts support static modifiers ln1p/sqrt/none; "
             "decay modifiers are query-relative — use function_score"
         )
-    raw0 = F.col(factor_col).cast("double")
+    negative = (
+        "factor artifacts hold factors >= 0 (the pruning bound needs "
+        "them); use function_score for negative factors"
+    )
+    if weight < 0 or (modifier == "none" and missing is not None and missing < 0):
+        raise ValueError(f"{negative}: weight={weight}, missing={missing}")
+    raw0 = F.col("_raw")
     # NaN → null (NaN is not null in Spark and would poison the kernel's
     # factor array and the pruning bound); nulls then follow the
-    # missing-value policy / drop to the neutral fill like absent rows
+    # missing-value policy / drop to the neutral fill
     raw = F.when(F.isnan(raw0), F.lit(None)).otherwise(raw0)
     if missing is not None:
         raw = F.coalesce(raw, F.lit(float(missing)))
+    # ln1p/sqrt clamp negative raw values to 0, as function_score does
     nonneg = F.when(raw < 0, F.lit(0.0)).otherwise(raw)
     fx = {
         "ln1p": F.log(F.lit(1.0) + nonneg),
         "sqrt": F.sqrt(nonneg),
-        "none": nonneg,
+        "none": raw,
     }[modifier] * F.lit(float(weight))
     rows = (
         store.docmap(spark)
         .select("segment_id", "shard", "docno", "doc_id")
-        .join(fields_df.select("doc_id", fx.alias("factor")), "doc_id")
+        .join(
+            fields_df.select(
+                "doc_id", F.col(factor_col).cast("double").alias("_raw")
+            ),
+            "doc_id",
+            "left",
+        )
+        .select("segment_id", "shard", "docno", fx.alias("factor"))
         .where(F.col("factor").isNotNull())
-        .select("segment_id", "shard", "docno", "factor")
-        .repartition("segment_id", "shard")
-        .sortWithinPartitions("segment_id", "shard", "docno")
+    )
+    if modifier == "none" and rows.where(F.col("factor") < 0).limit(1).count():
+        raise ValueError(f"{negative}: column {factor_col!r} has negative values")
+    rows = rows.repartition("segment_id", "shard").sortWithinPartitions(
+        "segment_id", "shard", "docno"
     )
     root = Path(store._p(".factors", name))
     tmp = root.with_name(root.name + ".tmp")
@@ -1311,104 +1609,6 @@ def build_factor_artifact(
     shutil.rmtree(root, ignore_errors=True)
     tmp.rename(root)
     return meta
-
-
-FACTOR_KERNEL_SCHEMA = (
-    "segment_id int, shard int, docno bigint,"
-    " score double, factor double, final double"
-)
-
-
-def _make_factor_kernel(
-    qidf: dict[str, float],
-    not_terms: set[str],
-    *,
-    k: int,
-    op: str,
-    k1: float,
-    b: float,
-    avgdl: float,
-    n_required: int,
-    boost_mode: str,
-    term_avgdl: dict[str, float] | None = None,
-):
-    """Per-(segment, shard) cogrouped kernel for function_score_topk:
-    left = posting rows, right = factor rows (kind=2) unioned with the
-    epoch denied mask (kind=-1). Builds the shard's dense neutral-filled
-    factor array and runs the factor-aware MaxScore
-    (scoring.score_group_factored)."""
-    neutral = 1.0 if boost_mode == "multiply" else 0.0
-    _EMPTY = pd.DataFrame(
-        {
-            "segment_id": pd.Series([], dtype="int32"),
-            "shard": pd.Series([], dtype="int32"),
-            "docno": pd.Series([], dtype="int64"),
-            "score": pd.Series([], dtype="float64"),
-            "factor": pd.Series([], dtype="float64"),
-            "final": pd.Series([], dtype="float64"),
-        }
-    )
-
-    def score_rows(pdf: pd.DataFrame, right: pd.DataFrame | None):
-        if len(pdf) == 0:
-            return _EMPTY
-        seg = int(pdf["segment_id"].iloc[0])
-        shard = int(pdf["shard"].iloc[0])
-        pos_tps, neg_tps = [], []
-        for term, blob in zip(pdf["term"], pdf["postings"]):
-            tp = TermPostings(
-                term=term,
-                idf=qidf.get(term, 0.0),
-                blob=bytes(blob),
-                avgdl=(term_avgdl or {}).get(term),
-            )
-            (neg_tps if term in not_terms else pos_tps).append(tp)
-        if op == "AND" and len(pos_tps) < n_required:
-            return _EMPTY
-        if not pos_tps:
-            return _EMPTY
-        deny = None
-        fac_dn = np.zeros(0, dtype=np.int64)
-        fac_v = np.zeros(0, dtype=np.float64)
-        if right is not None and len(right):
-            fr = right[right["kind"] == 2]
-            if len(fr):
-                fac_dn = fr["docno"].to_numpy(np.int64)
-                fac_v = fr["factor"].to_numpy(np.float64)
-            d = right.loc[right["kind"] == -1, "docno"].to_numpy(np.int64)
-            if d.size:
-                deny = np.sort(d).astype(np.uint64)
-        size = int(fac_dn.max()) + 1 if fac_dn.size else 0
-        factors = np.full(size, neutral, dtype=np.float64)
-        if fac_dn.size:
-            factors[fac_dn] = np.maximum(fac_v, 0.0)
-        docnos, bm25, fac, finals = score_group_factored(
-            pos_tps,
-            k=k,
-            op=op,
-            k1=k1,
-            b=b,
-            avgdl=avgdl,
-            factors=factors,
-            boost_mode=boost_mode,
-            not_terms=neg_tps,
-            deny_docnos=deny,
-        )
-        return pd.DataFrame(
-            {
-                "segment_id": np.full(docnos.size, seg, dtype=np.int32),
-                "shard": np.full(docnos.size, shard, dtype=np.int32),
-                "docno": docnos.astype(np.int64),
-                "score": bm25,
-                "factor": fac,
-                "final": finals,
-            }
-        )
-
-    def cogrouped(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        return score_rows(left, right)
-
-    return cogrouped
 
 
 def function_score_topk(
@@ -1435,104 +1635,11 @@ def function_score_topk(
     general forms — trees, phrases, msm, synonym groups, decay
     modifiers — fall back to ``function_score`` (raises here). Output:
     (doc_id, score, factor, final) by (final desc, doc_id asc), same
-    columns as function_score; ``score`` is the plain BM25 part."""
-    import json as _json
-    from pathlib import Path
-
-    if boost_mode not in ("multiply", "sum"):
-        raise ValueError("boost_mode must be 'multiply' or 'sum'")
-    cfg = store.config()
-    pq = parse_query(query, cfg) if isinstance(query, str) else query
-    pq = _expand_prefixes(spark, store, pq, cfg)
-    empty = local_frame(
-        spark, "doc_id long, score double, factor double, final double"
-    )
-    if pq is None or not pq.terms:
-        return empty
-    if (
-        pq.tree is not None
-        or pq.phrases
-        or pq.msm is not None
-        or pq.groups is not None
-    ):
-        raise ValueError(
-            "function_score_topk supports flat AND/OR queries; use "
-            "function_score for trees/phrases/msm/synonym groups"
-        )
-    root = Path(store._p(".factors", factor_name))
-    meta = _json.loads((root / "meta.json").read_text())
-    if meta["epoch"] != store.epoch():
-        raise RuntimeError(
-            f"factor artifact {factor_name!r} is stale (index epoch "
-            "changed since build) — rebuild with build_factor_artifact"
-        )
-    stats = store.stats()
-    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-    if n_docs == 0:
-        return empty
-    avgdl_by_field = stats.get("avgdl_by_field") or {}
-    all_terms = list(dict.fromkeys(pq.terms + pq.not_terms))
-    dfmap = store.df_for_terms(spark, all_terms)
-    if pq.op == "AND" and any(t not in dfmap for t in pq.terms):
-        return empty
-    terms = [t for t in pq.terms if t in dfmap]
-    not_terms = [t for t in pq.not_terms if t in dfmap]
-    if not terms:
-        return empty
-    qidf = {t: float(bm25_idf(n_docs, dfmap[t])) for t in terms}
-    for t, w in (pq.boosts or {}).items():
-        if t in qidf:
-            qidf[t] *= w
-    term_avgdl = {
-        t: avgdl_by_field[t.split(":", 1)[0]]
-        for t in terms + not_terms
-        if ":" in t and t.split(":", 1)[0] in avgdl_by_field
-    }
-    cand = (
-        store.postings(spark)
-        .where(F.col("term").isin(terms + not_terms))
-        .select("segment_id", "shard", "term", "postings")
-    )
-    right = spark.read.parquet(str(root / "rows")).select(
-        "segment_id", "shard", "docno", "factor", F.lit(2).alias("kind")
-    )
-    denied = store.denied_mask(spark)
-    if denied is not None:
-        right = right.unionByName(
-            denied.select(
-                "segment_id",
-                "shard",
-                "docno",
-                F.lit(None).cast("double").alias("factor"),
-                F.lit(-1).alias("kind"),
-            )
-        )
-    kernel = _make_factor_kernel(
-        qidf,
-        set(not_terms),
-        k=k,
-        op=pq.op,
-        k1=cfg.k1,
-        b=cfg.b,
-        avgdl=avgdl,
-        n_required=len(terms),
-        boost_mode=boost_mode,
-        term_avgdl=term_avgdl or None,
-    )
-    hits = (
-        cand.groupBy("segment_id", "shard")
-        .cogroup(right.groupBy("segment_id", "shard"))
-        .applyInPandas(kernel, FACTOR_KERNEL_SCHEMA)
-    )
-    # hits are ≤ k per (segment, shard) — broadcast-sized by construction
-    return (
-        store.docmap(spark)
-        .select("segment_id", "shard", "docno", "doc_id")
-        .join(F.broadcast(hits), ["segment_id", "shard", "docno"])
-        .select("doc_id", "score", "factor", "final")
-        .orderBy(F.desc("final"), F.asc("doc_id"))
-        .limit(k)
-    )
+    columns as function_score; ``score`` is the plain BM25 part. One
+    query of ``function_score_many``, which has the plan."""
+    return function_score_many(
+        spark, store, {"": query}, factor_name, k=k, boost_mode=boost_mode
+    ).drop("query_id")
 
 
 def rescore_many(
@@ -1544,23 +1651,24 @@ def rescore_many(
     query_weight: float = 1.0,
     rescore_weight: float = 1.0,
 ) -> DataFrame:
-    """Batch two-phase ranking (VERDICT r04 next-round #7): the batch twin
-    of ``rescore_topk``. ``queries`` maps query_id → (first_pass_query,
-    rescore_query). N queries cost TWO batch kernel passes total instead
-    of 2·N single-query passes:
+    """Two-phase ranking (``rescore_topk``) for N queries at once
+    (VERDICT r04 next-round #7). ``queries`` maps query_id →
+    (first_pass_query, rescore_query). N queries cost TWO batch kernel
+    passes total instead of 2·N single-query passes:
 
       * phase 1 — ONE ``search_many`` pass scores every first-pass query
         (k=window) against one shared postings scan;
       * phase 2 — ONE ``search_many`` pass scores every rescore query,
-        each restricted to ITS OWN window through the existing per-query
-        allow path (allow_doc_ids with a query_id column), so the second
-        pass decodes only the union of rescore terms and scores only
-        window docs — same cost shape as the per-query path, amortized.
+        each restricted to ITS OWN window through the per-query allow
+        mask (allow_doc_ids with a query_id column, a docmap join to
+        per-shard docnos), so the second pass decodes only the union of
+        rescore terms and scores only window docs — cost tracks the
+        windows and the rescore terms, never the corpus.
 
-    Per-query semantics are identical to ``rescore_topk`` (pinned by
-    test): window docs not matching the rescore query keep second = 0
-    (ES score_mode: total); rescore scores use GLOBAL df/avgdl stats.
-    Output: (query_id, doc_id, first_score, rescore, score), per-query
+    Window docs not matching the rescore query keep second = 0 (ES
+    score_mode: total); rescore scores use GLOBAL df/avgdl stats. The
+    final blend is a broadcast-sized join (≤ N·window rows). Output:
+    (query_id, doc_id, first_score, rescore, score), per-query
     (score desc, doc_id asc) top-k."""
     if k > window:
         raise ValueError("k must be <= window")
@@ -1575,7 +1683,8 @@ def rescore_many(
         spark, store, {qid: q for qid, (q, _) in queries.items()}, k=window
     )
     # the window relation is needed twice (phase-2 allow mask + blend) and
-    # is result-sized (≤ N·window rows) — pin it once, like rescore_topk
+    # is result-sized (≤ N·window rows) — pin it to the driver once;
+    # leaving it lazy would re-run the first pass for each use
     win_rows = first.collect()
     if not win_rows:
         return empty
@@ -1588,37 +1697,22 @@ def rescore_many(
         allow_doc_ids=win.select("query_id", "doc_id"),
     ).withColumnRenamed("score", "rescore")
     sec = F.coalesce(F.col("rescore"), F.lit(0.0))
-    from pyspark.sql import Window as W
-
-    blended = (
-        win.join(F.broadcast(second), ["query_id", "doc_id"], "left")
-        .select(
-            "query_id",
-            "doc_id",
-            F.col("score").alias("first_score"),
-            sec.alias("rescore"),
-            (
-                F.lit(float(query_weight)) * F.col("score")
-                + F.lit(float(rescore_weight)) * sec
-            ).alias("score"),
-        )
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                W.partitionBy("query_id").orderBy(
-                    F.desc("score"), F.asc("doc_id")
-                )
-            ),
-        )
+    blended = win.join(
+        F.broadcast(second), ["query_id", "doc_id"], "left"
+    ).select(
+        "query_id",
+        "doc_id",
+        F.col("score").alias("first_score"),
+        sec.alias("rescore"),
+        (
+            F.lit(float(query_weight)) * F.col("score")
+            + F.lit(float(rescore_weight)) * sec
+        ).alias("score"),
     )
-    return (
-        blended.where(F.col("_rn") <= k)
-        .drop("_rn")
-        .orderBy("query_id", F.desc("score"), F.asc("doc_id"))
-    )
+    return _top_per_query(blended, k)
 
 
-FS_BATCH_KERNEL_SCHEMA = (
+FS_KERNEL_SCHEMA = (
     "query_id string, segment_id int, shard int, docno bigint,"
     " score double, factor double, final double"
 )
@@ -1632,12 +1726,12 @@ def function_score_many(
     k: int = 10,
     boost_mode: str = "multiply",
 ) -> DataFrame:
-    """Batch function_score with early termination (VERDICT r04
-    next-round #7): the batch twin of ``function_score_topk``. N queries
-    against ONE factor artifact share one postings scan (pushed ``In``
-    over the union of terms), one factor cogroup, and one kernel pass;
-    each (segment, shard) group loads its dense factor array ONCE and
-    runs the factor-aware MaxScore per query spec.
+    """function_score with early termination for N queries (VERDICT r04
+    next-round #7) against ONE factor artifact: they share one postings
+    scan (pushed ``In`` over the union of terms), one factor cogroup,
+    and one kernel pass; each (segment, shard) group loads its dense
+    factor array ONCE and runs the factor-aware MaxScore
+    (``scoring.score_group_factored``) per ``query_spec``.
 
     Scope per query matches function_score_topk: flat AND/OR with NOT
     terms and caret boosts (trees/phrases/msm/groups raise). Output:
@@ -1667,7 +1761,6 @@ def function_score_many(
     n_docs, avgdl = stats["n_docs"], stats["avgdl"]
     if n_docs == 0:
         return empty
-    avgdl_by_field = stats.get("avgdl_by_field") or {}
 
     parsed: dict[str, ParsedQuery] = {}
     for qid, q in queries.items():
@@ -1681,176 +1774,97 @@ def function_score_many(
             or pq.msm is not None
             or pq.groups is not None
         ):
+            where = f"query {qid!r}: " if qid else ""
             raise ValueError(
-                f"query {qid!r}: function_score_many supports flat AND/OR"
-                " queries; use function_score for the general form"
+                f"{where}factor artifacts serve flat AND/OR queries; use"
+                " function_score for trees/phrases/msm/synonym groups"
             )
         parsed[qid] = pq
-    all_terms = sorted(
-        {t for pq in parsed.values() for t in pq.terms + pq.not_terms}
+    dfmap = store.df_for_terms(
+        spark, sorted({t for pq in parsed.values() for t in pq.terms + pq.not_terms})
     )
-    if not all_terms:
-        return empty
-    dfmap = store.df_for_terms(spark, all_terms)
-    term_avgdl = {
-        t: avgdl_by_field[t.split(":", 1)[0]]
-        for t in all_terms
-        if ":" in t and t.split(":", 1)[0] in avgdl_by_field
-    }
-    specs: list[tuple] = []
-    fetch: set[str] = set()
-    for qid, pq in parsed.items():
-        terms = [t for t in pq.terms if t in dfmap]
-        if not terms:
-            continue
-        if pq.op == "AND" and len(terms) < len(pq.terms):
-            continue
-        qidf = {t: float(bm25_idf(n_docs, dfmap[t])) for t in terms}
-        for t, w in (pq.boosts or {}).items():
-            if t in qidf:
-                qidf[t] *= w
-        nset = {t for t in pq.not_terms if t in dfmap}
-        specs.append((qid, qidf, nset, pq.op, len(terms)))
-        fetch.update(qidf)
-        fetch.update(nset)
+    specs = [
+        s for qid, pq in parsed.items()
+        if (s := query_spec(qid, pq, dfmap, n_docs)) is not None
+    ]
     if not specs:
         return empty
-
-    cand = (
-        store.postings(spark)
-        .where(F.col("term").isin(sorted(fetch)))
-        .select("segment_id", "shard", "term", "postings")
-    )
-    right = spark.read.parquet(str(root / "rows")).select(
-        "segment_id", "shard", "docno", "factor", F.lit(2).alias("kind")
-    )
-    denied = store.denied_mask(spark)
-    if denied is not None:
-        right = right.unionByName(
-            denied.select(
-                "segment_id",
-                "shard",
-                "docno",
-                F.lit(None).cast("double").alias("factor"),
-                F.lit(-1).alias("kind"),
-            )
-        )
+    fetch = sorted({t for s in specs for t in (*s.qidf, *s.nset)})
+    term_avgdl = _term_avgdl(fetch, stats)
     k1, b = cfg.k1, cfg.b
     neutral = 1.0 if boost_mode == "multiply" else 0.0
-    _EMPTY_FS = pd.DataFrame(
-        {
-            "query_id": pd.Series([], dtype=object),
-            "segment_id": pd.Series([], dtype="int32"),
-            "shard": pd.Series([], dtype="int32"),
-            "docno": pd.Series([], dtype="int64"),
-            "score": pd.Series([], dtype="float64"),
-            "factor": pd.Series([], dtype="float64"),
-            "final": pd.Series([], dtype="float64"),
-        }
+    empty_rows = _kernel_rows(
+        None, 0, 0, _NO_DOCNOS, score=np.zeros(0), factor=np.zeros(0),
+        final=np.zeros(0),
     )
 
-    def _score_batch(pdf: pd.DataFrame, right_pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(pdf: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        # right: the group's factor rows (kind 2) and denied docnos (kind -1)
         if len(pdf) == 0:
-            return _EMPTY_FS
+            return empty_rows
         seg = int(pdf["segment_id"].iloc[0])
         shard = int(pdf["shard"].iloc[0])
-        deny = None
-        fac_dn = np.zeros(0, dtype=np.int64)
-        fac_v = np.zeros(0, dtype=np.float64)
-        if right_pdf is not None and len(right_pdf):
-            fr = right_pdf[right_pdf["kind"] == 2]
-            if len(fr):
-                fac_dn = fr["docno"].to_numpy(np.int64)
-                fac_v = fr["factor"].to_numpy(np.float64)
-            d = right_pdf.loc[right_pdf["kind"] == -1, "docno"].to_numpy(
-                np.int64
-            )
-            if d.size:
-                deny = np.sort(d).astype(np.uint64)
-        size = int(fac_dn.max()) + 1 if fac_dn.size else 0
-        factors = np.full(size, neutral, dtype=np.float64)
-        if fac_dn.size:
-            factors[fac_dn] = np.maximum(fac_v, 0.0)
+        fr = right[right["kind"] == 2]
+        fac_dn = fr["docno"].to_numpy(np.int64)
+        d = right.loc[right["kind"] == -1, "docno"].to_numpy(np.int64)
+        deny = np.sort(d).astype(np.uint64) if d.size else None
+        factors = np.full(
+            int(fac_dn.max()) + 1 if fac_dn.size else 0, neutral, np.float64
+        )
+        factors[fac_dn] = fr["factor"].to_numpy(np.float64)
         # decode each blob's meta once, shared across the batch
-        blobs: dict[str, tuple[bytes, "PostingMeta"]] = {}
+        blobs = {}
         for t, bl in zip(pdf["term"], pdf["postings"]):
             raw = bytes(bl)
             blobs[t] = (raw, decode_meta(raw))
-        outs = []
-        for qid, qidf, nset, op, n_req in specs:
-            pos_tps, neg_tps = [], []
-            for t, idf in qidf.items():
-                ent = blobs.get(t)
-                if ent is None:
-                    continue
-                pos_tps.append(
-                    TermPostings(
-                        term=t, idf=idf, blob=ent[0],
-                        avgdl=term_avgdl.get(t), meta=ent[1],
-                    )
+
+        def postings(terms: dict) -> list[TermPostings]:
+            return [
+                TermPostings(
+                    term=t, idf=idf, blob=blobs[t][0],
+                    avgdl=term_avgdl.get(t), meta=blobs[t][1],
                 )
-            if not pos_tps or (op == "AND" and len(pos_tps) < n_req):
+                for t, idf in terms.items() if t in blobs
+            ]
+
+        outs = []
+        for s in specs:
+            pos_tps = postings(s.qidf)
+            if not pos_tps or (s.op == "AND" and len(pos_tps) < len(s.qidf)):
                 continue
-            for t in nset:
-                ent = blobs.get(t)
-                if ent is not None:
-                    neg_tps.append(
-                        TermPostings(
-                            term=t, idf=0.0, blob=ent[0],
-                            avgdl=term_avgdl.get(t), meta=ent[1],
-                        )
-                    )
             docnos, bm25, fac, finals = score_group_factored(
-                pos_tps, k=k, op=op, k1=k1, b=b, avgdl=avgdl,
+                pos_tps, k=k, op=s.op, k1=k1, b=b, avgdl=avgdl,
                 factors=factors, boost_mode=boost_mode,
-                not_terms=neg_tps, deny_docnos=deny,
+                not_terms=postings(dict.fromkeys(s.nset, 0.0)),
+                deny_docnos=deny,
             )
             if docnos.size:
                 outs.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "segment_id": np.full(docnos.size, seg, np.int32),
-                            "shard": np.full(docnos.size, shard, np.int32),
-                            "docno": docnos.astype(np.int64),
-                            "score": bm25,
-                            "factor": fac,
-                            "final": finals,
-                        }
+                    _kernel_rows(
+                        s.qid, seg, shard, docnos, score=bm25, factor=fac,
+                        final=finals,
                     )
                 )
-        if not outs:
-            return _EMPTY_FS
-        return pd.concat(outs, ignore_index=True)
+        return pd.concat(outs, ignore_index=True) if outs else empty_rows
 
-    def cogrouped(left: pd.DataFrame, right_pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score_batch(left, right_pdf)
-
-    hits = (
-        cand.groupBy("segment_id", "shard")
-        .cogroup(right.groupBy("segment_id", "shard"))
-        .applyInPandas(cogrouped, FS_BATCH_KERNEL_SCHEMA)
+    cand = (
+        store.postings(spark)
+        .where(F.col("term").isin(fetch))
+        .select("segment_id", "shard", "term", "postings")
     )
-    from pyspark.sql import Window as W
-
-    joined = (
-        store.docmap(spark)
-        .select("segment_id", "shard", "docno", "doc_id")
-        .join(F.broadcast(hits), ["segment_id", "shard", "docno"])
-        .select("query_id", "doc_id", "score", "factor", "final")
+    factor_rows = spark.read.parquet(str(root / "rows")).select(
+        "segment_id", "shard", "docno", "factor", F.lit(2).alias("kind")
     )
-    ranked = joined.withColumn(
-        "_rn",
-        F.row_number().over(
-            W.partitionBy("query_id").orderBy(
-                F.desc("final"), F.asc("doc_id")
-            )
+    hits = _group_apply(
+        cand, [factor_rows, *_denied_rows(spark, store)], kernel,
+        FS_KERNEL_SCHEMA,
+    )
+    return _top_per_query(
+        _with_doc_ids(spark, store, hits).select(
+            "query_id", "doc_id", "score", "factor", "final"
         ),
-    )
-    return (
-        ranked.where(F.col("_rn") <= k)
-        .drop("_rn")
-        .orderBy("query_id", F.desc("final"), F.asc("doc_id"))
+        k,
+        by="final",
     )
 
 
@@ -2054,7 +2068,11 @@ def search_index(
 
     ``_return_all`` (internal, for collapse/grouping): score EVERY
     matching doc and return the distributed unordered (doc_id, score)
-    relation — no top-k truncation, no driver collect."""
+    relation — no top-k truncation, no driver collect.
+
+    The query is a batch of one: ``query_spec`` and the shared kernel
+    score it; paging, ``_return_all`` and the docmap pushdown below are
+    this function's own tail."""
     cfg = store.config()
     if after is not None:
         if offset:
@@ -2063,206 +2081,29 @@ def search_index(
             raise ValueError("after does not apply to _return_all")
     pq = parse_query(query, cfg) if isinstance(query, str) else query
     pq = _expand_prefixes(spark, store, pq, cfg)
-    if pq is None:  # an AND'd prefix matched nothing in the lexicon
-        return local_frame(spark, HITS_SCHEMA)
     stats = store.stats()
-    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-    # field-qualified terms normalize against their own field's avgdl
-    avgdl_by_field = stats.get("avgdl_by_field") or {}
-    term_avgdl = {
-        t: avgdl_by_field[t.split(":", 1)[0]]
-        for t in pq.terms + pq.not_terms
-        if ":" in t and t.split(":", 1)[0] in avgdl_by_field
-    }
-
-    all_terms = list(dict.fromkeys(pq.terms + pq.not_terms))
-    if not pq.terms or n_docs == 0:
+    n_docs = stats["n_docs"]
+    if pq is None or not pq.terms or n_docs == 0:
         return local_frame(spark, HITS_SCHEMA)
-
-    dfmap = store.df_for_terms(spark, all_terms)
-    if pq.op == "AND" and pq.tree is None:
-        if pq.groups is None:
-            if any(t not in dfmap for t in pq.terms):
-                return local_frame(spark, HITS_SCHEMA)
-        else:
-            # synonym groups: AND fails only if a whole group is missing
-            # (a term credits every group it belongs to)
-            present_groups = {
-                gid for t, gs in zip(pq.terms, pq.groups) if t in dfmap
-                for gid in gs
-            }
-            if len(present_groups) < pq.n_groups:
-                return local_frame(spark, HITS_SCHEMA)
-    terms = [t for t in pq.terms if t in dfmap]
-    term_groups = (
-        {t: gs for t, gs in zip(pq.terms, pq.groups) if t in dfmap}
-        if pq.groups is not None
-        else None
-    )
-    not_terms = [t for t in pq.not_terms if t in dfmap]
-    if not terms:
+    dfmap = store.df_for_terms(spark, list(dict.fromkeys(pq.terms + pq.not_terms)))
+    spec = query_spec("", pq, dfmap, n_docs)
+    if spec is None:
         return local_frame(spark, HITS_SCHEMA)
-    if pq.msm is not None and pq.op == "OR" and pq.tree is None:
-        # enough distinct terms/groups must exist at all to reach msm
-        n_present = (
-            len({gid for gs in term_groups.values() for gid in gs})
-            if term_groups is not None
-            else len(terms)
-        )
-        if n_present < pq.msm:
-            return local_frame(spark, HITS_SCHEMA)
-    qidf = {t: float(bm25_idf(n_docs, dfmap[t])) for t in terms}
-    # caret boosts (J-6 per clause): scale the term's idf weight — the
-    # kernel and every scoring mode see the boost through TermPostings.idf
-    for t, w in (pq.boosts or {}).items():
-        if t in qidf:
-            qidf[t] *= w
-
-    kept = [
-        (ph, sl)
-        for ph, sl in zip(pq.phrases, pq.phrase_slops)
-        if all(t in dfmap for t in ph)
-    ]
-    phrases = [ph for ph, _ in kept]
-    phrase_slops = [sl for _, sl in kept]
-    phrase_only = set(pq.phrase_only_terms) & set(terms)
-    if pq.phrases and len(phrases) < len(pq.phrases):
-        if pq.op == "AND" or pq.tree is not None:
-            # a required phrase containing an unindexed term never matches
-            return local_frame(spark, HITS_SCHEMA)
-        # OR: the dead phrase clause just never matches — but its
-        # phrase-only member terms must not score as free terms either
-        viable_members = {t for ph in phrases for t in ph}
-        dead = {t for t in phrase_only if t not in viable_members}
-        if dead:
-            terms = [t for t in terms if t not in dead]
-            for t in dead:
-                qidf.pop(t, None)
-            phrase_only -= dead
-        if not terms and not phrases:
-            return local_frame(spark, HITS_SCHEMA)
-    if (
-        pq.op == "OR"
-        and pq.tree is None
-        and pq.msm is not None
-        and phrases
-    ):
-        # msm counts CLAUSES here: free terms (or, with synonym/prefix
-        # groups, distinct free-term groups) present + viable phrases
-        if term_groups is not None:
-            n_free = len(
-                {
-                    gid
-                    for t in terms
-                    if t not in phrase_only
-                    for gid in term_groups[t]
-                }
-            )
-        else:
-            n_free = len([t for t in terms if t not in phrase_only])
-        n_clauses = n_free + len(phrases)
-        if n_clauses < pq.msm:
-            return local_frame(spark, HITS_SCHEMA)
-    fetch_terms = terms + not_terms
-    # explicit projection: the positions sidecar column is scanned ONLY
-    # when a phrase needs it (column pruning = Lucene's .pos file split)
-    cols = ["segment_id", "shard", "term", "postings"] + (
-        ["positions"] if phrases else []
+    hits, dm = _score_shards(
+        spark, store, cfg, stats, [spec],
+        # each shard holds offset+k hits so the global merge can page
+        # exactly; with an `after` cursor, k (+ ties, kept in-kernel) is
+        # enough; _return_all disables truncation entirely
+        k=(1 << 62) if _return_all else (k if after is not None else offset + k),
+        mode=mode, allow_doc_ids=allow_doc_ids, apply_deletes=apply_deletes,
+        after_score=float(after[0]) if after is not None else None,
+        local=not _return_all,
     )
-
-    def make_kernel(with_mask: bool):
-        return _make_kernel(
-            qidf,
-            set(not_terms),
-            # each shard holds offset+k hits so the global merge can page
-            # exactly; with an `after` cursor, k (+ ties, kept in-kernel)
-            # is enough; _return_all disables truncation entirely
-            k=(1 << 62) if _return_all else (k if after is not None else offset + k),
-            op=pq.op,
-            mode=mode,
-            k1=cfg.k1,
-            b=cfg.b,
-            avgdl=avgdl,
-            n_required=len(terms),
-            with_mask=with_mask,
-            allow_active=allow_doc_ids is not None,
-            term_groups=term_groups,
-            n_groups=pq.n_groups if term_groups is not None else None,
-            msm=pq.msm,
-            phrases=phrases or None,
-            phrase_slops=phrase_slops or None,
-            term_avgdl=term_avgdl or None,
-            tree=pq.tree,
-            tree_pos_terms=set(terms) if pq.tree is not None else None,
-            phrase_only_terms=phrase_only or None,
-            after_score=float(after[0]) if after is not None else None,
-        )
-
-    # driver route (module docstring): small index, no allow frame
-    local = (
-        _local_inputs(store, fetch_terms, cols, apply_deletes)
-        if allow_doc_ids is None and not _return_all
-        else None
-    )
-    if local is not None:
-        cand_pdf, mask_pdf, dm = local
-        kernel = make_kernel(mask_pdf is not None)
-        top = _rank_local(
-            _run_local(kernel, cand_pdf, mask_pdf), dm, k,
-            offset=offset, after=after,
-        )
+    if dm is not None:
+        top = _rank_local(hits, dm, k, offset=offset, after=after)
         out = local_frame(spark, HITS_SCHEMA, top)
         return _hydrate(spark, store, out, hydrate, corpus_df)
-
-    postings_df = store.postings(spark)
-    if phrases and "positions" not in postings_df.columns:
-        raise ValueError(
-            "phrase query against an index without positions — rebuild with "
-            "EngineConfig(store_positions=True)"
-        )
-    cand = (
-        store.postings(spark)
-        .where(F.col("term").isin(fetch_terms))
-        .select(*cols)
-    )
-
-    masks = []
-    if allow_doc_ids is not None:
-        allowed = (
-            store.docmap(spark)
-            .join(allow_doc_ids.select("doc_id"), "doc_id")
-            .select("segment_id", "shard", "docno", F.lit(1).alias("kind"))
-        )
-        masks.append(allowed)
-    if apply_deletes:
-        # the shard-local denied set is materialized ONCE per index epoch
-        # (IndexStore.denied_mask) — not recomputed per query; a tombstone
-        # written at segment N masks copies in segments < N only (the
-        # re-ingested copy in segment N itself stays live) — the
-        # reference's per-segment DeleteIdSet (core:ir.index.DeleteIdSet
-        # [K]) applied to older segments
-        denied = store.denied_mask(spark)
-        if denied is not None:
-            masks.append(
-                denied.select(
-                    "segment_id", "shard", "docno", F.lit(-1).alias("kind")
-                )
-            )
-
-    kernel = make_kernel(bool(masks))
-    if masks:
-        mask_df = masks[0]
-        for m in masks[1:]:
-            mask_df = mask_df.unionByName(m)
-        hits = (
-            cand.groupBy("segment_id", "shard")
-            .cogroup(mask_df.groupBy("segment_id", "shard"))
-            .applyInPandas(kernel, KERNEL_SCHEMA)
-        )
-    else:
-        hits = cand.groupBy("segment_id", "shard").applyInPandas(
-            kernel, KERNEL_SCHEMA
-        )
+    hits = hits.drop("query_id")
 
     # Q-5 hydrate docnos → doc_ids — a stats-driven strategy choice, like
     # any cost-based planner:
@@ -2282,11 +2123,8 @@ def search_index(
         # full scored match set, distributed: the docmap join stays a
         # shuffle-free broadcast only when hits are known-small — here
         # they are O(matches), so use a plain key join and let AQE pick
-        return (
-            store.docmap(spark)
-            .select("segment_id", "shard", "docno", "doc_id")
-            .join(hits, ["segment_id", "shard", "docno"])
-            .select("doc_id", "score")
+        return _with_doc_ids(spark, store, hits, broadcast=False).select(
+            "doc_id", "score"
         )
 
     def _page(scored: DataFrame) -> DataFrame:
@@ -2305,12 +2143,7 @@ def search_index(
             .limit(k)
         )
     if n_docs < cfg.hydrate_pushdown_min_docs:
-        out = _page(
-            store.docmap(spark)
-            .select("segment_id", "shard", "docno", "doc_id")
-            .join(F.broadcast(hits), ["segment_id", "shard", "docno"])
-            .select("doc_id", "score")
-        )
+        out = _page(_with_doc_ids(spark, store, hits).select("doc_id", "score"))
         return _hydrate(spark, store, out, hydrate, corpus_df)
     hit_rows = hits.collect()
     if not hit_rows:
@@ -2452,14 +2285,9 @@ def search_collapse(
     )
 
 
-BATCH_KERNEL_SCHEMA = (
-    "query_id string, segment_id int, shard int, docno bigint, score double"
-)
-
-
 @_dataclass
 class Bm25fQuery:
-    """A true-BM25F query spec for :func:`search_many` (the batch twin of
+    """A true-BM25F query for :func:`search_many` (one query of it is
     :func:`search_bm25f`): every word of ``text`` must match in >= 1 of
     the weighted fields (AND across words); per word, field tfs are
     length-normalized, weighted and MERGED before the single k1
@@ -2467,6 +2295,53 @@ class Bm25fQuery:
 
     text: str
     field_weights: dict[str, float]
+
+
+def _bm25f_spec(
+    spark: SparkSession, store, qid: str, fq: Bm25fQuery, cfg, stats: dict
+) -> tuple | None:
+    """A BM25F query's kernel spec ``(qid, words)`` (``make_kernel``):
+    per word, its idf over the doc-level union df (served by the store's
+    epoch-cached ``dfu_for_terms``) and one ``(weight, field avgdl,
+    field-qualified key)`` entry per field. None when the index is empty
+    or a word is in no field (AND). Raises ValueError on an unknown field
+    or a word that analyzes to nothing."""
+    from fastcatsearch3_spark.functions.analyzer import tokenize_text
+
+    where = f"query {qid!r}: " if qid else ""
+    if not fq.field_weights:
+        raise ValueError(f"{where}field_weights must name at least one field")
+    for fld in fq.field_weights:
+        if fld not in cfg.indexed_fields:
+            raise ValueError(
+                f"{where}unknown search field {fld!r} "
+                f"(indexed: {cfg.indexed_fields})"
+            )
+    bases: list[str] = []
+    for w in fq.text.split():
+        toks = tokenize_text(w, cfg)
+        if not toks:
+            raise ValueError(f"{where}query word {w!r} analyzed to nothing")
+        bases.extend(t for t in toks if t not in bases)
+    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
+    if not bases or n_docs == 0:
+        return None
+    dfu = dfu_for_terms(spark, store, bases, list(fq.field_weights))
+    if any(dfu.get(t, 0) == 0 for t in bases):
+        return None
+    by_field = stats.get("avgdl_by_field") or {}
+    fields = [
+        (float(w), avgdl if f == "content" else by_field.get(f, avgdl), f)
+        for f, w in fq.field_weights.items()
+    ]
+    words = [
+        (
+            float(bm25_idf(n_docs, dfu[t])),
+            [(w, adl, t if f == "content" else f"{f}:{t}") for w, adl, f in fields],
+        )
+        for t in bases
+    ]
+    return qid, words
 
 
 def search_many(
@@ -2492,8 +2367,8 @@ def search_many(
     top-k. The FULL query surface is batchable: flat AND/OR/NOT, synonym
     groups, msm, caret boosts, field terms, phrases / proximity (the
     positions sidecar is fetched only for phrase terms), nested clause
-    trees, and prefix terms (expanded against the lexicon per query before
-    spec build, exactly like ``search_index``). Posting-blob metadata is
+    trees, prefix terms (expanded against the lexicon per query before
+    ``query_spec``) and ``Bm25fQuery`` entries. Posting-blob metadata is
     decoded once per (segment, shard, term) and shared across every query
     in the batch. Tombstoned docs are excluded via the epoch denied mask
     cogrouped into the kernel.
@@ -2501,467 +2376,43 @@ def search_many(
     ``allow_doc_ids``: optional allow-filter. With a ``query_id`` column,
     each row restricts only that query (other queries stay unfiltered);
     without one, the filter applies to every query in the batch."""
+    if not queries:
+        return local_frame(spark, BATCH_HITS_SCHEMA)
     cfg = store.config()
     stats = store.stats()
-    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-    avgdl_by_field = stats.get("avgdl_by_field") or {}
-    if n_docs == 0 or not queries:
-        return local_frame(spark, BATCH_HITS_SCHEMA)
-
     parsed: dict[str, ParsedQuery] = {}
-    f_queries: dict[str, Bm25fQuery] = {}
+    f_specs: list[tuple] = []
     for qid, q in queries.items():
         if isinstance(q, Bm25fQuery):
-            f_queries[qid] = q
+            fs = _bm25f_spec(spark, store, qid, q, cfg, stats)
+            if fs is not None:
+                f_specs.append(fs)
             continue
         pq = parse_query(q, cfg) if isinstance(q, str) else q
         pq = _expand_prefixes(spark, store, pq, cfg)
-        if pq is None:  # an AND'd prefix matched nothing in the lexicon
-            continue
-        parsed[qid] = pq
-
-    all_terms = sorted(
-        {t for pq in parsed.values() for t in pq.terms + pq.not_terms}
+        if pq is not None:  # None: an AND'd prefix matched nothing
+            parsed[qid] = pq
+    n_docs = stats["n_docs"]
+    if n_docs == 0:
+        return local_frame(spark, BATCH_HITS_SCHEMA)
+    dfmap = store.df_for_terms(
+        spark, sorted({t for pq in parsed.values() for t in pq.terms + pq.not_terms})
     )
-    dfmap = store.df_for_terms(spark, all_terms)
-    term_avgdl = {
-        t: avgdl_by_field[t.split(":", 1)[0]]
-        for t in all_terms
-        if ":" in t and t.split(":", 1)[0] in avgdl_by_field
-    }
-
-    # per-query spec, mirroring search_index's presence gates
-    specs: list[tuple] = []
-    fetch: set[str] = set()
-    phrase_terms: set[str] = set()
-    for qid, pq in parsed.items():
-        terms = [t for t in pq.terms if t in dfmap]
-        if not terms:
-            continue
-        tg = (
-            {t: gs for t, gs in zip(pq.terms, pq.groups) if t in dfmap}
-            if pq.groups is not None
-            else None
-        )
-        if pq.op == "AND" and pq.tree is None:
-            if tg is None:
-                if len(terms) < len(pq.terms):
-                    continue  # a required term is unindexed → no results
-            else:
-                present = {g for gs in tg.values() for g in gs}
-                if len(present) < pq.n_groups:
-                    continue
-        if pq.msm is not None and pq.op == "OR" and pq.tree is None:
-            n_present = (
-                len({g for gs in tg.values() for g in gs}) if tg else len(terms)
-            )
-            if n_present < pq.msm:
-                continue
-        qidf = {t: float(bm25_idf(n_docs, dfmap[t])) for t in terms}
-        for t, w in (pq.boosts or {}).items():
-            if t in qidf:
-                qidf[t] *= w
-        kept = [
-            (ph, sl)
-            for ph, sl in zip(pq.phrases, pq.phrase_slops)
-            if all(t in dfmap for t in ph)
-        ]
-        phrase_only = set(pq.phrase_only_terms) & set(terms)
-        if pq.phrases and len(kept) < len(pq.phrases):
-            if pq.op == "AND" or pq.tree is not None:
-                continue  # a required phrase with an unindexed term never matches
-            # OR: the dead phrase clause never matches; its phrase-only
-            # members must not score as free terms (same as search_index)
-            viable_members = {t for ph, _ in kept for t in ph}
-            dead = {t for t in phrase_only if t not in viable_members}
-            if dead:
-                terms = [t for t in terms if t not in dead]
-                for t in dead:
-                    qidf.pop(t, None)
-                phrase_only -= dead
-            if not terms and not kept:
-                continue
-        phrases = [ph for ph, _ in kept] or None
-        slops = [sl for _, sl in kept] or None
-        if phrases:
-            phrase_terms.update(t for ph in phrases for t in ph)
-        nset = {t for t in pq.not_terms if t in dfmap}
-        specs.append(
-            (
-                qid, qidf, nset, pq.op, len(terms), tg,
-                pq.n_groups if tg is not None else None, pq.msm,
-                phrases, slops, pq.tree,
-                set(terms) if pq.tree is not None else None,
-                phrase_only or None,
-            )
-        )
-        fetch.update(qidf)
-        fetch.update(nset)
-
-    # BM25F specs (the batch twin of search_bm25f): per word an (idf,
-    # [(weight, field avgdl, field-qualified key), ...]) group whose tfs
-    # merge BEFORE saturation in the kernel; idf over the doc-level union
-    # df, served by the store's epoch-cached dfu_for_terms
-    from fastcatsearch3_spark.functions.analyzer import tokenize_text
-
-    f_specs: list[tuple] = []
-    for qid, fq in f_queries.items():
-        if not fq.field_weights:
-            raise ValueError(f"query {qid!r}: field_weights must name at least one field")
-        for fld in fq.field_weights:
-            if fld not in cfg.indexed_fields:
-                raise ValueError(
-                    f"query {qid!r}: unknown search field {fld!r} "
-                    f"(indexed: {cfg.indexed_fields})"
-                )
-        bases: list[str] = []
-        for w in fq.text.split():
-            toks = tokenize_text(w, cfg)
-            if not toks:
-                raise ValueError(f"query {qid!r}: word {w!r} analyzed to nothing")
-            bases.extend(t for t in toks if t not in bases)
-        if not bases:
-            continue
-        fields = list(fq.field_weights)
-        dfu = dfu_for_terms(spark, store, bases, fields)
-        if any(dfu.get(bse, 0) == 0 for bse in bases):
-            continue  # AND: a word absent from every field matches nothing
-        words = []
-        for bse in bases:
-            idf = float(bm25_idf(n_docs, dfu[bse]))
-            fkeys = []
-            for fld in fields:
-                key = bse if fld == "content" else f"{fld}:{bse}"
-                adl = (
-                    avgdl
-                    if fld == "content"
-                    else avgdl_by_field.get(fld, avgdl)
-                )
-                fkeys.append((float(fq.field_weights[fld]), adl, key))
-                fetch.add(key)
-            words.append((idf, fkeys))
-        f_specs.append((qid, words))
-
+    specs = [
+        s for qid, pq in parsed.items()
+        if (s := query_spec(qid, pq, dfmap, n_docs)) is not None
+    ]
     if not specs and not f_specs:
         return local_frame(spark, BATCH_HITS_SCHEMA)
-
-    k1, b = cfg.k1, cfg.b
-
-    # allow-filter bookkeeping: which queries have an allow set in force
-    # (shard-locally, "no allow rows here" must mean "nothing passes" for
-    # exactly those queries — and "unfiltered" for the rest)
-    per_query_allow = (
-        allow_doc_ids is not None and "query_id" in allow_doc_ids.columns
+    hits, dm = _score_shards(
+        spark, store, cfg, stats, specs, f_specs, k=k, mode=mode,
+        allow_doc_ids=allow_doc_ids, apply_deletes=apply_deletes,
     )
-    if per_query_allow:
-        allowed_qids = {
-            r[0]
-            for r in allow_doc_ids.select("query_id").distinct().collect()
-        }
-    elif allow_doc_ids is not None:
-        allowed_qids = {qid for qid, *_ in specs} | {
-            qid for qid, _ in f_specs
-        }
-    else:
-        allowed_qids = set()
-
-    _EMPTY_BATCH = pd.DataFrame(
-        {
-            "query_id": pd.Series([], dtype=object),
-            "segment_id": pd.Series([], dtype="int32"),
-            "shard": pd.Series([], dtype="int32"),
-            "docno": pd.Series([], dtype="int64"),
-            "score": pd.Series([], dtype="float64"),
-        }
-    )
-
-    def _score_batch(pdf: pd.DataFrame, mask_pdf: pd.DataFrame | None) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return _EMPTY_BATCH
-        seg = int(pdf["segment_id"].iloc[0])
-        shard = int(pdf["shard"].iloc[0])
-        deny = None
-        allow_by_qid: dict[str, np.ndarray] = {}
-        allow_global = None
-        if mask_pdf is not None and len(mask_pdf):
-            d = mask_pdf.loc[mask_pdf["kind"] == -1, "docno"].to_numpy(np.int64)
-            if d.size:
-                deny = np.sort(d).astype(np.uint64)
-            al = mask_pdf.loc[mask_pdf["kind"] == 1]
-            if len(al):
-                if per_query_allow:
-                    for aq, grp in al.groupby("query_id"):
-                        allow_by_qid[aq] = np.sort(
-                            grp["docno"].to_numpy(np.int64)
-                        ).astype(np.uint64)
-                else:
-                    allow_global = np.sort(
-                        al["docno"].to_numpy(np.int64)
-                    ).astype(np.uint64)
-        _no_allow = np.zeros(0, dtype=np.uint64)
-        pos_blobs = (
-            pdf["positions"] if "positions" in pdf.columns else [None] * len(pdf)
-        )
-        # decode each blob's meta ONCE for the whole batch; per-query
-        # TermPostings share the decoded header (idf differs per query)
-        blobs: dict[str, tuple[bytes, bytes | None, "PostingMeta"]] = {}
-        for t, bl, pbl in zip(pdf["term"], pdf["postings"], pos_blobs):
-            raw = bytes(bl)
-            blobs[t] = (
-                raw,
-                bytes(pbl) if pbl is not None else None,
-                decode_meta(raw),
-            )
-
-        def make_tp(t: str, idf: float) -> TermPostings | None:
-            ent = blobs.get(t)
-            if ent is None:
-                return None
-            raw, pbl, meta = ent
-            return TermPostings(
-                term=t, idf=idf, blob=raw, pos_blob=pbl,
-                avgdl=term_avgdl.get(t), meta=meta,
-            )
-
-        outs = []
-        for (qid, qidf, nset, op, n_req, tg, n_groups, msm,
-             phrases, slops, tree, tree_pos_terms, phrase_only) in specs:
-            pos_tps, neg_tps, pos_groups = [], [], []
-            by_term: dict[str, TermPostings] = {}
-            for t, idf in qidf.items():
-                tp = make_tp(t, idf)
-                if tp is None:
-                    continue
-                by_term[t] = tp
-                pos_tps.append(tp)
-                if tg is not None:
-                    pos_groups.append(tg[t])
-            if not pos_tps:
-                continue
-            phrase_tps = None
-            if phrases:
-                phrase_tps = []
-                missing = False
-                for ph in phrases:
-                    if any(t not in by_term for t in ph):
-                        if op == "AND" or tree is not None:
-                            missing = True  # required phrase absent here
-                            break
-                        phrase_tps.append(None)  # OR: dead clause only
-                    else:
-                        phrase_tps.append([by_term[t] for t in ph])
-                if missing:
-                    continue
-            if op == "AND" and tree is None:
-                covered = (
-                    len({g for gs in pos_groups for g in gs})
-                    if tg is not None
-                    else len(pos_tps)
-                )
-                required = n_groups if tg is not None else n_req
-                if covered < required:
-                    continue
-            for t in nset:
-                tp = make_tp(t, 0.0)
-                if tp is not None:
-                    if tree is not None:
-                        by_term[t] = tp
-                        pos_tps.append(tp)
-                    else:
-                        neg_tps.append(tp)
-            allow = None
-            if qid in allowed_qids:
-                allow = (
-                    allow_by_qid.get(qid, _no_allow)
-                    if per_query_allow
-                    else (allow_global
-                          if allow_global is not None else _no_allow)
-                )
-            docnos, scores = score_group(
-                pos_tps, k=k, op=op, mode=mode, k1=k1, b=b, avgdl=avgdl,
-                not_terms=neg_tps, allow_docnos=allow, deny_docnos=deny,
-                groups=pos_groups if tg is not None else None,
-                n_groups=n_groups, msm=msm,
-                phrase_tps=phrase_tps, phrase_slops=slops,
-                tree=tree, tree_pos_terms=tree_pos_terms,
-                phrase_only_terms=phrase_only,
-            )
-            if docnos.size:
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "segment_id": np.full(docnos.size, seg, np.int32),
-                            "shard": np.full(docnos.size, shard, np.int32),
-                            "docno": docnos.astype(np.int64),
-                            "score": scores,
-                        }
-                    )
-                )
-        # BM25F queries share the same decoded blobs; the per-word field
-        # groups merge tfs before saturation (score_bm25f)
-        for qid, words in f_specs:
-            ws = []
-            absent = False
-            for idf, fkeys in words:
-                ftps = []
-                for wgt, adl, key in fkeys:
-                    ent = blobs.get(key)
-                    if ent is None:
-                        continue
-                    raw, pbl, meta = ent
-                    ftps.append(
-                        (
-                            wgt,
-                            TermPostings(
-                                term=key, idf=idf, blob=raw, avgdl=adl,
-                                meta=meta,
-                            ),
-                        )
-                    )
-                if not ftps:
-                    absent = True  # AND: word absent from this shard
-                    break
-                ws.append((idf, ftps))
-            if absent:
-                continue
-            allow = None
-            if qid in allowed_qids:
-                allow = (
-                    allow_by_qid.get(qid, _no_allow)
-                    if per_query_allow
-                    else (allow_global
-                          if allow_global is not None else _no_allow)
-                )
-            docnos, scores = score_bm25f(
-                ws, k=k, k1=k1, b=b, avgdl=avgdl,
-                deny_docnos=deny, allow_docnos=allow,
-            )
-            if docnos.size:
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "segment_id": np.full(docnos.size, seg, np.int32),
-                            "shard": np.full(docnos.size, shard, np.int32),
-                            "docno": docnos.astype(np.int64),
-                            "score": scores,
-                        }
-                    )
-                )
-        if not outs:
-            return _EMPTY_BATCH
-        return pd.concat(outs, ignore_index=True)
-
-    # driver route (module docstring): small index, no allow frame
-    cols = ["segment_id", "shard", "term", "postings"] + (
-        ["positions"] if phrase_terms else []
-    )
-    local = (
-        _local_inputs(store, sorted(fetch), cols, apply_deletes)
-        if allow_doc_ids is None
-        else None
-    )
-    if local is not None:
-        cand_pdf, mask_pdf, dm = local
-        if phrase_terms:
-            # as on the Spark route: positions only for phrase terms
-            cand_pdf.loc[~cand_pdf["term"].isin(phrase_terms), "positions"] = None
-        kernel = (
-            _score_batch if mask_pdf is not None
-            else (lambda pdf: _score_batch(pdf, None))
-        )
-        top = _rank_local(
-            _run_local(kernel, cand_pdf, mask_pdf), dm, k, by_query=True
-        )
+    if dm is not None:
+        top = _rank_local(hits, dm, k, by_query=True)
         return local_frame(spark, BATCH_HITS_SCHEMA, top)
-
-    postings_df = store.postings(spark)
-    if phrase_terms and "positions" not in postings_df.columns:
-        raise ValueError(
-            "phrase query against an index without positions — rebuild with "
-            "EngineConfig(store_positions=True)"
-        )
-    sel = [F.col(c) for c in ("segment_id", "shard", "term", "postings")]
-    if phrase_terms:
-        # positions sidecar bytes flow to the kernel ONLY for phrase
-        # terms — other terms carry NULL so the shuffle stays postings-sized
-        sel.append(
-            F.when(
-                F.col("term").isin(sorted(phrase_terms)), F.col("positions")
-            ).alias("positions")
-        )
-    cand = postings_df.where(F.col("term").isin(sorted(fetch))).select(*sel)
-
-    masks = []
-    if allow_doc_ids is not None:
-        qcol = (
-            F.col("query_id").cast("string")
-            if per_query_allow
-            else F.lit(None).cast("string")
-        )
-        allowed = (
-            store.docmap(spark)
-            .join(
-                allow_doc_ids.select(
-                    "doc_id", *(["query_id"] if per_query_allow else [])
-                ),
-                "doc_id",
-            )
-            .select(
-                "segment_id", "shard", "docno", F.lit(1).alias("kind"),
-                qcol.alias("query_id"),
-            )
-        )
-        masks.append(allowed)
-    denied = store.denied_mask(spark) if apply_deletes else None
-    if denied is not None:
-        masks.append(
-            denied.select(
-                "segment_id", "shard", "docno", F.lit(-1).alias("kind"),
-                F.lit(None).cast("string").alias("query_id"),
-            )
-        )
-    if masks:
-        mask_df = masks[0]
-        for m in masks[1:]:
-            mask_df = mask_df.unionByName(m)
-
-        # two-arg function → cogroup passes (left, right); a lone grouped
-        # two-arg function would instead receive (key, pdf)
-        def cogrouped(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            return _score_batch(left, right)
-
-        hits = (
-            cand.groupBy("segment_id", "shard")
-            .cogroup(mask_df.groupBy("segment_id", "shard"))
-            .applyInPandas(cogrouped, BATCH_KERNEL_SCHEMA)
-        )
-    else:
-        def grouped(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _score_batch(pdf, None)
-
-        hits = cand.groupBy("segment_id", "shard").applyInPandas(
-            grouped, BATCH_KERNEL_SCHEMA
-        )
-    from pyspark.sql import Window as W
-
-    joined = (
-        store.docmap(spark)
-        .select("segment_id", "shard", "docno", "doc_id")
-        .join(F.broadcast(hits), ["segment_id", "shard", "docno"])
-        .select("query_id", "doc_id", "score")
-    )
-    ranked = joined.withColumn(
-        "_rn",
-        F.row_number().over(
-            W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-        ),
-    )
-    return (
-        ranked.where(F.col("_rn") <= k)
-        .drop("_rn")
-        .orderBy("query_id", F.desc("score"), F.asc("doc_id"))
+    return _top_per_query(
+        _with_doc_ids(spark, store, hits).select("query_id", "doc_id", "score"), k
     )
 
 
@@ -3256,7 +2707,7 @@ def dfu_for_terms(
         cols = ["segment_id", "shard", "term", "postings"]
         local = store.local_view(keys, cols, with_deletes=False)
         if local is not None:  # driver route: same kernel, no Spark job
-            part = _run_local(union_counts, local[0], None)
+            part = _run_local(lambda pdf, _: union_counts(pdf), local[0], None)
             got = (
                 {}
                 if part is None
@@ -3295,138 +2746,9 @@ def search_bm25f(
     BM25 scores: here each word's field tfs are length-normalized,
     field-weighted, and SUMMED before the k1 saturation, and idf is the
     doc-level union df (``dfu_for_terms``). AND across words. Output:
-    (doc_id, score), (score desc, doc_id asc)."""
-    cfg = store.config()
-    for fld in field_weights:
-        if fld not in cfg.indexed_fields:
-            raise ValueError(
-                f"unknown search field {fld!r} (indexed: {cfg.indexed_fields})"
-            )
-    if not field_weights:
-        raise ValueError("field_weights must name at least one field")
-    stats = store.stats()
-    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-    avgdl_by_field = stats.get("avgdl_by_field") or {}
-
-    from fastcatsearch3_spark.functions.analyzer import tokenize_text
-
-    bases: list[str] = []
-    for w in text.split():
-        toks = tokenize_text(w, cfg)
-        if not toks:
-            raise ValueError(f"query word {w!r} analyzed to nothing")
-        bases.extend(t for t in toks if t not in bases)
-    if not bases or n_docs == 0:
-        return local_frame(spark, HITS_SCHEMA)
-
-    fields = list(field_weights)
-    dfu = dfu_for_terms(spark, store, bases, fields)
-    if any(dfu.get(b, 0) == 0 for b in bases):
-        # AND semantics: a word absent from every field matches nothing
-        return local_frame(spark, HITS_SCHEMA)
-    word_idf = {b: float(bm25_idf(n_docs, dfu[b])) for b in bases}
-    key_of = {
-        (f, b): (b if f == "content" else f"{f}:{b}")
-        for f in fields
-        for b in bases
-    }
-    field_avgdl = {
-        f: (avgdl_by_field.get(f, avgdl) if f != "content" else avgdl)
-        for f in fields
-    }
-
-    fetch = sorted(key_of.values())
-    cand = (
-        store.postings(spark)
-        .where(F.col("term").isin(fetch))
-        .select("segment_id", "shard", "term", "postings")
-    )
-    k1, b_p = cfg.k1, cfg.b
-    specs = [
-        (
-            bse,
-            word_idf[bse],
-            [(float(field_weights[f]), f, key_of[(f, bse)]) for f in fields],
-        )
-        for bse in bases
-    ]
-
-    def kernel(pdf: pd.DataFrame, mask_pdf: pd.DataFrame | None) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "segment_id": pd.Series([], dtype="int32"),
-                "shard": pd.Series([], dtype="int32"),
-                "docno": pd.Series([], dtype="int64"),
-                "score": pd.Series([], dtype="float64"),
-            }
-        )
-        if len(pdf) == 0:
-            return empty
-        seg = int(pdf["segment_id"].iloc[0])
-        shard = int(pdf["shard"].iloc[0])
-        blobs = {t: bytes(bl) for t, bl in zip(pdf["term"], pdf["postings"])}
-        words = []
-        for bse, idf, fkeys in specs:
-            ftps = []
-            for wgt, f, key in fkeys:
-                bl = blobs.get(key)
-                if bl is None:
-                    continue
-                ftps.append(
-                    (
-                        wgt,
-                        TermPostings(
-                            term=key, idf=idf, blob=bl,
-                            avgdl=field_avgdl[f],
-                        ),
-                    )
-                )
-            if not ftps:
-                return empty  # AND: word absent from this shard entirely
-            words.append((idf, ftps))
-        deny = None
-        if mask_pdf is not None and len(mask_pdf):
-            deny = np.sort(
-                mask_pdf["docno"].to_numpy(np.int64)
-            ).astype(np.uint64)
-        docnos, scores = score_bm25f(
-            words, k=k, k1=k1, b=b_p, avgdl=avgdl, deny_docnos=deny
-        )
-        return pd.DataFrame(
-            {
-                "segment_id": np.full(docnos.size, seg, np.int32),
-                "shard": np.full(docnos.size, shard, np.int32),
-                "docno": docnos.astype(np.int64),
-                "score": scores,
-            }
-        )
-
-    denied = store.denied_mask(spark) if apply_deletes else None
-    if denied is not None:
-        def cogrouped(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            return kernel(left, right)
-
-        hits = (
-            cand.groupBy("segment_id", "shard")
-            .cogroup(
-                denied.select("segment_id", "shard", "docno").groupBy(
-                    "segment_id", "shard"
-                )
-            )
-            .applyInPandas(cogrouped, KERNEL_SCHEMA)
-        )
-    else:
-        def grouped(pdf: pd.DataFrame) -> pd.DataFrame:
-            return kernel(pdf, None)
-
-        hits = cand.groupBy("segment_id", "shard").applyInPandas(
-            grouped, KERNEL_SCHEMA
-        )
-    return (
-        store.docmap(spark)
-        .select("segment_id", "shard", "docno", "doc_id")
-        .join(F.broadcast(hits), ["segment_id", "shard", "docno"])
-        .select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    (doc_id, score), (score desc, doc_id asc). One ``Bm25fQuery`` of
+    ``search_many``."""
+    return search_many(
+        spark, store, {"": Bm25fQuery(text, field_weights)}, k=k,
+        apply_deletes=apply_deletes,
+    ).drop("query_id")

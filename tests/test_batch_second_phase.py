@@ -1,7 +1,9 @@
 """Batch second-phase ranking (VERDICT r04 next-round #7): rescore_many
-and function_score_many must be per-query IDENTICAL to their
-single-query twins (rescore_topk / function_score_topk), while sharing
-one postings scan + one kernel pass per phase across the batch."""
+and function_score_many share one postings scan + one kernel pass per
+phase across the batch, and each query's rows must equal an independent
+per-query reference: a blend of two plain ``search_index`` calls for
+rescore, the full-evaluation ``function_score`` for function_score.
+(rescore_topk / function_score_topk are one-query calls of these.)"""
 
 from __future__ import annotations
 
@@ -16,10 +18,10 @@ from fastcatsearch3_spark.operators.ingest import normalize_corpus
 from fastcatsearch3_spark.plans.query import ParsedQuery
 from fastcatsearch3_spark.plans.search import (
     build_factor_artifact,
+    function_score,
     function_score_many,
-    function_score_topk,
     rescore_many,
-    rescore_topk,
+    search_index,
 )
 
 CFG = EngineConfig(num_shards=2, store_positions=True)
@@ -66,21 +68,37 @@ RESCORE_BATCH = {
 }
 
 
+def _rescore_reference(spark, store, q, rq, k, window, qw, rw):
+    """Rescore by hand: the first pass's top-window, each window doc's
+    unrestricted score for the rescore query (0 when it does not match),
+    blended and re-ranked (score desc, doc_id asc)."""
+    first = search_index(spark, store, q, k=window).toPandas()
+    second = dict(
+        (int(d), s)
+        for d, s in search_index(spark, store, rq, k=len(ROWS)).collect()
+    )
+    first["rescore"] = [second.get(int(d), 0.0) for d in first["doc_id"]]
+    first["final"] = qw * first["score"] + rw * first["rescore"]
+    return first.sort_values(
+        ["final", "doc_id"], ascending=[False, True]
+    ).head(k).reset_index(drop=True)
+
+
 def test_rescore_many_matches_per_query(spark, store):
     batch = rescore_many(
         spark, store, RESCORE_BATCH, k=5, window=6,
         query_weight=1.0, rescore_weight=2.0,
     ).toPandas()
     for qid, (q, rq) in RESCORE_BATCH.items():
-        solo = rescore_topk(
-            spark, store, q, rq, k=5, window=6,
-            query_weight=1.0, rescore_weight=2.0,
-        ).toPandas()
+        want = _rescore_reference(spark, store, q, rq, 5, 6, 1.0, 2.0)
         got = batch[batch["query_id"] == qid].reset_index(drop=True)
-        assert list(got["doc_id"]) == list(solo["doc_id"]), qid
-        np.testing.assert_allclose(got["score"], solo["score"], atol=1e-9)
+        assert list(got["doc_id"]) == list(want["doc_id"]), qid
+        np.testing.assert_allclose(got["score"], want["final"], atol=1e-9)
         np.testing.assert_allclose(
-            got["rescore"], solo["rescore"], atol=1e-9
+            got["first_score"], want["score"], atol=1e-9
+        )
+        np.testing.assert_allclose(
+            got["rescore"], want["rescore"], atol=1e-9
         )
 
 
@@ -112,15 +130,16 @@ def test_function_score_many_matches_per_query(
         boost_mode=boost_mode,
     ).toPandas()
     for qid, pq in FS_BATCH.items():
-        solo = function_score_topk(
-            spark, store, pq, f"b_{boost_mode}", k=5, boost_mode=boost_mode
+        full = function_score(
+            spark, store, pq, fields, "pop", k=5, boost_mode=boost_mode
         ).toPandas()
         got = batch[batch["query_id"] == qid].reset_index(drop=True)
-        assert list(got["doc_id"]) == list(solo["doc_id"]), qid
-        np.testing.assert_allclose(got["final"], solo["final"], atol=1e-9)
+        assert list(got["doc_id"]) == list(full["doc_id"]), qid
+        np.testing.assert_allclose(got["final"], full["final"], atol=1e-9)
         np.testing.assert_allclose(
-            got["factor"], solo["factor"], atol=1e-9
+            got["factor"], full["factor"], atol=1e-9
         )
+        np.testing.assert_allclose(got["score"], full["score"], atol=1e-9)
 
 
 def test_function_score_many_rejects_general_forms(spark, store, corpus_pd):

@@ -1,5 +1,5 @@
-"""The driver route of search_index / search_many (plans/search.py module
-docstring) against the Spark route.
+"""The driver route of search_index / search_many / search_bm25f
+(plans/search.py module docstring) against the Spark route.
 
 At test sizes every index is under ``index.LOCAL_MAX_BYTES``, so a plain
 call takes the driver route; setting the cap to 0 forces the Spark plan.
@@ -20,7 +20,7 @@ from fastcatsearch3_spark import index as index_mod
 from fastcatsearch3_spark.collection import Collection
 from fastcatsearch3_spark.config import EngineConfig
 from fastcatsearch3_spark.operators.ingest import normalize_corpus
-from fastcatsearch3_spark.plans.search import Bm25fQuery
+from fastcatsearch3_spark.plans.search import Bm25fQuery, search_bm25f
 from fixtures.gen_corpus import gen_corpus, gen_corpus_delta
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "perfbench"))
@@ -116,6 +116,13 @@ def test_routes_agree(spark, states, state, monkeypatch):
     batch["bm25f"] = Bm25fQuery(queries["and2"], {"content": 1.0, "path": 0.5})
     rows = both(lambda: col.search_many(batch, k=10))
     assert {r[0] for r in rows} >= {"ph", "bm25f"}
+
+    # search_bm25f: one Bm25fQuery of search_many, so it has the driver
+    # route too
+    fq = batch["bm25f"]
+    assert both(
+        lambda: search_bm25f(spark, col.store, fq.text, fq.field_weights, k=10)
+    )
 
 
 def test_cache_hit_collect_starts_no_job(spark, states, tmp_path):

@@ -309,21 +309,19 @@ def test_bm25f_differs_from_qf_on_crafted_docs(spark, tmp_path):
     assert f["doc_id"].tolist()[0] == 1
 
 
-def test_bm25f_batch_matches_single(spark, store):
-    """search_many with a Bm25fQuery spec scores identically to the
-    dedicated search_bm25f path (and coexists with lexical queries in
-    the same batch/kernel pass)."""
+def test_bm25f_batch_matches_single(spark, store, docs_pd):
+    """search_many with a Bm25fQuery spec scores like the independent
+    pandas BM25F (the formula search_bm25f is pinned to above), and
+    coexists with lexical queries in the same batch/kernel pass."""
     import numpy as np
 
     from fastcatsearch3_spark.plans.query import ParsedQuery
-    from fastcatsearch3_spark.plans.search import (
-        Bm25fQuery,
-        search_bm25f,
-        search_many,
-    )
+    from fastcatsearch3_spark.plans.search import Bm25fQuery, search_many
 
     weights = {"content": 1.0, "repo": 2.0}
-    single = search_bm25f(spark, store, "spark src1", weights, k=10).toPandas()
+    want = _bm25f_expected(
+        docs_pd, ["spark", "src1"], weights, CFG.k1, CFG.b
+    )[:10]
     batch = search_many(
         spark,
         store,
@@ -334,8 +332,8 @@ def test_bm25f_batch_matches_single(spark, store):
         k=10,
     ).toPandas()
     got = batch[batch["query_id"] == "f"].reset_index(drop=True)
-    assert got["doc_id"].tolist() == single["doc_id"].tolist()
+    assert got["doc_id"].tolist() == [d for d, _ in want]
     np.testing.assert_allclose(
-        got["score"].to_numpy(), single["score"].to_numpy(), atol=1e-9
+        got["score"].to_numpy(), [s for _, s in want], rtol=0, atol=1e-9
     )
     assert (batch["query_id"] == "lex").sum() == 10

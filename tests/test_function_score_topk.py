@@ -10,6 +10,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 
 from fastcatsearch3_spark.config import EngineConfig
 from fastcatsearch3_spark.index import IndexStore
@@ -187,3 +189,80 @@ def test_unsupported_forms_raise(spark, store, fields_pd):
             spark, store, spark.createDataFrame(fields_pd), "pop", "g",
             modifier="gauss",
         )
+
+
+# Per doc: a raw field value, None (null), NaN, or ABSENT (no fields_df
+# row at all). ROWS has 9 docs; doc 6 never matches the query.
+ABSENT = "absent"
+_value = st.one_of(
+    st.none(),
+    st.just(float("nan")),
+    st.just(ABSENT),
+    st.floats(min_value=-50.0, max_value=5000.0, allow_nan=False),
+)
+
+
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(
+    values=st.lists(_value, min_size=len(ROWS), max_size=len(ROWS)),
+    missing=st.one_of(st.none(), st.floats(min_value=-5.0, max_value=100.0)),
+    modifier=st.sampled_from(["ln1p", "sqrt", "none"]),
+    boost_mode=st.sampled_from(["multiply", "sum"]),
+)
+# the cases that diverged when absent docs got the neutral factor and
+# negative factors were clamped to 0
+@example(
+    values=[ABSENT, 3.0, ABSENT, None, 8.0, 1.0, ABSENT, 2.0, float("nan")],
+    missing=50.0, modifier="ln1p", boost_mode="multiply",
+)
+@example(
+    values=[1.0, ABSENT, 2.0, 4.0, 8.0, 1.0, 5.0, None, 3.0],
+    missing=0.0, modifier="none", boost_mode="sum",
+)
+@example(
+    values=[1.0, -4.0, 2.0, 4.0, 8.0, 1.0, 5.0, 7.0, 3.0],
+    missing=None, modifier="none", boost_mode="multiply",
+)
+def test_topk_agrees_with_function_score(
+    spark, store, values, missing, modifier, boost_mode
+):
+    """function_score_topk returns function_score's rows for any field
+    column: absent docs, nulls and NaN follow the ``missing`` policy on
+    both paths, and a factor that would be negative is refused by the
+    artifact (function_score keeps it; pruning cannot)."""
+    from fastcatsearch3_spark.plans.query import ParsedQuery
+
+    present = [
+        (doc, v) for (doc, _, _), v in zip(ROWS, values) if v is not ABSENT
+    ]
+    # an explicit schema keeps None a null and NaN a NaN
+    fields = spark.createDataFrame(present, "doc_id long, pop double")
+    negative = modifier == "none" and (
+        (missing is not None and missing < 0)
+        or any(v is not None and v < 0 for _, v in present)
+    )
+    if negative:
+        with pytest.raises(ValueError, match="function_score"):
+            build_factor_artifact(
+                spark, store, fields, "pop", "hyp", modifier=modifier,
+                missing=missing,
+            )
+        return
+    build_factor_artifact(
+        spark, store, fields, "pop", "hyp", modifier=modifier, missing=missing
+    )
+    pq = ParsedQuery(terms=["spark", "merge"], op="OR")
+    pruned = function_score_topk(
+        spark, store, pq, "hyp", k=5, boost_mode=boost_mode
+    ).toPandas()
+    full = function_score(
+        spark, store, pq, fields, "pop", k=5, modifier=modifier,
+        boost_mode=boost_mode, missing=missing,
+    ).toPandas()
+    assert list(pruned["doc_id"]) == list(full["doc_id"])
+    np.testing.assert_allclose(pruned["factor"], full["factor"], atol=1e-9)
+    np.testing.assert_allclose(pruned["final"], full["final"], atol=1e-9)

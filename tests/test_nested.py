@@ -196,6 +196,8 @@ NESTED_QUERIES = [
     "table (vector OR stream OR merge)",
     "(vector stream table ~2)",
     "(spark OR flink) (merge OR segment)",
+    # a term both a scoring leaf and a NOT leaf
+    "(spark merge) OR (vector -spark)",
 ]
 
 
@@ -212,6 +214,25 @@ def test_nested_search_matches_bruteforce(spark, store, corpus_stats, qtext):
         np.array([want[d] for d in got_sorted["doc_id"]]),
         rtol=1e-9,
     )
+
+
+def test_nested_batch_matches_bruteforce(spark, store, corpus_stats):
+    """search_many scores every tree of one batch like the brute force."""
+    from fastcatsearch3_spark.plans.search import search_many
+
+    got = search_many(
+        spark, store, {q: parse_query(q, CFG) for q in NESTED_QUERIES},
+        k=100_000,
+    ).toPandas()
+    for qtext in NESTED_QUERIES:
+        want = _brute_scores(parse_query(qtext, CFG).tree, corpus_stats)
+        g = got[got["query_id"] == qtext].sort_values("doc_id")
+        assert set(g["doc_id"]) == set(want), qtext
+        np.testing.assert_allclose(
+            g["score"].to_numpy(),
+            np.array([want[d] for d in g["doc_id"]]),
+            rtol=1e-9,
+        )
 
 
 def test_nested_topk_ordering(spark, store, corpus_stats):
