@@ -142,7 +142,9 @@ class Collection:
             self._cache.popitem(last=False)
         if self._shared is not None:
             self._shared.put(repr(key), key[0], out.schema.json(), rows)
-        return local_frame(self.spark, out.schema, rows)
+        # a driver-route result already is a local frame; a Spark-route
+        # plan is rebuilt from its rows so that it never runs twice
+        return out if out.isLocal() else local_frame(self.spark, out.schema, rows)
 
     def search_many(self, queries: dict, k: int = 10, **kw) -> DataFrame:
         from fastcatsearch3_spark.plans.search import search_many

@@ -40,6 +40,32 @@ Having per-block byte offsets + first-docno + maxima in the meta stream
 means a scorer can establish a threshold and then decode ONLY the blocks
 whose upper bound is competitive — true block skipping, not just score
 skipping.
+
+Two APIs, one wire format. The query kernels read one term at a time with
+``decode_meta`` / ``decode_postings`` / ``decode_blocks`` (a cached
+``PostingMeta`` per term). The write path — the build's pack stage,
+appends and compaction — works on many posting lists at once, so it uses
+the batched codec, which crosses into numpy once per batch instead of
+once per list:
+
+  * ``encode_postings_many(run_lens, docnos, tfs, dls, block_size)`` —
+    the lists are consecutive runs of flat arrays; one ``vbyte_encode``
+    for all block data and one for all meta streams, interleaved per run
+    with ragged gathers. Returns one blob per run.
+  * ``decode_postings_many(blobs)`` → (row, docnos, tfs, dls) — the blobs
+    are joined and decoded by one ``vbyte_decode``; every blob ends on a
+    terminal byte, so a blob's first value is found by counting the
+    terminal bytes before its offset.
+  * ``encode_positions_many`` / ``split_positions_many`` — the positions
+    sidecar, on one byte buffer with per-entry (start, len) arrays.
+
+The batched functions produce the same bytes as the one-list ones
+(``encode_postings``, ``encode_positions_blob`` and
+``split_positions_bytes`` are one-list calls of them;
+tests/test_vbyte.py pins the bytes). Each batched call cuts its input at
+list boundaries into slices of at most ``BATCH_ENTRIES`` entries
+(decode: blob bytes), so its temporaries stay bounded on a large Spark
+partition.
 """
 
 from __future__ import annotations
@@ -99,6 +125,12 @@ def vbyte_decode(buf: np.ndarray | bytes) -> np.ndarray:
     b = np.frombuffer(buf, dtype=np.uint8) if not isinstance(buf, np.ndarray) else buf
     if b.size == 0:
         return np.zeros(0, dtype=np.uint64)
+    return _vbyte_decode_ends(b)[0]
+
+
+def _vbyte_decode_ends(b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``vbyte_decode`` of a non-empty uint8 array, plus the index of each
+    value's terminal byte."""
     is_last = (b & _CONT) == 0
     ends = np.nonzero(is_last)[0]
     starts = np.empty_like(ends)
@@ -107,7 +139,7 @@ def vbyte_decode(buf: np.ndarray | bytes) -> np.ndarray:
     lens = ends - starts + 1
     pos_in_val = np.arange(b.size, dtype=np.int64) - np.repeat(starts, lens)
     contrib = (b.astype(np.uint64) & _MASK7) << (pos_in_val.astype(np.uint64) * _U7)
-    return np.add.reduceat(contrib, starts)
+    return np.add.reduceat(contrib, starts), ends
 
 
 def vbyte_decode_prefix(buf: np.ndarray, nvals: int) -> tuple[np.ndarray, int]:
@@ -197,53 +229,10 @@ def encode_postings(
 ) -> bytes:
     """Pack one term's (docno, tf, dl) arrays — docnos strictly increasing —
     into the block-addressable blob described in the module docstring."""
-    n = int(docnos.size)
+    n = int(np.asarray(docnos).size)
     if n == 0:
         raise ValueError("empty posting list")
-    d = np.ascontiguousarray(docnos, dtype=np.uint64)
-    t = np.ascontiguousarray(tfs, dtype=np.uint64)
-    dl = np.ascontiguousarray(dls, dtype=np.uint64)
-    bs = int(block_size)
-    starts = np.arange(0, n, bs, dtype=np.int64)
-    nb = starts.size
-    cnts = np.minimum(starts + bs, n) - starts
-
-    block_first = d[starts]
-    block_maxtf = np.maximum.reduceat(t, starts)
-    block_mindl = np.minimum.reduceat(dl, starts)
-
-    gaps = np.diff(d)  # gaps[j] = d[j+1] - d[j]
-    # per block: deltas for entries 1..cnt-1 are gaps[start .. start+cnt-2]
-    delta_idx = ragged_ranges(starts, cnts - 1)
-    tf_idx = ragged_ranges(starts, cnts)
-    # interleave per block: [deltas_i, tfs_i, dls_i] — build a gather order
-    nvals_per_block = 3 * cnts - 1
-    vstarts = np.concatenate(([0], np.cumsum(nvals_per_block)[:-1]))
-    V = np.empty(int(nvals_per_block.sum()), dtype=np.uint64)
-    dpos = ragged_ranges(vstarts, cnts - 1)
-    tpos = ragged_ranges(vstarts + (cnts - 1), cnts)
-    lpos = ragged_ranges(vstarts + (2 * cnts - 1), cnts)
-    V[dpos] = gaps[delta_idx]
-    V[tpos] = t[tf_idx]
-    V[lpos] = dl[tf_idx]
-
-    data, lens = vbyte_encode(V, return_lens=True)
-    block_bytes = segment_sums(lens, vstarts)
-
-    bf_delta = np.empty(nb, dtype=np.uint64)
-    bf_delta[0] = block_first[0]
-    bf_delta[1:] = block_first[1:] - block_first[:-1]
-    meta_vals = np.concatenate(
-        [
-            np.array([n, nb, bs, d[-1]], dtype=np.uint64),
-            bf_delta,
-            block_maxtf,
-            block_mindl,
-            block_bytes.astype(np.uint64),
-        ]
-    )
-    meta = vbyte_encode(meta_vals)
-    return meta.tobytes() + data.tobytes()
+    return encode_postings_many(np.array([n]), docnos, tfs, dls, block_size)[0]
 
 
 def decode_meta(blob: bytes | np.ndarray) -> PostingMeta:
@@ -317,17 +306,10 @@ def encode_positions_blob(
 ) -> bytes:
     """Assemble one term's positions blob from per-entry already-encoded
     position byte runs (object array of bytes, in docno order)."""
-    n = entry_pos_bytes.size
-    lens = np.fromiter((len(b) for b in entry_pos_bytes), np.int64, count=n)
-    starts = np.arange(0, n, block_size, dtype=np.int64)
-    block_bytes = segment_sums(lens, starts)
-    header = vbyte_encode(
-        np.concatenate(
-            [np.array([starts.size], dtype=np.uint64),
-             block_bytes.astype(np.uint64)]
-        )
-    )
-    return header.tobytes() + b"".join(entry_pos_bytes)
+    buf, starts, lens = join_bytes(entry_pos_bytes)
+    return encode_positions_many(
+        np.array([lens.size]), buf, starts, lens, block_size
+    )[0]
 
 
 def decode_positions_blob(
@@ -356,21 +338,11 @@ def split_positions_bytes(
 ) -> list[bytes]:
     """Slice a positions blob back into its per-entry encoded byte runs
     (used by compaction: within-doc position gaps are docno-independent,
-    so re-pack reuses the bytes verbatim). Vectorized boundary scan."""
-    b = np.frombuffer(blob, dtype=np.uint8) if not isinstance(blob, np.ndarray) else blob
-    head, consumed = vbyte_decode_prefix(b, 1)
-    nb = int(head[0])
-    _, skip = vbyte_decode_prefix(b[consumed:], nb)
-    data = b[consumed + skip:]
-    tfs = tfs.astype(np.int64)
-    if data.size == 0:
-        return [b""] * tfs.size
-    val_ends = np.nonzero((data & _CONT) == 0)[0]  # end byte of each value
-    entry_last_val = np.cumsum(tfs) - 1
-    entry_byte_ends = val_ends[entry_last_val] + 1
-    entry_byte_starts = np.concatenate(([0], entry_byte_ends[:-1]))
-    raw = data.tobytes()
-    return [raw[s:e] for s, e in zip(entry_byte_starts, entry_byte_ends)]
+    so re-pack reuses the bytes verbatim)."""
+    blob = blob.tobytes() if isinstance(blob, np.ndarray) else bytes(blob)
+    buf, starts, lens = split_positions_many([blob], tfs, np.array([len(tfs)]))
+    raw = buf.tobytes()
+    return [raw[s : s + n] for s, n in zip(starts.tolist(), lens.tolist())]
 
 
 def decode_blocks(
@@ -403,3 +375,222 @@ def decode_blocks(
         np.concatenate(tf_parts),
         np.concatenate(dl_parts),
     )
+
+
+# ---------------------------------------------------------------------------
+# Batched codec (module docstring): many posting lists per numpy pass.
+# Lists are runs over flat arrays, ``run_lens[r]`` entries each, in order.
+# A list longer than BATCH_ENTRIES is a slice of its own.
+# ---------------------------------------------------------------------------
+
+BATCH_ENTRIES = 1 << 16
+
+
+def _starts(counts: np.ndarray) -> np.ndarray:
+    """Exclusive prefix sum: where each run of ``counts`` begins."""
+    out = np.zeros(counts.size, dtype=np.int64)
+    np.cumsum(counts[:-1], out=out[1:])
+    return out
+
+
+def _slices(sizes: np.ndarray, run_lens: np.ndarray | None = None):
+    """Cut the lists into [lo, hi) slices whose ``sizes`` sum to at most
+    BATCH_ENTRIES (a list over it is a slice of its own). Yields (lo, hi,
+    e0, e1): [e0, e1) is the slice's entry range given ``run_lens``."""
+    cs = np.cumsum(sizes)
+    ecs = np.concatenate(([0], np.cumsum(sizes if run_lens is None else run_lens)))
+    lo, base = 0, 0
+    while lo < sizes.size:
+        hi = max(int(np.searchsorted(cs, base + BATCH_ENTRIES, side="right")), lo + 1)
+        yield lo, hi, int(ecs[lo]), int(ecs[hi])
+        lo, base = hi, int(cs[hi - 1])
+
+
+def join_bytes(parts) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Byte strings → (one uint8 buffer, start and length of each)."""
+    lens = np.fromiter(map(len, parts), np.int64, count=len(parts))
+    buf = np.frombuffer(b"".join(parts), dtype=np.uint8)
+    return buf, _starts(lens), lens
+
+
+def _blocks(run_lens: np.ndarray, bs: int):
+    """Block layout of runs: per run nb; per block its run, index within
+    the run, first entry and entry count; per run its first block."""
+    nb = (run_lens + bs - 1) // bs
+    blk_run = np.repeat(np.arange(run_lens.size), nb)
+    first_blk = _starts(nb)
+    j = np.arange(blk_run.size, dtype=np.int64) - first_blk[blk_run]
+    bstart = _starts(run_lens)[blk_run] + j * bs
+    cnt = np.minimum(bs, run_lens[blk_run] - j * bs)
+    return nb, blk_run, j, bstart, cnt, first_blk
+
+
+def _interleave(a, a_lens, b, b_lens) -> list[bytes]:
+    """Per run r: ``a``'s r-th byte run, then ``b``'s, as one bytes."""
+    starts = np.stack([_starts(a_lens), a.size + _starts(b_lens)], axis=1)
+    counts = np.stack([a_lens, b_lens], axis=1)
+    raw = np.concatenate([a, b])[
+        ragged_ranges(starts.ravel(), counts.ravel())
+    ].tobytes()
+    ends = np.cumsum(a_lens + b_lens).tolist()
+    return [raw[s:e] for s, e in zip([0] + ends[:-1], ends)]
+
+
+def encode_postings_many(
+    run_lens: np.ndarray,
+    docnos: np.ndarray,
+    tfs: np.ndarray,
+    dls: np.ndarray,
+    block_size: int = 128,
+) -> list[bytes]:
+    """``encode_postings`` of every run: list r is entries
+    ``[sum(run_lens[:r]), sum(run_lens[:r+1]))`` of the flat arrays, its
+    docnos strictly increasing. Returns one blob per run."""
+    run_lens = np.asarray(run_lens, dtype=np.int64)
+    d = np.ascontiguousarray(docnos, dtype=np.uint64)
+    t = np.ascontiguousarray(tfs, dtype=np.uint64)
+    dl = np.ascontiguousarray(dls, dtype=np.uint64)
+    out: list[bytes] = []
+    for lo, hi, e0, e1 in _slices(run_lens):
+        out += _encode_slice(
+            run_lens[lo:hi], d[e0:e1], t[e0:e1], dl[e0:e1], int(block_size)
+        )
+    return out
+
+
+def _encode_slice(run_lens, d, t, dl, bs: int) -> list[bytes]:
+    nb, blk_run, j, bstart, cnt, first_blk = _blocks(run_lens, bs)
+    # data: per block one vbyte run [deltas (cnt-1), tfs (cnt), dls (cnt)]
+    vstarts = _starts(3 * cnt - 1)
+    V = np.empty(int((3 * cnt - 1).sum()), dtype=np.uint64)
+    V[ragged_ranges(vstarts, cnt - 1)] = np.diff(d)[ragged_ranges(bstart, cnt - 1)]
+    V[ragged_ranges(vstarts + cnt - 1, cnt)] = t  # blocks tile the entries
+    V[ragged_ranges(vstarts + 2 * cnt - 1, cnt)] = dl
+    data, lens = vbyte_encode(V, return_lens=True)
+    block_bytes = segment_sums(lens, vstarts)
+
+    # meta: per run [n, nb, bs, last, bf_delta[nb], maxtf[nb], mindl[nb],
+    # block_bytes[nb]]
+    block_first = d[bstart]
+    bf_delta = block_first.copy()
+    bf_delta[1:] -= block_first[:-1]
+    bf_delta[first_blk] = block_first[first_blk]
+    mlen = 4 + 4 * nb
+    mstart = _starts(mlen)
+    M = np.empty(int(mlen.sum()), dtype=np.uint64)
+    M[mstart] = run_lens
+    M[mstart + 1] = nb
+    M[mstart + 2] = bs
+    M[mstart + 3] = d[_starts(run_lens) + run_lens - 1]
+    pos, stride = mstart[blk_run] + 4 + j, nb[blk_run]
+    M[pos] = bf_delta
+    M[pos + stride] = np.maximum.reduceat(t, bstart)
+    M[pos + 2 * stride] = np.minimum.reduceat(dl, bstart)
+    M[pos + 3 * stride] = block_bytes
+    meta, mlens = vbyte_encode(M, return_lens=True)
+    return _interleave(
+        meta, segment_sums(mlens, mstart), data, segment_sums(block_bytes, first_blk)
+    )
+
+
+def decode_postings_many(
+    blobs,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """``decode_postings`` of every blob in a sequence → (row, docnos,
+    tfs, dls): the entries of all blobs in order, ``row`` = the index of
+    each entry's blob (int64; the rest uint64)."""
+    blobs = list(blobs)
+    parts: list[tuple] = []
+    sizes = np.fromiter(map(len, blobs), np.int64, count=len(blobs))
+    for lo, hi, _, _ in _slices(sizes):
+        row, d, t, dl = _decode_slice(blobs[lo:hi])
+        parts.append((row + lo, d, t, dl))
+    if not parts:
+        z = np.zeros(0, dtype=np.uint64)
+        return np.zeros(0, dtype=np.int64), z, z.copy(), z.copy()
+    return tuple(np.concatenate(c) for c in zip(*parts))
+
+
+def _decode_slice(blobs):
+    buf, offs, _ = join_bytes(blobs)
+    vals, ends = _vbyte_decode_ends(buf)
+    # every blob ends on a terminal byte, so its first value's index is the
+    # count of terminal bytes before its offset
+    v0 = np.searchsorted(ends, offs)
+    n, nb, bs = (vals[v0 + i].astype(np.int64) for i in range(3))
+    blk_run = np.repeat(np.arange(offs.size), nb)
+    first_blk = _starts(nb)[blk_run]
+    j = np.arange(blk_run.size, dtype=np.int64) - first_blk
+    bsb, nbb = bs[blk_run], nb[blk_run]
+    cnt = np.where(j == nbb - 1, n[blk_run] - bsb * (nbb - 1), bsb)
+    bf_delta = vals[v0[blk_run] + 4 + j]
+    cs = np.cumsum(bf_delta)  # reset per blob: block_first
+    block_first = cs - (cs[first_blk] - bf_delta[first_blk])
+    g = _starts(3 * cnt - 1)
+    vs = (v0 + 4 + 4 * nb)[blk_run] + g - g[first_blk]
+    tfs = vals[ragged_ranges(vs + cnt - 1, cnt)]
+    dls = vals[ragged_ranges(vs + 2 * cnt - 1, cnt)]
+    # docnos: block_first at each block's first entry, gaps after it, then
+    # a cumsum reset per block
+    estart = _starts(cnt)
+    full = np.empty(int(cnt.sum()), dtype=np.uint64)
+    full[ragged_ranges(estart + 1, cnt - 1)] = vals[ragged_ranges(vs, cnt - 1)]
+    full[estart] = block_first
+    acc = np.cumsum(full)
+    docnos = acc - np.repeat(acc[estart] - block_first, cnt)
+    return np.repeat(np.arange(offs.size), n), docnos, tfs, dls
+
+
+def encode_positions_many(
+    run_lens: np.ndarray,
+    buf: np.ndarray,
+    starts: np.ndarray,
+    lens: np.ndarray,
+    block_size: int,
+) -> list[bytes]:
+    """``encode_positions_blob`` of every run: entry e's encoded position
+    run is ``buf[starts[e] : starts[e] + lens[e]]``, entries in run order.
+    Returns one blob per run."""
+    run_lens = np.asarray(run_lens, dtype=np.int64)
+    out: list[bytes] = []
+    for lo, hi, e0, e1 in _slices(run_lens):
+        el = lens[e0:e1]
+        nb, blk_run, j, bstart, _, first_blk = _blocks(run_lens[lo:hi], int(block_size))
+        # header per run: [nb, block_bytes[nb]]
+        hstart = _starts(1 + nb)
+        H = np.empty(int((1 + nb).sum()), dtype=np.uint64)
+        H[hstart] = nb
+        H[hstart[blk_run] + 1 + j] = segment_sums(el, bstart)
+        head, hlens = vbyte_encode(H, return_lens=True)
+        data = buf[ragged_ranges(starts[e0:e1], el)]
+        out += _interleave(
+            head, segment_sums(hlens, hstart),
+            data, segment_sums(el, _starts(run_lens[lo:hi])),
+        )
+    return out
+
+
+def split_positions_many(
+    blobs, tfs: np.ndarray, run_lens: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``split_positions_bytes`` of every blob: blob r holds ``run_lens[r]``
+    entries, whose tfs are the matching run of ``tfs``. Returns (buf,
+    starts, lens): entry e's encoded position run is
+    ``buf[starts[e] : starts[e] + lens[e]]``."""
+    run_lens = np.asarray(run_lens, dtype=np.int64)
+    tfs = np.asarray(tfs).astype(np.int64)
+    buf, offs, sizes = join_bytes(blobs)
+    starts = np.empty(tfs.size, dtype=np.int64)
+    ends = np.empty(tfs.size, dtype=np.int64)
+    for lo, hi, e0, e1 in _slices(sizes, run_lens):
+        b1 = int(offs[hi - 1] + sizes[hi - 1])
+        term = offs[lo] + np.flatnonzero(buf[offs[lo] : b1] < _CONT)  # value ends
+        rl, t = run_lens[lo:hi], tfs[e0:e1]
+        row, rs = np.repeat(np.arange(hi - lo), rl), _starts(rl)
+        # a blob's last sum(tf) values are its entries' positions, in order
+        vend = np.searchsorted(term, offs[lo:hi] + sizes[lo:hi])
+        within = _starts(t)
+        first = (vend - segment_sums(t, rs))[row] + within - within[rs][row]
+        starts[e0:e1] = term[first - 1] + 1
+        ends[e0:e1] = term[first + t - 1] + 1
+    return buf, starts, ends - starts

@@ -60,8 +60,9 @@ from fastcatsearch3_spark import schemas
 from fastcatsearch3_spark.config import EngineConfig
 from fastcatsearch3_spark.functions.analyzer import get_analyzer, tokens_string_udf
 from fastcatsearch3_spark.functions.vbyte import (
-    encode_positions_blob,
-    encode_postings,
+    encode_positions_many,
+    encode_postings_many,
+    join_bytes,
 )
 
 
@@ -413,41 +414,25 @@ def _pack_frame(pdf: pd.DataFrame, block_size: int, combine: bool) -> pd.DataFra
         key, dn, dl = key[gstart], dn[gstart], dl[gstart]
     else:
         tf = pdf["tf"].to_numpy(np.int64)[order]
-    pos_arr = pdf["pos"].to_numpy(object)[order] if has_pos else None
     # (shard, term) runs over the combined (docno, tf) rows
     trun = np.empty(len(key), dtype=bool)
     trun[0] = True
     trun[1:] = key[1:] != key[:-1]
     starts = np.nonzero(trun)[0]
-    ends = np.append(starts[1:], len(key))
+    run_lens = np.diff(np.append(starts, len(key)))
     uniq_arr = np.asarray(uniq, dtype=object)
-    out_shard = (key[starts] // nterm).astype(np.int32)
-    out_terms = uniq_arr[(key[starts] % nterm).astype(np.int64)]
-    out_df, out_cf, out_blob, out_pos = [], [], [], []
-    for s, e in zip(starts, ends):
-        out_df.append(e - s)
-        out_cf.append(int(tf[s:e].sum()))
-        out_blob.append(
-            encode_postings(
-                dn[s:e].astype(np.uint64),
-                tf[s:e].astype(np.uint64),
-                dl[s:e].astype(np.uint64),
-                block_size,
-            )
-        )
-        if has_pos:
-            out_pos.append(
-                encode_positions_blob(pos_arr[s:e], block_size)
-            )
     cols = {
-        "shard": out_shard,
-        "term": out_terms,
-        "df": np.asarray(out_df, dtype=np.int64),
-        "cf": np.asarray(out_cf, dtype=np.int64),
-        "postings": out_blob,
+        "shard": (key[starts] // nterm).astype(np.int32),
+        "term": uniq_arr[(key[starts] % nterm).astype(np.int64)],
+        "df": run_lens.astype(np.int64),
+        "cf": np.add.reduceat(tf, starts).astype(np.int64),
+        "postings": encode_postings_many(run_lens, dn, tf, dl, block_size),
     }
     if has_pos:
-        cols["positions"] = out_pos
+        pbuf, pstarts, plens = join_bytes(pdf["pos"].to_numpy(object)[order])
+        cols["positions"] = encode_positions_many(
+            run_lens, pbuf, pstarts, plens, block_size
+        )
     return pd.DataFrame(cols)
 
 

@@ -16,11 +16,15 @@ Operations:
   * run_incremental_stream — Structured Streaming over a parquet directory,
     Trigger.AvailableNow, foreachBatch(append_segment): restart-safe via the
     stream checkpoint + the build manifests (I-8).
-  * compact — ST-4: decode all live postings (vectorized VByte), drop
-    superseded/tombstoned docs, reassign dense docnos (rank by doc_id
-    within the shard), re-pack into a single fresh segment, swap
-    atomically. Its cost scales with live index size, not with
-    accumulated garbage.
+  * compact — ST-4: decode all live postings, drop superseded/tombstoned
+    docs, reassign dense docnos (rank by doc_id within the shard),
+    re-pack into a single fresh segment, swap atomically. Its cost
+    scales with live index size, not with accumulated garbage. Decode
+    (``_decode_iter``) and re-pack (``_pack_frame``) use the batched
+    posting codec (``functions/vbyte.py``): one numpy pass per input
+    frame, not one per posting list. The compaction manifest records
+    where the time went (``metrics.phases``: read_s, decode_s, pack_s,
+    write_s) and the posting entries written (``metrics.entries``).
 
 Routing: each write picks one of two executors by a fixed rule (the caps
 are constants in ``index``; there is no option). Both run the same
@@ -38,10 +42,10 @@ lexicon and stats (tests/test_write_route.py).
     (``make_tokenize_combine_stream``) and the pack kernel
     (``_pack_frame``); tombstones are the older segments' pyarrow docmap
     rows with the batch's pk_hash; the lexicon and stats.json come from
-    ``publish_lexicon_local``. A compaction under
-    ``index.LOCAL_COMPACT_MAX_BYTES`` runs on the driver with no Spark
-    job: live docmap = pyarrow docmap minus ``_denied_local``'s denied
-    set, then per shard ``_decode_iter``, the remap merge and
+    ``publish_lexicon_local``. A compaction of an index under
+    ``index.LOCAL_MAX_BYTES`` runs on the driver with no Spark job: live
+    docmap = pyarrow docmap minus ``_denied_local``'s denied set, then
+    per shard one batched ``_decode_iter``, the remap merge and one
     ``_pack_frame``. No thread or process pool is started.
   * Spark route — every other write: the distributed plans (window
     dedup, ``build_segment``, mapInPandas decode + shuffle re-pack,
@@ -82,7 +86,10 @@ from pyspark.sql import functions as F
 
 from fastcatsearch3_spark import schemas
 from fastcatsearch3_spark.config import EngineConfig
-from fastcatsearch3_spark.functions.vbyte import decode_postings
+from fastcatsearch3_spark.functions.vbyte import (
+    decode_postings_many,
+    split_positions_many,
+)
 from fastcatsearch3_spark.index import IndexStore
 from fastcatsearch3_spark.operators.build import (
     PACK_SCHEMA,
@@ -333,44 +340,32 @@ _DECODE_SCHEMA_POS = _DECODE_SCHEMA + ", pos binary"
 
 
 def _decode_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: packed posting rows → exploded posting entries.
-    Vectorized VByte decode per blob; Python loops only over terms.
+    """mapInPandas kernel: packed posting rows → exploded posting entries,
+    one batched VByte decode per input frame (``decode_postings_many``).
 
     When the index stores positions, each entry also carries its encoded
     position run (``pos``): within-doc position gaps are docno-independent,
     so compaction re-packs the bytes verbatim — no positions re-encode."""
-    from fastcatsearch3_spark.functions.vbyte import split_positions_bytes
-
     for pdf in batches:
         if len(pdf) == 0:
             continue
-        has_pos = "positions" in pdf.columns
-        pos_col = pdf["positions"] if has_pos else [None] * len(pdf)
-        segs, shards, terms, docnos, tfs, dls, poss = [], [], [], [], [], [], []
-        for seg, shard, term, blob, pblob in zip(
-            pdf["segment_id"], pdf["shard"], pdf["term"], pdf["postings"],
-            pos_col,
-        ):
-            d, t, l = decode_postings(bytes(blob))
-            n = d.size
-            segs.append(np.full(n, seg, dtype=np.int32))
-            shards.append(np.full(n, shard, dtype=np.int32))
-            terms.extend([term] * n)
-            docnos.append(d.astype(np.int64))
-            tfs.append(t.astype(np.int64))
-            dls.append(l.astype(np.int64))
-            if has_pos:
-                poss.extend(split_positions_bytes(bytes(pblob), t))
+        row, d, t, l = decode_postings_many(pdf["postings"].tolist())
         cols = {
-            "segment_id": np.concatenate(segs),
-            "shard": np.concatenate(shards),
-            "term": terms,
-            "docno": np.concatenate(docnos),
-            "tf": np.concatenate(tfs),
-            "dl": np.concatenate(dls),
+            "segment_id": pdf["segment_id"].to_numpy(np.int32)[row],
+            "shard": pdf["shard"].to_numpy(np.int32)[row],
+            "term": pdf["term"].to_numpy(object)[row],
+            "docno": d.astype(np.int64),
+            "tf": t.astype(np.int64),
+            "dl": l.astype(np.int64),
         }
-        if has_pos:
-            cols["pos"] = poss
+        if "positions" in pdf.columns:
+            buf, starts, lens = split_positions_many(
+                pdf["positions"].tolist(), t, np.bincount(row, minlength=len(pdf))
+            )
+            raw = buf.tobytes()
+            cols["pos"] = [
+                raw[s : s + n] for s, n in zip(starts.tolist(), lens.tolist())
+            ]
         yield pd.DataFrame(cols)
 
 
@@ -395,8 +390,10 @@ def compact(
     local = totals is not None
     if not local:
         totals = _compact_spark(spark, store, cfg)
-    n_docs, total_tokens = totals
+    n_docs, total_tokens, metrics = totals
+    t_swap = time.monotonic()
     _swap_compacted(root)
+    metrics["phases"]["write_s"] += time.monotonic() - t_swap
 
     elapsed = time.monotonic() - t0
     manifest = {
@@ -406,7 +403,16 @@ def compact(
         "total_tokens": int(total_tokens or 0),
         "config": cfg.to_dict(),
         "lineage": {"kind": "compaction", "compacted_from": old_segments},
-        "metrics": {"elapsed_sec": round(elapsed, 3)},
+        "metrics": {
+            "elapsed_sec": round(elapsed, 3),
+            # where the time went; on the Spark route decode and pack run
+            # inside the postings write job, so they are null there
+            "phases": {
+                k: None if v is None else round(v, 3)
+                for k, v in metrics["phases"].items()
+            },
+            "entries": int(metrics["entries"] or 0),
+        },
     }
     write_manifest(index_root, 0, manifest)
     if local:
@@ -418,9 +424,12 @@ def compact(
 
 def _compact_spark(
     spark: SparkSession, store: IndexStore, cfg: EngineConfig
-) -> tuple[int, int]:
+) -> tuple[int, int, dict]:
     """Compaction's Spark plan: writes the new segment under
-    ``.compact/``; returns (n_docs, total_tokens)."""
+    ``.compact/``; returns (n_docs, total_tokens, metrics)."""
+    from pyspark.sql import Observation
+
+    t0 = time.monotonic()
     dm_live = live_docmap(spark, store)
     new_assign = dm_live.withColumn(
         "nshard", F.pmod(F.xxhash64("doc_id"), F.lit(cfg.num_shards)).cast("int")
@@ -457,8 +466,10 @@ def _compact_spark(
     # adaptive: size each file's term bloom filter to its distinct terms;
     # unsized, parquet-mr writes its 1 MB maximum into every file, ~10x a
     # small compacted index (which then misses the driver read route)
+    obs = Observation("compact_postings")
     (
-        packed.write.mode("overwrite")
+        packed.observe(obs, F.sum("df").alias("entries"))
+        .write.mode("overwrite")
         .option("parquet.bloom.filter.enabled#term", "true")
         .option("parquet.bloom.filter.adaptive.enabled", "true")
         .parquet(str(tmp / "postings" / "segment_id=0"))
@@ -483,21 +494,30 @@ def _compact_spark(
         .agg(F.count("*").alias("n"), F.sum("dl").alias("toks"))
         .collect()[0]
     )
-    return stats_row["n"], stats_row["toks"]
+    phases = {
+        "read_s": None, "decode_s": None, "pack_s": None,
+        "write_s": time.monotonic() - t0,
+    }
+    return stats_row["n"], stats_row["toks"], {
+        "phases": phases, "entries": obs.get["entries"]
+    }
 
 
-def _compact_local(store: IndexStore, cfg: EngineConfig) -> tuple[int, int] | None:
+def _compact_local(
+    store: IndexStore, cfg: EngineConfig
+) -> tuple[int, int, dict] | None:
     """Compaction on the driver, with no Spark job: the live docmap is the
     pyarrow docmap minus ``_denied_local``'s denied set; ``ndocno`` is the
-    rank by doc_id within the shard; then per shard ``_decode_iter``,
-    the remap join and ``_pack_frame``, written under ``.compact/``.
-    Returns (n_docs, total_tokens), or None — the caller then runs the
-    Spark plan — unless every segment was built with ``cfg.num_shards``:
-    only then is the new shard, pmod(xxhash64(doc_id), num_shards), the
-    old one."""
+    rank by doc_id within the shard; then per shard one batched
+    ``_decode_iter``, the remap join and one ``_pack_frame``, written
+    under ``.compact/``. Returns (n_docs, total_tokens, metrics), or
+    None — the caller then runs the Spark plan — unless every segment
+    was built with ``cfg.num_shards``: only then is the new shard,
+    pmod(xxhash64(doc_id), num_shards), the old one."""
     manifests = [read_manifest(store.root, s) for s in store.segments()]
     if not all(m and m["config"]["num_shards"] == cfg.num_shards for m in manifests):
         return None
+    t0 = time.monotonic()
     dm = store.local_table("docmap")
     dead = store._denied_local(dm).assign(_dead=True)
     live = dm.merge(dead, on=["segment_id", "shard", "docno"], how="left")
@@ -508,16 +528,23 @@ def _compact_local(store: IndexStore, cfg: EngineConfig) -> tuple[int, int] | No
     post = store.local_table("postings")
     with_pos = "positions" in post.columns
     packs = [_PACK_EMPTY.assign(positions=None) if with_pos else _PACK_EMPTY]
+    phases = {"read_s": time.monotonic() - t0, "decode_s": 0.0, "pack_s": 0.0}
     for _, group in post.groupby("shard", sort=True):
-        for entries in _decode_iter(iter([group])):
-            rows = entries.merge(remap, on=["segment_id", "shard", "docno"])
-            rows["docno"] = rows["ndocno"]
-            packs.append(_pack_frame(rows, cfg.block_size, combine=False))
+        t = time.monotonic()
+        (entries,) = _decode_iter(iter([group]))
+        rows = entries.merge(remap, on=["segment_id", "shard", "docno"])
+        rows["docno"] = rows["ndocno"]
+        t_pack = time.monotonic()
+        packs.append(_pack_frame(rows, cfg.block_size, combine=False))
+        phases["decode_s"] += t_pack - t
+        phases["pack_s"] += time.monotonic() - t_pack
 
+    t = time.monotonic()
+    packed = pd.concat(packs, ignore_index=True)
     tmp = Path(store.root) / ".compact"
     shutil.rmtree(tmp, ignore_errors=True)
     write_parquet_local(
-        pd.concat(packs, ignore_index=True),
+        packed,
         schemas.POSTINGS_POS if with_pos else schemas.POSTINGS,
         tmp / "postings" / "segment_id=0",
     )
@@ -526,7 +553,10 @@ def _compact_local(store: IndexStore, cfg: EngineConfig) -> tuple[int, int] | No
         schemas.DOCMAP,
         tmp / "docmap" / "segment_id=0",
     )
-    return len(live), int(live["dl"].sum())
+    phases["write_s"] = time.monotonic() - t
+    return len(live), int(live["dl"].sum()), {
+        "phases": phases, "entries": int(packed["df"].sum())
+    }
 
 
 def _swap_compacted(root: Path) -> None:

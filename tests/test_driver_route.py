@@ -138,6 +138,33 @@ def test_cache_hit_collect_starts_no_job(spark, states, tmp_path):
     assert other.shared_hits == 1 and hit2 == first and jobs2 == []
 
 
+@pytest.mark.parametrize("route", ["driver", "spark"])
+def test_cache_miss_frame_is_built_once(spark, states, monkeypatch, route):
+    """A cache miss returns the rows search_index gives, as a frame whose
+    collect starts no Spark job: on the driver route search_index's own
+    local frame (one ``local_frame`` call per miss), on the Spark route
+    a local frame rebuilt from the collected rows."""
+    from fastcatsearch3_spark.plans import search as search_mod
+
+    _, roots = states
+    q = "index OR merge"
+    col = Collection(spark, roots["fresh"], CFG, cache_size=4)
+    plain = Collection(spark, roots["fresh"], CFG, cache_size=0)
+    built = []
+    real = search_mod.local_frame
+    with monkeypatch.context() as m:
+        if route == "spark":
+            m.setattr(index_mod, "LOCAL_MAX_BYTES", 0)
+        want = _rows(plain.search(q, k=5))
+        m.setattr(search_mod, "local_frame", lambda *a, **k: built.append(1) or real(*a, **k))
+        out = col.search(q, k=5)
+    assert col.cache_misses == 1 and want
+    assert len(built) == 1
+    rows, jobs = _jobs(spark, f"miss-{route}", lambda: _rows(out))
+    assert rows == want and jobs == []
+    assert _rows(col.search(q, k=5)) == want and col.cache_hits == 1
+
+
 def test_and_with_unindexed_term_starts_no_job(spark, states, monkeypatch):
     _, roots = states
     col = Collection(spark, roots["fresh"], CFG)

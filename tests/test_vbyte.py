@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
+import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -14,15 +17,25 @@ settings.register_profile(
 )
 settings.load_profile("vbyte")
 
+from fastcatsearch3_spark.functions import vbyte as V
 from fastcatsearch3_spark.functions.vbyte import (
     decode_blocks,
     decode_meta,
+    decode_positions_blob,
     decode_postings,
+    decode_postings_many,
+    encode_positions_blob,
+    encode_positions_many,
     encode_postings,
+    encode_postings_many,
+    join_bytes,
+    split_positions_bytes,
+    split_positions_many,
     vbyte_decode,
     vbyte_decode_prefix,
     vbyte_encode,
 )
+from fastcatsearch3_spark.operators.build import _pack_frame
 
 
 @given(
@@ -139,3 +152,164 @@ def test_single_entry():
     )
     d, t, dl = decode_postings(blob)
     assert d.tolist() == [42] and t.tolist() == [7] and dl.tolist() == [99]
+
+
+# ---------------------------------------------------------------------------
+# Wire format: pinned bytes, and the batched codec against the one-list one
+# ---------------------------------------------------------------------------
+
+def _golden_case(n: int, bs: int):
+    """Seeded lists: docno gaps up to 2^40, tf up to 2^20, dl up to 2^16
+    (half the gaps and tfs 1), and per-entry position runs of 1–5 values."""
+    rng = np.random.default_rng(n * 1000 + bs)
+    gaps = rng.integers(1, 2**40, size=n, endpoint=True, dtype=np.uint64)
+    gaps[rng.random(n) < 0.5] = 1
+    docnos = np.cumsum(gaps) - np.uint64(1)
+    tfs = rng.integers(1, 2**20, size=n, endpoint=True, dtype=np.uint64)
+    tfs[rng.random(n) < 0.5] = 1
+    dls = rng.integers(1, 2**16, size=n, endpoint=True, dtype=np.uint64)
+    ents = np.empty(n, dtype=object)
+    for e in range(n):
+        k = int(rng.integers(1, 6))
+        ents[e] = vbyte_encode(
+            rng.integers(0, 2**20, size=k, dtype=np.uint64)
+        ).tobytes()
+    return docnos, tfs, dls, ents
+
+
+# sha256 of (postings blob, positions blob), computed with the one-list
+# encoders before the batched codec existed
+_GOLDEN = {
+    (1, 64): ("42a2bfc129005cacf8d52b597a6f9ec9facae8c6bf568d1034a0b1b6a0e971a5", "25718a9918ee2e68380940fc217bc3953b300c85ca3bffcf5cc5360a9669f1fd"),
+    (1, 128): ("a128fe2b57abe1279044e68f09b67169ad9f11c776346f07262fb7f4621930c3", "6878df22c28f61eaf011f25866d14c4234efe853038273594aaff4b9f7c79d78"),
+    (127, 64): ("2ccb820fce46ee4b795ee92fcaad59c450c2afe1d8e41e189d09aaa6f69eb897", "cf0a3573e98aedddba688346c77df350489e906b8750f63b62a8bbb52912c252"),
+    (127, 128): ("ecc936a1f645d1e0ed7a97f7dc1765a19e06c92ec43881529ede4b5f16840263", "e5f472e0ffeef30bf7e2907010830bcf264de642d929527f0e22b617963bb11b"),
+    (128, 64): ("5a2441739ad6a5a2870bc6e174864c68e2fc10dbf142350cb0188e490942d2c1", "ca4d4cca71813304a5b57c831e7b5ebdfae2f19556262888e9cb905669d2c9e0"),
+    (128, 128): ("24e78936e7d8fd7436f3433e8b3144b2b0ee9cb94cac82ba1c9325861c315da1", "3d71104ce511dcd4306d05d6284e26d08b334b244ffeb6ee5642c0f8d269187e"),
+    (129, 64): ("c1704a60e5c87922c394bac12586a25aad7255a35bd71565178536fcdfc04ca0", "52971dfcaaf06730f0ba443f5609cdcb7fc8c88a2145cb4c7bab0aa6e1ba37fb"),
+    (129, 128): ("20b814d4746f4561363d398369f95a0061fc6dceb42df5873c9052ba774e6696", "cf22a87af36dbca36e84b32d0262fe1a2e67bfaccb1aa19877d165f6b3272c47"),
+    (1000, 64): ("5d2ac5094ab1e6415f6398eb589c8e031a4d711c59ad6be09ba6f68d607bae05", "c3cabac9bbd8b49d60dd27933f43ac551a07c405833acff0415ae66806168355"),
+    (1000, 128): ("a79a95f077a076400a0b1130c4fc5429cebc2bc4c1f60d5012e67424570ade28", "636e5f92ed24de7b3419bfb1b437b748aa5141a50a8787756280101ed44ba6ee"),
+}
+
+
+def test_posting_wire_format_golden():
+    for (n, bs), (want_post, want_pos) in _GOLDEN.items():
+        docnos, tfs, dls, ents = _golden_case(n, bs)
+        post = encode_postings(docnos, tfs, dls, bs)
+        pos = encode_positions_blob(ents, bs)
+        assert hashlib.sha256(post).hexdigest() == want_post, (n, bs)
+        assert hashlib.sha256(pos).hexdigest() == want_pos, (n, bs)
+
+
+@st.composite
+def posting_runs(draw):
+    """Several posting lists as flat arrays, plus per-entry position runs.
+    Hypothesis picks the list sizes and value widths, a seeded generator
+    the values (drawing thousands of integers one by one is slow)."""
+    run_lens = np.array(
+        draw(st.lists(st.integers(1, 300), min_size=1, max_size=6)), dtype=np.int64
+    )
+    gap_max, tf_max = draw(st.sampled_from([2, 2**7, 2**40])), draw(st.sampled_from([2, 2**20]))
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    docnos = np.concatenate([
+        np.cumsum(rng.integers(1, gap_max, size=n, endpoint=True, dtype=np.uint64))
+        for n in run_lens
+    ])
+    tfs = rng.integers(1, tf_max, size=docnos.size, endpoint=True, dtype=np.uint64)
+    dls = rng.integers(1, 2**16, size=docnos.size, endpoint=True, dtype=np.uint64)
+    ents = [
+        vbyte_encode(np.arange(int(t) % 5 + 1, dtype=np.uint64) * 7).tobytes()
+        for t in tfs
+    ]
+    return run_lens, docnos, tfs, dls, ents
+
+
+_SMALL_BATCH = st.sampled_from([None, 1, 7, 300])
+
+
+def _batch(monkeypatch, cap):
+    if cap is not None:
+        monkeypatch.setattr(V, "BATCH_ENTRIES", cap)
+
+
+@given(posting_runs(), st.sampled_from([4, 128]), _SMALL_BATCH)
+@settings(max_examples=25, deadline=None)
+def test_decode_postings_many_equals_per_blob(runs, block_size, cap):
+    run_lens, docnos, tfs, dls, _ = runs
+    starts = np.concatenate(([0], np.cumsum(run_lens)))
+    blobs = [
+        encode_postings(docnos[a:b], tfs[a:b], dls[a:b], block_size)
+        for a, b in zip(starts[:-1], starts[1:])
+    ]
+    with pytest.MonkeyPatch.context() as m:
+        _batch(m, cap)
+        row, d, t, l = decode_postings_many(blobs)
+    want = [decode_postings(b) for b in blobs]
+    np.testing.assert_array_equal(row, np.repeat(np.arange(len(blobs)), run_lens))
+    for got, i in ((d, 0), (t, 1), (l, 2)):
+        np.testing.assert_array_equal(got, np.concatenate([w[i] for w in want]))
+
+
+@given(posting_runs(), st.sampled_from([4, 128]), _SMALL_BATCH)
+@settings(max_examples=25, deadline=None)
+def test_encode_postings_many_round_trips(runs, block_size, cap):
+    run_lens, docnos, tfs, dls, _ = runs
+    with pytest.MonkeyPatch.context() as m:
+        _batch(m, cap)
+        blobs = encode_postings_many(run_lens, docnos, tfs, dls, block_size)
+    starts = np.concatenate(([0], np.cumsum(run_lens)))
+    assert len(blobs) == run_lens.size
+    for blob, a, b in zip(blobs, starts[:-1], starts[1:]):
+        d, t, l = decode_postings(blob)
+        np.testing.assert_array_equal(d, docnos[a:b])
+        np.testing.assert_array_equal(t, tfs[a:b])
+        np.testing.assert_array_equal(l, dls[a:b])
+        assert blob == encode_postings(docnos[a:b], tfs[a:b], dls[a:b], block_size)
+
+
+@given(posting_runs(), st.sampled_from([4, 128]), _SMALL_BATCH)
+@settings(max_examples=25, deadline=None)
+def test_batched_positions_equal_per_entry_path(runs, block_size, cap):
+    run_lens, _, tfs, _, ents = runs
+    pos_tfs = np.array([int(t) % 5 + 1 for t in tfs], dtype=np.uint64)
+    starts = np.concatenate(([0], np.cumsum(run_lens)))
+    buf, bstarts, blens = join_bytes(ents)
+    with pytest.MonkeyPatch.context() as m:
+        _batch(m, cap)
+        blobs = encode_positions_many(run_lens, buf, bstarts, blens, block_size)
+        sbuf, sstarts, slens = split_positions_many(blobs, pos_tfs, run_lens)
+    raw = sbuf.tobytes()
+    assert [raw[s : s + n] for s, n in zip(sstarts, slens)] == ents
+    for blob, a, b in zip(blobs, starts[:-1], starts[1:]):
+        one = np.array(ents[a:b] + [None], dtype=object)[:-1]
+        assert blob == encode_positions_blob(one, block_size)
+        assert split_positions_bytes(blob, pos_tfs[a:b]) == ents[a:b]
+        flat, _ = decode_positions_blob(blob, pos_tfs[a:b])
+        assert flat.size == int(pos_tfs[a:b].sum())
+
+
+@given(
+    st.lists(
+        st.tuples(
+            st.integers(0, 3), st.sampled_from(["a", "b", "c:d", "e"]),
+            st.integers(0, 300), st.integers(1, 9),
+        ),
+        min_size=1, max_size=400, unique_by=lambda r: r[:3],
+    ),
+    st.integers(1, 50),
+)
+@settings(max_examples=20, deadline=None)
+def test_pack_frame_same_under_a_small_batch_bound(rows, cap):
+    """One _pack_frame call cut at run boundaries packs the same rows."""
+    pdf = pd.DataFrame(rows, columns=["shard", "term", "docno", "tf"])
+    pdf["dl"] = pdf["docno"] % 17 + pdf["tf"]
+    pdf["pos"] = [
+        vbyte_encode(np.arange(t, dtype=np.uint64)).tobytes() for t in pdf["tf"]
+    ]
+    want = _pack_frame(pdf, 4, combine=False)
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(V, "BATCH_ENTRIES", cap)
+        got = _pack_frame(pdf, 4, combine=False)
+    pd.testing.assert_frame_equal(got, want)
+    assert want["df"].sum() == len(pdf)

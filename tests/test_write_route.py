@@ -16,6 +16,7 @@ import json
 import shutil
 from pathlib import Path
 
+import numpy as np
 import pandas as pd
 import pyarrow.dataset as pds
 import pytest
@@ -32,7 +33,6 @@ from tests.test_driver_route import BASE_N, CFG, _jobs, _queries, _rows
 
 def _spark_caps(m) -> None:
     m.setattr(index_mod, "LOCAL_MAX_BYTES", 0)
-    m.setattr(index_mod, "LOCAL_COMPACT_MAX_BYTES", 0)
 
 
 @pytest.fixture(scope="module")
@@ -163,7 +163,6 @@ def test_over_a_cap_takes_the_spark_route(spark, base, tmp_path, monkeypatch, ca
                 m.setattr(index_mod, "LOCAL_MAX_ROWS", 5)
             else:
                 m.setattr(index_mod, "LOCAL_MAX_BYTES", 1)
-                m.setattr(index_mod, "LOCAL_COMPACT_MAX_BYTES", 1)
             _, jobs = _jobs(
                 spark, f"over-{cap}-{kind}", lambda: _write(spark, spk, kind, pdf)
             )
@@ -204,3 +203,55 @@ def test_dedup_parity_with_dedup_latest(spark, base, tmp_path, monkeypatch):
         assert set(seg1.loc[seg1["segment_id"] == 1, "doc_id"]) == want
     tomb = _table(drv.root, "deletes")
     assert len(tomb) == 3 and tomb == _table(spk.root, "deletes")
+
+
+def _decoded(root: str, remap: bool) -> dict:
+    """(shard, term) -> sorted [(docno, tf, dl, positions)], decoded one
+    blob at a time with the one-list decoders. With ``remap``, entries of
+    dead copies (tombstoned by a later segment) are dropped and docnos
+    become the doc's rank by doc_id among its shard's live docs."""
+    from fastcatsearch3_spark.functions.vbyte import (
+        decode_positions_blob,
+        decode_postings,
+    )
+
+    new_docno = None
+    if remap:
+        dm = IndexStore(root).local_table("docmap")
+        tomb = pd.DataFrame(_table(root, "deletes"), columns=["doc_id", "segment_id"])
+        last_tomb = dm["doc_id"].map(tomb.groupby("doc_id")["segment_id"].max())
+        live = dm[~(dm["segment_id"] < last_tomb.fillna(-1))].sort_values("doc_id")
+        live["rank"] = live.groupby("shard").cumcount()
+        new_docno = {
+            (r.segment_id, r.shard, r.docno): r.rank for r in live.itertuples()
+        }
+    out: dict = {}
+    for r in IndexStore(root).local_table("postings").itertuples():
+        d, t, l = decode_postings(r.postings)
+        flat, starts = decode_positions_blob(r.positions, t)
+        ends = np.append(starts[1:], flat.size)
+        assert r.df == d.size and r.cf == int(t.sum())
+        for e in range(d.size):
+            docno = int(d[e])
+            if remap:
+                docno = new_docno.get((r.segment_id, r.shard, docno))
+                if docno is None:
+                    continue
+            out.setdefault((r.shard, r.term), []).append(
+                (docno, int(t[e]), int(l[e]), tuple(flat[starts[e] : ends[e]].tolist()))
+            )
+    return {k: sorted(v) for k, v in out.items()}
+
+
+def test_compaction_against_a_pandas_reference(spark, base, tmp_path):
+    """The compacted postings hold exactly the live pre-compaction entries,
+    positions included, renumbered by doc_id rank within the shard."""
+    col = _copy(spark, base, tmp_path, "ref")
+    for kind, pdf in _steps()[:3]:
+        _write(spark, col, kind, pdf)
+    want = _decoded(col.root, remap=True)
+    m = col.compact()
+    assert set(m["metrics"]["phases"]) == {"read_s", "decode_s", "pack_s", "write_s"}
+    assert m["metrics"]["entries"] == sum(map(len, want.values()))
+    assert _decoded(col.root, remap=False) == want
+    assert fsck_index(spark, col.store)["ok"]
