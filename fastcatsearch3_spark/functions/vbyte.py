@@ -42,8 +42,10 @@ whose upper bound is competitive — true block skipping, not just score
 skipping.
 
 Two APIs, one wire format. The query kernels read one term at a time with
-``decode_meta`` / ``decode_postings`` / ``decode_blocks`` (a cached
-``PostingMeta`` per term). The write path — the build's pack stage,
+``decode_meta`` / ``decode_postings`` / ``decode_blocks`` (a kernel call
+holds each list's ``PostingMeta`` and full decode once, in
+``plans.scoring.PostingList``; ``decode_blocks`` decodes the selected
+blocks in one vbyte pass). The write path — the build's pack stage,
 appends and compaction — works on many posting lists at once, so it uses
 the batched codec, which crosses into numpy once per batch instead of
 once per list:
@@ -348,33 +350,31 @@ def split_positions_bytes(
 def decode_blocks(
     blob: bytes | np.ndarray, meta: PostingMeta, block_idx: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode only the selected blocks → (docnos, tfs, dls). Loops over the
-    (already pruned, small) selected block set; numpy inside."""
+    """Decode only the selected blocks → (docnos, tfs, dls), blocks in
+    ``block_idx`` order. One vbyte pass over the selected blocks' bytes
+    (each block ends on a terminal byte), split per block as
+    ``decode_postings_many`` splits blobs."""
     b = np.frombuffer(blob, dtype=np.uint8) if not isinstance(blob, np.ndarray) else blob
-    offs = meta.block_data_offsets()
-    cnts = meta.block_counts()
-    doc_parts, tf_parts, dl_parts = [], [], []
-    for i in np.asarray(block_idx, dtype=np.int64):
-        cnt = int(cnts[i])
-        vals = vbyte_decode(b[offs[i] : offs[i] + int(meta.block_bytes[i])])
-        deltas = vals[: cnt - 1]
-        tfs = vals[cnt - 1 : 2 * cnt - 1]
-        dls = vals[2 * cnt - 1 :]
-        docnos = np.empty(cnt, dtype=np.uint64)
-        docnos[0] = meta.block_first[i]
-        if cnt > 1:
-            docnos[1:] = meta.block_first[i] + np.cumsum(deltas)
-        doc_parts.append(docnos)
-        tf_parts.append(tfs)
-        dl_parts.append(dls)
-    if not doc_parts:
+    idx = np.asarray(block_idx, dtype=np.int64)
+    if idx.size == 0:
         z = np.zeros(0, dtype=np.uint64)
         return z, z.copy(), z.copy()
-    return (
-        np.concatenate(doc_parts),
-        np.concatenate(tf_parts),
-        np.concatenate(dl_parts),
+    cnt = meta.block_counts()[idx]
+    vals = vbyte_decode(
+        b[ragged_ranges(meta.block_data_offsets()[idx], meta.block_bytes[idx])]
     )
+    vs = _starts(3 * cnt - 1)  # each block: cnt-1 gaps, cnt tfs, cnt dls
+    tfs = vals[ragged_ranges(vs + cnt - 1, cnt)]
+    dls = vals[ragged_ranges(vs + 2 * cnt - 1, cnt)]
+    # docnos: block_first at each block's first entry, gaps after it, then
+    # a cumsum reset per block
+    first = meta.block_first[idx]
+    estart = _starts(cnt)
+    full = np.empty(int(cnt.sum()), dtype=np.uint64)
+    full[ragged_ranges(estart + 1, cnt - 1)] = vals[ragged_ranges(vs, cnt - 1)]
+    full[estart] = first
+    acc = np.cumsum(full)
+    return acc - np.repeat(acc[estart] - first, cnt), tfs, dls
 
 
 # ---------------------------------------------------------------------------

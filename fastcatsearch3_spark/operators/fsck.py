@@ -21,15 +21,18 @@ query result. This module re-expresses that need Spark-first:
   the cross-file invariant (blobs ⇔ lexicon).
 * ``fsck_index`` — the full report: structure (manifests, stats,
   segment-dir agreement), blob audit, lexicon reconciliation, docmap
-  range containment, and (when the corpus copy exists) the content
-  sha256 invariant recheck (BASELINE.json input_hint).
+  range containment, posting ``dl`` against docmap ``dl`` on a
+  deterministic entry sample, and (when the corpus copy exists) the
+  content sha256 invariant recheck (BASELINE.json input_hint).
 
 Scale shape: the audit is embarrassingly parallel (no shuffle until the
 small per-term aggregate), reads each postings byte exactly once, and
 the expensive cross-checks stay AGGREGATE-sized: the docmap check
 compares per-(segment, shard) docno ranges (num_segments × num_shards
-rows), never exploded postings. The sha recheck is sampleable
-(``sha_sample_mod``) for routine audits of a 100 TB document store.
+rows), never exploded postings, and the dl check joins only the sample
+(1/``DL_SAMPLE_MOD`` of the docs' entries plus one per list). The sha
+recheck is sampleable (``sha_sample_mod``) for routine audits of a
+100 TB document store.
 """
 
 from __future__ import annotations
@@ -52,8 +55,14 @@ from fastcatsearch3_spark.functions.vbyte import (
 _AUDIT_SCHEMA = (
     "segment_id int, shard int, term string, df bigint, cf bigint, "
     "decoded_df bigint, decoded_cf bigint, min_docno bigint, "
-    "max_docno bigint, violations array<string>"
+    "max_docno bigint, violations array<string>, "
+    "sample_docno array<bigint>, sample_dl array<bigint>"
 )
+
+# the dl sample: every entry whose docno is a multiple of this, plus each
+# list's first entry
+DL_SAMPLE_MOD = 64
+_NO_SAMPLE = (np.zeros(0, np.int64), np.zeros(0, np.int64))
 
 
 def _audit_one(
@@ -61,13 +70,19 @@ def _audit_one(
 ) -> tuple[int, int, int, int, list[str]]:
     """Decode one posting blob and return (decoded_df, decoded_cf,
     min_docno, max_docno, violations). Never raises."""
+    return _audit_sampled(blob, pos_blob, df_col, cf_col)[:5]
+
+
+def _audit_sampled(blob: bytes, pos_blob, df_col: int, cf_col: int) -> tuple:
+    """``_audit_one`` plus the list's dl sample as (docnos, dls) arrays
+    (empty when the blob does not decode). Never raises."""
     bad: list[str] = []
     try:
         b = np.frombuffer(blob, dtype=np.uint8)
         meta = decode_meta(b)
         docnos, tfs, dls = decode_postings(b, meta)
     except Exception as e:  # malformed bytes must surface as data
-        return -1, -1, -1, -1, [f"decode_error:{type(e).__name__}"]
+        return -1, -1, -1, -1, [f"decode_error:{type(e).__name__}"], *_NO_SAMPLE
     # the invariant checks themselves must ALSO never raise — a blob
     # that decodes into nonsense (e.g. a corrupted block_size of 0, a
     # block count that overflows reduceat) is precisely what the audit
@@ -120,18 +135,28 @@ def _audit_one(
                 bad.append(f"positions_error:{type(e).__name__}")
         mn = int(docnos[0]) if n else -1
         mx = int(docnos[-1]) if n else -1
-        return n, dec_cf, mn, mx, bad
+        keep = docnos % np.uint64(DL_SAMPLE_MOD) == 0
+        keep[:1] = True
+        sample = docnos[keep].astype(np.int64), dls[keep].astype(np.int64)
+        return n, dec_cf, mn, mx, bad, *sample
     except Exception as e:
         bad.append(f"audit_error:{type(e).__name__}")
-        return -1, -1, -1, -1, bad
+        return -1, -1, -1, -1, bad, *_NO_SAMPLE
 
 
 def postings_audit(spark: SparkSession, store) -> DataFrame:
     """Decode-audit every posting blob (see module docstring). Returns
     one row per (segment_id, shard, term) with re-derived df/cf, the
-    docno range, and a ``violations`` array (empty == healthy)."""
+    docno range, a ``violations`` array (empty == healthy) and the dl
+    sample (``sample_docno``, ``sample_dl``: the entries whose docno is a
+    multiple of ``DL_SAMPLE_MOD``, plus the first). Field-qualified terms
+    carry their field's length, not the docmap's, so their sample is
+    empty."""
     postings = store.postings(spark)
     has_pos = "positions" in postings.columns
+    field_prefixes = tuple(
+        f"{f}:" for f in store.config().indexed_fields if f != "content"
+    )
     cols = ["segment_id", "shard", "term", "df", "cf", "postings"] + (
         ["positions"] if has_pos else []
     )
@@ -149,7 +174,7 @@ def postings_audit(spark: SparkSession, store) -> DataFrame:
             }
             pos = pdf["positions"] if has_pos else None
             res = [
-                _audit_one(
+                _audit_sampled(
                     blob,
                     None if pos is None or pos.iloc[i] is None else pos.iloc[i],
                     int(out["df"][i]),
@@ -162,6 +187,12 @@ def postings_audit(spark: SparkSession, store) -> DataFrame:
             out["min_docno"] = np.array([r[2] for r in res], dtype=np.int64)
             out["max_docno"] = np.array([r[3] for r in res], dtype=np.int64)
             out["violations"] = [r[4] for r in res]
+            samples = [
+                _NO_SAMPLE if t.startswith(field_prefixes) else r[5:]
+                for t, r in zip(out["term"], res)
+            ]
+            out["sample_docno"] = [d for d, _ in samples]
+            out["sample_dl"] = [dl for _, dl in samples]
             yield pd.DataFrame(out)
 
     return postings.select(*cols).mapInPandas(audit, _AUDIT_SCHEMA)
@@ -310,6 +341,29 @@ def fsck_index(
         rec(
             "docmap_ranges",
             [f"segment {r['segment_id']} shard {r['shard']}" for r in bad],
+        )
+
+        # -- posting dl ⇔ docmap dl, on the audit's deterministic sample --
+        entry = F.explode(F.arrays_zip("sample_docno", "sample_dl"))
+        sample = audit.select("segment_id", "shard", entry.alias("s")).select(
+            "segment_id", "shard",
+            F.col("s.sample_docno").alias("docno"),
+            F.col("s.sample_dl").alias("posting_dl"),
+        )
+        mism = sample.join(
+            docmap.select("segment_id", "shard", "docno", "dl"),
+            ["segment_id", "shard", "docno"],
+        ).where(F.col("posting_dl") != F.col("dl"))
+        bad = mism.limit(5).collect()
+        rec(
+            "docmap_dl",
+            [
+                f"dl_mismatch segment {r['segment_id']} shard {r['shard']} "
+                f"docno {r['docno']}: postings {r['posting_dl']} != "
+                f"docmap {r['dl']}"
+                for r in bad
+            ],
+            total=mism.count() if bad else 0,
         )
     finally:
         audit.unpersist()

@@ -15,6 +15,7 @@ small text grammar covering the same clause algebra:
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import lru_cache
 
 from fastcatsearch3_spark.config import EngineConfig
 from fastcatsearch3_spark.functions.analyzer import tokenize_text
@@ -48,6 +49,21 @@ class Node:
             raise ValueError("term node needs a term")
         if self.kind == "not" and len(self.children) != 1:
             raise ValueError("not node needs exactly one child")
+
+
+@lru_cache(maxsize=4096)
+def _word_tokens(word: str, cfg: EngineConfig | None) -> tuple[str, ...]:
+    return tuple(tokenize_text(word, cfg))
+
+
+def word_tokens(word: str, cfg: EngineConfig | None) -> list[str]:
+    """``tokenize_text`` of one query word, memoized per (word, cfg): a
+    query batch repeats its words, and each analysis runs the analyzer
+    over a one-row pandas Series. ``EngineConfig`` is frozen and
+    hashable, and the Korean user dictionary rides in it, so two configs
+    never share an entry. Returns a fresh list. Whole documents go
+    through ``tokenize_text`` directly, uncached."""
+    return list(_word_tokens(word, cfg))
 
 
 def tree_terms(node: Node) -> tuple[list[str], list[str]]:
@@ -206,14 +222,14 @@ def parse_multifield(
         neg = w.startswith("-") and len(w) > 1
         if neg:
             w = w[1:]
-        toks = tokenize_text(w, cfg)
+        toks = word_tokens(w, cfg)
         if not toks:
             raise ValueError(f"query word {w!r} analyzed to nothing")
         for t in toks:
             expanded = [t]
             if synonyms and t in synonyms:
                 for s in synonyms[t]:
-                    expanded.extend(tokenize_text(s, cfg))
+                    expanded.extend(word_tokens(s, cfg))
             for fld, wgt in field_weights.items():
                 pref = "" if fld == "content" else f"{fld}:"
                 for et in expanded:
@@ -387,8 +403,8 @@ def _analyze_word(w: str, cfg: EngineConfig) -> tuple[str, list[str]]:
                     f"{cfg.indexed_fields})"
                 )
             pref = "" if fld == "content" else f"{fld}:"
-            return pref, tokenize_text(rest, cfg)
-    return "", tokenize_text(w, cfg)
+            return pref, word_tokens(rest, cfg)
+    return "", word_tokens(w, cfg)
 
 
 def _word_node(
@@ -443,7 +459,7 @@ def _word_node(
             syn_leaves = tuple(
                 Node("term", term=note(st))
                 for s in synonyms[t]
-                for st in tokenize_text(s, cfg)
+                for st in word_tokens(s, cfg)
             )
             if syn_leaves:
                 leaf = Node("or", children=(leaf,) + syn_leaves)
@@ -575,7 +591,7 @@ def parse_query(
     for span, _tilde, slop in _re.findall(r'"([^"]*)"(~(\d+))?', text):
         ptoks: list[str] = []
         for w in span.split():
-            ptoks.extend(tokenize_text(w, cfg))
+            ptoks.extend(word_tokens(w, cfg))
         if len(ptoks) >= 2:
             phrases.append(ptoks)
             phrase_slops.append(int(slop) if slop else 0)
@@ -713,7 +729,7 @@ def parse_query(
             groups.append(gid)
             if synonyms and not pref and t in synonyms:
                 for s in synonyms[t]:
-                    for st in tokenize_text(s, cfg):
+                    for st in word_tokens(s, cfg):
                         terms.append(note(st))
                         groups.append(gid)
             gid += 1

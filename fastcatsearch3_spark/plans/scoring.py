@@ -34,7 +34,7 @@ BM25 (k1=1.2, b=0.75 pinned in EngineConfig; BASELINE.md):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import numpy as np
 
@@ -60,10 +60,53 @@ def bm25_tf_norm(
     return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
 
 
+class PostingList:
+    """One (segment, shard, term) posting list as a kernel call holds it:
+    the blob, its positions sidecar (or None) and the header, plus the
+    full decodes, each made at most once, on first use, and then shared
+    by every query of the call that reads the list."""
+
+    __slots__ = ("blob", "pos_blob", "meta", "_entries", "_positions")
+
+    def __init__(
+        self, blob: bytes, pos_blob: bytes | None = None,
+        meta: PostingMeta | None = None,
+    ):
+        self.blob = blob
+        self.pos_blob = pos_blob
+        self.meta = decode_meta(blob) if meta is None else meta
+        self._entries = None
+        self._positions = None
+
+    @property
+    def decoded(self) -> bool:
+        return self._entries is not None
+
+    def entries(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """(docnos, tfs, dls), all uint64."""
+        if self._entries is None:
+            self._entries = decode_postings(self.blob, self.meta)
+        return self._entries
+
+    def positions(self) -> tuple[np.ndarray, np.ndarray]:
+        """(flat absolute positions, entry start offsets into them)."""
+        if self._positions is None:
+            self._positions = decode_positions_blob(
+                self.pos_blob, self.entries()[1]
+            )
+        return self._positions
+
+
 @dataclass
 class TermPostings:
-    """One query term's posting blob within a (segment, shard) group.
-    ``pos_blob`` (optional) is the positions sidecar for phrase queries."""
+    """One query term's posting list within a (segment, shard) group:
+    the per-query part (``idf`` with its boost, ``avgdl``) over a
+    ``PostingList`` (``postings``), the part a batch shares.
+    ``pos_blob`` (optional) is the positions sidecar for phrase queries.
+
+    Built from a blob, the term owns a fresh list; ``over`` puts it on a
+    list the caller shares, so each list is decoded at most once however
+    many queries read it."""
 
     term: str
     idf: float
@@ -73,14 +116,22 @@ class TermPostings:
     # field-qualified term normalizes against ITS field's avgdl; None →
     # the caller's global (content) avgdl
     avgdl: float | None = None
-    # pass a pre-decoded meta to amortize header decoding when the same
-    # blob is scored under many queries in one batch (search_many); left
-    # None, it is decoded from the blob as before
+    # a pre-decoded header; left None, it is decoded from the blob
     meta: PostingMeta | None = None
+    postings: PostingList = field(init=False, repr=False, compare=False)
 
     def __post_init__(self):
-        if self.meta is None:
-            self.meta = decode_meta(self.blob)
+        self.postings = PostingList(self.blob, self.pos_blob, self.meta)
+        self.meta = self.postings.meta
+
+    @classmethod
+    def over(
+        cls, plist: PostingList, term: str, idf: float,
+        avgdl: float | None = None,
+    ) -> "TermPostings":
+        tp = cls(term, idf, plist.blob, plist.pos_blob, avgdl, plist.meta)
+        tp.postings = plist
+        return tp
 
     def adl(self, global_avgdl: float) -> float:
         return self.avgdl if self.avgdl is not None else global_avgdl
@@ -113,11 +164,16 @@ def _probe(
     tp: TermPostings, cand: np.ndarray, k1: float, b: float, avgdl: float
 ) -> tuple[np.ndarray, np.ndarray]:
     """Exact contributions of ``tp`` for the sorted candidate docnos.
-    Returns (mask over cand of membership, contribution where member)."""
-    blocks = _blocks_containing(tp.meta, cand)
-    if blocks.size == 0:
-        return np.zeros(cand.size, dtype=bool), np.zeros(0)
-    d, t, l = decode_blocks(tp.blob, tp.meta, blocks)
+    Returns (mask over cand of membership, contribution where member).
+    A list the kernel call has already decoded is searched as it is;
+    otherwise only the blocks that may hold a candidate are decoded."""
+    if tp.postings.decoded:
+        d, t, l = tp.postings.entries()
+    else:
+        blocks = _blocks_containing(tp.meta, cand)
+        if blocks.size == 0:
+            return np.zeros(cand.size, dtype=bool), np.zeros(0)
+        d, t, l = decode_blocks(tp.blob, tp.meta, blocks)
     pos = np.searchsorted(d, cand)
     ok = pos < d.size
     member = np.zeros(cand.size, dtype=bool)
@@ -151,8 +207,8 @@ def phrase_mask(
                 f"term {tp.term!r} has no positions — build the index with "
                 "EngineConfig(store_positions=True) to run phrase queries"
             )
-        d, tfs, _ = decode_postings(tp.blob, tp.meta)
-        flat, entry_starts = decode_positions_blob(tp.pos_blob, tfs)
+        d, tfs, _ = tp.postings.entries()
+        flat, entry_starts = tp.postings.positions()
         idx = np.searchsorted(d.astype(np.int64), cand64)
         ok = idx < d.size
         member = np.zeros(cand.size, dtype=bool)
@@ -221,7 +277,7 @@ def _score_tree(
     size = 0
     decoded = []
     for tp in sorted(terms, key=lambda t: t.term):
-        d, t, l = decode_postings(tp.blob, tp.meta)
+        d, t, l = tp.postings.entries()
         decoded.append((tp, d.astype(np.int64), t, l))
         size = max(size, int(d[-1]) + 1)
     presence: dict[str, np.ndarray] = {}
@@ -466,7 +522,7 @@ def _score_or_phrases(
     decoded: dict[str, tuple[TermPostings, np.ndarray, np.ndarray, np.ndarray]] = {}
     # sorted-term insertion order → deterministic float summation
     for tp in sorted(terms, key=lambda t: t.term):
-        d, t, l = decode_postings(tp.blob, tp.meta)
+        d, t, l = tp.postings.entries()
         decoded[tp.term] = (tp, d.astype(np.int64), t, l)
     all_d = np.unique(
         np.concatenate([e[1] for e in decoded.values()])
@@ -535,7 +591,7 @@ def _score_taat(
     order = sorted(range(len(terms)), key=lambda i: terms[i].term)
     for i in order:
         tp = terms[i]
-        d, t, l = decode_postings(tp.blob, tp.meta)
+        d, t, l = tp.postings.entries()
         decoded.append((i, tp, d.astype(np.int64), t, l))
         size = max(size, int(d[-1]) + 1)
     acc = np.zeros(size, dtype=np.float64)
@@ -569,7 +625,7 @@ def _score_and_bmw(
     decoded blockwise where they can overlap the shrinking candidate set."""
     order = sorted(terms, key=lambda t: (t.meta.n, t.term))
     lead = order[0]
-    d, t, l = decode_postings(lead.blob, lead.meta)
+    d, t, l = lead.postings.entries()
     cand = d.astype(np.int64)
     score = lead.idf * bm25_tf_norm(t, l, k1, b, lead.adl(avgdl))
     for tp in order[1:]:
@@ -609,7 +665,7 @@ def _score_or_maxscore(
     for i, tp in enumerate(terms):
         rem = suffix_ub[i]  # this term + all later could add at most `rem`
         if unlimited or i == 0 or not np.isfinite(theta) or theta < rem:
-            d, t, l = decode_postings(tp.blob, tp.meta)
+            d, t, l = tp.postings.entries()
             dn = d.astype(np.int64)
             acc[dn] += tp.idf * bm25_tf_norm(t, l, k1, b, tp.adl(avgdl))
             present[dn] = True
@@ -664,7 +720,7 @@ def score_bm25f(
     for idf, ftps in words:
         dec = []
         for wgt, tp in ftps:
-            d, t, l = decode_postings(tp.blob, tp.meta)
+            d, t, l = tp.postings.entries()
             dn = d.astype(np.int64)
             dec.append((wgt, dn, t, l, tp.adl(avgdl)))
             if dn.size:
@@ -768,7 +824,7 @@ def _score_or_maxscore_factored(
         rem = suffix_ub[i]
         unseen_ub = rem * fmax if boost_mode == "multiply" else rem + fmax
         if unlimited or i == 0 or not np.isfinite(theta) or theta < unseen_ub:
-            d, t, l = decode_postings(tp.blob, tp.meta)
+            d, t, l = tp.postings.entries()
             dn = d.astype(np.int64)
             acc[dn] += tp.idf * bm25_tf_norm(t, l, k1, b, tp.adl(avgdl))
             present[dn] = True

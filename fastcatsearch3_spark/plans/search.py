@@ -11,9 +11,9 @@ Every BM25 read is one computation, written once:
   groups, msm, surviving phrases, clause tree), or None when it cannot
   match.
 * ``make_kernel`` — the per-(segment, shard) scoring function. It scores
-  a list of specs (and BM25F specs) against one group's posting rows,
-  decoding each blob header once for the whole list, and emits each
-  query's local top-k as (query_id, segment_id, shard, docno, score).
+  a list of specs (and BM25F specs) against one group's posting rows
+  and emits every query's local top-k as (query_id, segment_id, shard,
+  docno, score) rows, one frame per group.
 * ``_score_shards`` — runs that kernel on one of the two routes below.
 
 ``search_many`` scores N specs in one pass. ``search_index`` is a batch
@@ -36,7 +36,11 @@ return identical answers:
          (``IndexStore.local_view``);
     Q-4  scoring: ``_run_local`` calls the kernel once per local
          (segment_id, shard) group, with that group's slice of the
-         per-epoch denied set (docmap ⋈ deletes in pandas);
+         per-epoch denied set (docmap ⋈ deletes in pandas). A call
+         decodes each of the group's posting lists at most once, on
+         first use, and every query of the batch shares that decode
+         (``_group_postings``); a list no query reads in full is only
+         block-probed. The call emits one hits frame for the group;
     Q-6  top-k: pandas sorts the hits (score desc, doc_id asc) and pages
          them (offset / after), per query_id for a batch;
     Q-5  hydrate: doc_ids come from the per-epoch docmap; the result
@@ -54,7 +58,8 @@ return identical answers:
     Q-4  scoring: applyInPandas kernel per (segment_id, shard) group
          (``_group_apply``) — every group holds all of its docs'
          postings for all query terms, so AND/OR/NOT and block-max
-         pruning are shard-local and exact;
+         pruning are shard-local and exact; the same kernel, so the
+         same once-per-call decode and one frame per group;
     Q-6  scatter-gather: each group emits its local top-k; the global
          orderBy(score desc, doc_id asc).limit(k) compiles to Spark's
          TakeOrderedAndProject — the same partial/final top-k merge the
@@ -82,12 +87,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fastcatsearch3_spark.config import EngineConfig
-from fastcatsearch3_spark.plans.query import ParsedQuery, parse_query
+from fastcatsearch3_spark.functions.vbyte import decode_postings_many, ragged_ranges
+from fastcatsearch3_spark.plans.query import ParsedQuery, parse_query, word_tokens
 from fastcatsearch3_spark.plans.scoring import (
+    PostingList,
     TermPostings,
     bm25_idf,
-    decode_meta,
-    decode_postings,
     score_bm25f,
     score_group,
     score_group_factored,
@@ -270,21 +275,57 @@ def query_spec(
     )
 
 
-def _kernel_rows(qid, seg: int, shard: int, docnos: np.ndarray, **cols):
-    """Kernel output rows for one query in one (segment, shard) group."""
-    return pd.DataFrame(
-        {
-            "query_id": qid,
-            "segment_id": np.full(docnos.size, seg, np.int32),
-            "shard": np.full(docnos.size, shard, np.int32),
-            "docno": docnos.astype(np.int64),
-            **cols,
-        }
+class _GroupHits:
+    """One (segment, shard) group's kernel output, gathered per query as
+    arrays and emitted as one frame: the key columns, then ``cols``."""
+
+    def __init__(self, *cols: str):
+        self.qids: list = []
+        self.docnos: list = []
+        self.cols = {c: [] for c in cols}
+
+    def add(self, qid, docnos: np.ndarray, *vals: np.ndarray) -> None:
+        if docnos.size:
+            self.qids.append(qid)
+            self.docnos.append(docnos)
+            for parts, v in zip(self.cols.values(), vals):
+                parts.append(v)
+
+    def frame(self, seg: int, shard: int) -> pd.DataFrame:
+        sizes = [d.size for d in self.docnos]
+        n = sum(sizes)
+
+        def cat(parts, dtype):
+            if not parts:
+                return np.zeros(0, dtype)
+            return np.concatenate(parts).astype(dtype, copy=False)
+
+        return pd.DataFrame(
+            {
+                "query_id": np.repeat(np.array(self.qids, dtype=object), sizes),
+                "segment_id": np.full(n, seg, np.int32),
+                "shard": np.full(n, shard, np.int32),
+                "docno": cat(self.docnos, np.int64),
+                **{c: cat(v, np.float64) for c, v in self.cols.items()},
+            }
+        )
+
+
+def _group_postings(pdf: pd.DataFrame) -> "dict[str, PostingList]":
+    """A group's posting rows as term → ``PostingList``: each header is
+    decoded here, each list's entries and positions at most once, on
+    first use, and every spec of the kernel call shares them."""
+    pos_blobs = (
+        pdf["positions"] if "positions" in pdf.columns else [None] * len(pdf)
     )
+    return {
+        t: PostingList(bytes(bl), bytes(pbl) if pbl is not None else None)
+        for t, bl, pbl in zip(pdf["term"], pdf["postings"], pos_blobs)
+    }
 
 
 _NO_DOCNOS = np.zeros(0, dtype=np.uint64)
-_EMPTY_HITS = _kernel_rows(None, 0, 0, _NO_DOCNOS, score=np.zeros(0))
+_EMPTY_HITS = _GroupHits("score").frame(0, 0)
 
 
 def make_kernel(
@@ -304,15 +345,16 @@ def make_kernel(
     """The per-(segment, shard) scoring kernel (U-5) of every BM25 read:
     ``kernel(pdf, mask_pdf)`` scores each spec against one group's
     posting rows and returns the local top-k of each as
-    ``KERNEL_SCHEMA`` rows.
+    ``KERNEL_SCHEMA`` rows, all in one frame.
 
     ``pdf``: the group's rows of the fetched terms (``positions`` set
-    only for phrase terms). Each blob's header is decoded once and
-    shared by every spec. ``mask_pdf`` (or None): the group's mask rows,
-    kind -1 denied docnos and kind 1 allowed docnos — per query_id when
-    ``per_query_allow``, else for every query. A query in ``allow_qids``
-    with no allow rows here matches nothing here. ``term_avgdl``:
-    per-term avgdl of field-qualified terms (per-field length norm).
+    only for phrase terms). Each list is decoded at most once per call
+    and shared by every spec (``_group_postings``). ``mask_pdf`` (or
+    None): the group's mask rows, kind -1 denied docnos and kind 1
+    allowed docnos — per query_id when ``per_query_allow``, else for
+    every query. A query in ``allow_qids`` with no allow rows here
+    matches nothing here. ``term_avgdl``: per-term avgdl of
+    field-qualified terms (per-field length norm).
 
     ``f_specs``: BM25F specs ``(qid, words)``, per word ``(idf,
     [(field weight, field avgdl, term key), ...])``; a word's field tfs
@@ -349,25 +391,13 @@ def make_kernel(
                 return None
             return allow_by_qid.get(qid, _NO_DOCNOS) if per_query_allow else allow_all
 
-        pos_blobs = (
-            pdf["positions"] if "positions" in pdf.columns else [None] * len(pdf)
-        )
-        blobs: dict[str, tuple] = {}
-        for t, bl, pbl in zip(pdf["term"], pdf["postings"], pos_blobs):
-            raw = bytes(bl)
-            pos = bytes(pbl) if pbl is not None else None
-            blobs[t] = (raw, pos, decode_meta(raw))
+        lists = _group_postings(pdf)
 
         def posting(t: str, idf: float, adl: float | None) -> TermPostings | None:
-            ent = blobs.get(t)
-            if ent is None:
-                return None
-            return TermPostings(
-                term=t, idf=idf, blob=ent[0], pos_blob=ent[1], avgdl=adl,
-                meta=ent[2],
-            )
+            pl = lists.get(t)
+            return None if pl is None else TermPostings.over(pl, t, idf, adl)
 
-        outs = []
+        hits = _GroupHits("score")
         for s in specs:
             flat = s.tree is None
             by_term = {}
@@ -422,8 +452,7 @@ def make_kernel(
                 tree=s.tree, tree_pos_terms=None if flat else set(s.qidf),
                 phrase_only_terms=s.phrase_only, after_score=after_score,
             )
-            if docnos.size:
-                outs.append(_kernel_rows(s.qid, seg, shard, docnos, score=scores))
+            hits.add(s.qid, docnos, scores)
         for qid, words in f_specs:
             ws = []
             for idf, fkeys in words:
@@ -440,11 +469,8 @@ def make_kernel(
                 ws, k=k, k1=k1, b=b, avgdl=avgdl,
                 deny_docnos=deny, allow_docnos=allow(qid),
             )
-            if docnos.size:
-                outs.append(_kernel_rows(qid, seg, shard, docnos, score=scores))
-        if len(outs) > 1:
-            return pd.concat(outs, ignore_index=True)
-        return outs[0] if outs else _EMPTY_HITS
+            hits.add(qid, docnos, scores)
+        return hits.frame(seg, shard)
 
     return kernel
 
@@ -1716,6 +1742,7 @@ FS_KERNEL_SCHEMA = (
     "query_id string, segment_id int, shard int, docno bigint,"
     " score double, factor double, final double"
 )
+_FS_COLS = ("score", "factor", "final")
 
 
 def function_score_many(
@@ -1730,7 +1757,8 @@ def function_score_many(
     next-round #7) against ONE factor artifact: they share one postings
     scan (pushed ``In`` over the union of terms), one factor cogroup,
     and one kernel pass; each (segment, shard) group loads its dense
-    factor array ONCE and runs the factor-aware MaxScore
+    factor array and its posting lists (``_group_postings``) ONCE and
+    runs the factor-aware MaxScore
     (``scoring.score_group_factored``) per ``query_spec``.
 
     Scope per query matches function_score_topk: flat AND/OR with NOT
@@ -1793,15 +1821,11 @@ def function_score_many(
     term_avgdl = _term_avgdl(fetch, stats)
     k1, b = cfg.k1, cfg.b
     neutral = 1.0 if boost_mode == "multiply" else 0.0
-    empty_rows = _kernel_rows(
-        None, 0, 0, _NO_DOCNOS, score=np.zeros(0), factor=np.zeros(0),
-        final=np.zeros(0),
-    )
 
     def kernel(pdf: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         # right: the group's factor rows (kind 2) and denied docnos (kind -1)
         if len(pdf) == 0:
-            return empty_rows
+            return _GroupHits(*_FS_COLS).frame(0, 0)
         seg = int(pdf["segment_id"].iloc[0])
         shard = int(pdf["shard"].iloc[0])
         fr = right[right["kind"] == 2]
@@ -1812,22 +1836,15 @@ def function_score_many(
             int(fac_dn.max()) + 1 if fac_dn.size else 0, neutral, np.float64
         )
         factors[fac_dn] = fr["factor"].to_numpy(np.float64)
-        # decode each blob's meta once, shared across the batch
-        blobs = {}
-        for t, bl in zip(pdf["term"], pdf["postings"]):
-            raw = bytes(bl)
-            blobs[t] = (raw, decode_meta(raw))
+        lists = _group_postings(pdf)
 
         def postings(terms: dict) -> list[TermPostings]:
             return [
-                TermPostings(
-                    term=t, idf=idf, blob=blobs[t][0],
-                    avgdl=term_avgdl.get(t), meta=blobs[t][1],
-                )
-                for t, idf in terms.items() if t in blobs
+                TermPostings.over(lists[t], t, idf, term_avgdl.get(t))
+                for t, idf in terms.items() if t in lists
             ]
 
-        outs = []
+        hits = _GroupHits(*_FS_COLS)
         for s in specs:
             pos_tps = postings(s.qidf)
             if not pos_tps or (s.op == "AND" and len(pos_tps) < len(s.qidf)):
@@ -1838,14 +1855,8 @@ def function_score_many(
                 not_terms=postings(dict.fromkeys(s.nset, 0.0)),
                 deny_docnos=deny,
             )
-            if docnos.size:
-                outs.append(
-                    _kernel_rows(
-                        s.qid, seg, shard, docnos, score=bm25, factor=fac,
-                        final=finals,
-                    )
-                )
-        return pd.concat(outs, ignore_index=True) if outs else empty_rows
+            hits.add(s.qid, docnos, bm25, fac, finals)
+        return hits.frame(seg, shard)
 
     cand = (
         store.postings(spark)
@@ -1875,39 +1886,36 @@ def _make_match_kernel(
     term_gids: dict[str, tuple[int, ...]], neg_terms: set[str]
 ):
     """mapInPandas kernel: packed posting rows → (docno, group-id) match
-    entries (no scoring). Negative-term entries carry neg=1."""
+    entries (no scoring), one batched decode per pandas batch.
+    Negative-term entries carry neg=1."""
 
     def decode_batches(batches):
-        from fastcatsearch3_spark.functions.vbyte import decode_postings
-
         for pdf in batches:
-            if len(pdf) == 0:
+            # (row, gid, neg) per emitted copy of a row's entries
+            emits = [
+                (i, g, neg)
+                for i, term in enumerate(pdf["term"])
+                for g, neg in (
+                    [(-1, 1)] if term in neg_terms
+                    else [(g, 0) for g in term_gids.get(term, ())]
+                )
+            ]
+            if not emits:
                 continue
-            segs, shards, docnos, gids, negs = [], [], [], [], []
-            for seg, shard, term, blob in zip(
-                pdf["segment_id"], pdf["shard"], pdf["term"], pdf["postings"]
-            ):
-                d, _t, _l = decode_postings(bytes(blob))
-                n = d.size
-                if term in neg_terms:
-                    emit = [(-1, 1)]
-                else:
-                    emit = [(g, 0) for g in term_gids.get(term, ())]
-                for g, neg in emit:
-                    segs.append(np.full(n, seg, dtype=np.int32))
-                    shards.append(np.full(n, shard, dtype=np.int32))
-                    docnos.append(d.astype(np.int64))
-                    gids.append(np.full(n, g, dtype=np.int32))
-                    negs.append(np.full(n, neg, dtype=np.int32))
-            if not segs:
-                continue
+            row, d, _, _ = decode_postings_many(pdf["postings"].tolist())
+            n = np.bincount(row, minlength=len(pdf))
+            e_row, e_gid, e_neg = (np.array(c) for c in zip(*emits))
+            cnt = n[e_row]
+            take = ragged_ranges((np.cumsum(n) - n)[e_row], cnt)
             yield pd.DataFrame(
                 {
-                    "segment_id": np.concatenate(segs),
-                    "shard": np.concatenate(shards),
-                    "docno": np.concatenate(docnos),
-                    "gid": np.concatenate(gids),
-                    "neg": np.concatenate(negs),
+                    "segment_id": np.repeat(
+                        pdf["segment_id"].to_numpy(np.int32)[e_row], cnt
+                    ),
+                    "shard": np.repeat(pdf["shard"].to_numpy(np.int32)[e_row], cnt),
+                    "docno": d[take].astype(np.int64),
+                    "gid": np.repeat(e_gid.astype(np.int32), cnt),
+                    "neg": np.repeat(e_neg.astype(np.int32), cnt),
                 }
             )
 
@@ -2306,8 +2314,6 @@ def _bm25f_spec(
     field-qualified key)`` entry per field. None when the index is empty
     or a word is in no field (AND). Raises ValueError on an unknown field
     or a word that analyzes to nothing."""
-    from fastcatsearch3_spark.functions.analyzer import tokenize_text
-
     where = f"query {qid!r}: " if qid else ""
     if not fq.field_weights:
         raise ValueError(f"{where}field_weights must name at least one field")
@@ -2319,7 +2325,7 @@ def _bm25f_spec(
             )
     bases: list[str] = []
     for w in fq.text.split():
-        toks = tokenize_text(w, cfg)
+        toks = word_tokens(w, cfg)
         if not toks:
             raise ValueError(f"{where}query word {w!r} analyzed to nothing")
         bases.extend(t for t in toks if t not in bases)
@@ -2368,10 +2374,10 @@ def search_many(
     groups, msm, caret boosts, field terms, phrases / proximity (the
     positions sidecar is fetched only for phrase terms), nested clause
     trees, prefix terms (expanded against the lexicon per query before
-    ``query_spec``) and ``Bm25fQuery`` entries. Posting-blob metadata is
-    decoded once per (segment, shard, term) and shared across every query
-    in the batch. Tombstoned docs are excluded via the epoch denied mask
-    cogrouped into the kernel.
+    ``query_spec``) and ``Bm25fQuery`` entries. Each (segment, shard,
+    term) posting list is decoded at most once per kernel call and
+    shared across every query in the batch. Tombstoned docs are
+    excluded via the epoch denied mask cogrouped into the kernel.
 
     ``allow_doc_ids``: optional allow-filter. With a ``query_id`` column,
     each row restricts only that query (other queries stay unfiltered);
@@ -2691,17 +2697,12 @@ def dfu_for_terms(
         }
 
         def union_counts(pdf: pd.DataFrame) -> pd.DataFrame:
-            per_base: dict[str, list[np.ndarray]] = {}
-            for t, bl in zip(pdf["term"], pdf["postings"]):
-                raw = bytes(bl)
-                d, _, _ = decode_postings(raw, decode_meta(raw))
-                per_base.setdefault(base_of[t], []).append(d)
-            rows = {
-                b: int(np.unique(np.concatenate(ds)).size)
-                for b, ds in per_base.items()
-            }
+            row, d, _, _ = decode_postings_many(pdf["postings"].tolist())
+            bases = pdf["term"].map(base_of).to_numpy(object)
+            ent = pd.DataFrame({"base": bases[row], "docno": d})
+            dfu = ent.drop_duplicates().groupby("base", sort=False).size()
             return pd.DataFrame(
-                {"base": list(rows), "dfu": list(rows.values())}
+                {"base": dfu.index.to_numpy(object), "dfu": dfu.to_numpy(np.int64)}
             )
 
         cols = ["segment_id", "shard", "term", "postings"]

@@ -101,6 +101,13 @@ def test_routes_agree(spark, states, state, monkeypatch):
     for q in queries.values():
         assert both(lambda: col.search(q, k=10)), q
 
+    # match_doc_ids, the facet feeder with its own batched decode, holds
+    # exactly the docs both routes score
+    for shape in ("not", "tree_or_not"):
+        q = queries[shape]
+        scored = {d for d, _ in both(lambda: col.search(q, k=100_000))}
+        assert {r[0] for r in _rows(col.match(q))} == scored, q
+
     # offset and after paging
     q = queries["hot"]
     full = both(lambda: col.search(q, k=12))
@@ -123,6 +130,61 @@ def test_routes_agree(spark, states, state, monkeypatch):
     assert both(
         lambda: search_bm25f(spark, col.store, fq.text, fq.field_weights, k=10)
     )
+
+
+def test_batch_decodes_each_list_once(spark, states, monkeypatch):
+    """A search_many kernel call decodes each (segment, shard, term) list
+    in full at most once, and its positions at most once, however many
+    queries of the batch read it; run one at a time, the same queries
+    decode the shared lists again."""
+    from collections import Counter
+
+    from fastcatsearch3_spark.plans import scoring
+    from fastcatsearch3_spark.plans import search as search_mod
+
+    base, roots = states
+    col = Collection(spark, roots["mutated"], CFG)
+    counts: Counter = Counter()
+    call = [0]
+
+    def counted(fn, kind):
+        # keyed by the list's own second argument (its header for the
+        # entries, its decoded tf array for the positions): equal blobs
+        # of two terms can be one bytes object after the Arrow read
+        def wrapped(blob, own, *a):
+            counts[call[0], kind, id(own)] += 1
+            return fn(blob, own, *a)
+        return wrapped
+
+    real_make = search_mod.make_kernel
+
+    def make_kernel(*a, **kw):
+        kernel = real_make(*a, **kw)
+
+        def per_call(pdf, mask):
+            call[0] += 1
+            return kernel(pdf, mask)
+        return per_call
+
+    monkeypatch.setattr(search_mod, "make_kernel", make_kernel)
+    monkeypatch.setattr(
+        scoring, "decode_postings", counted(scoring.decode_postings, "entries")
+    )
+    monkeypatch.setattr(
+        scoring, "decode_positions_blob",
+        counted(scoring.decode_positions_blob, "positions"),
+    )
+    queries = _queries(base)
+    rows, jobs = _jobs(spark, "decode-once", lambda: _rows(col.search_many(queries, k=10)))
+    assert jobs == [] and {r[0] for r in rows} == set(queries)
+    assert call[0] > 1 and counts
+    assert max(counts.values()) == 1
+    assert any(kind == "positions" for _, kind, _ in counts)
+    batch = sum(counts.values())
+    counts.clear()
+    for qid, q in queries.items():
+        col.search_many({qid: q}, k=10).collect()
+    assert sum(counts.values()) > batch
 
 
 def test_cache_hit_collect_starts_no_job(spark, states, tmp_path):

@@ -291,3 +291,58 @@ def test_tombstoned_doc_with_changed_source_not_a_sha_violation(
     dels.write.mode("append").parquet(str(Path(store.root) / "deletes"))
     report = fsck_index(spark, IndexStore(store.root), corpus=edited)
     assert report["content_sha256"]["ok"], report["content_sha256"]
+
+
+@pytest.mark.parametrize("mutate", [False, True])
+def test_posting_dl_checked_against_docmap(spark, tmp_path, monkeypatch, mutate):
+    """A compaction whose decode shifts every entry's dl writes postings
+    that disagree with the docmap (BM25 length norms all off by one):
+    fsck's sampled dl check reports it, and stays ok without the shift."""
+    from fastcatsearch3_spark.streaming import incremental as inc
+
+    store, _ = _build(spark, tmp_path, store_positions=True)
+    if mutate:
+        real = inc._decode_iter
+
+        def shifted(batches):
+            for entries in real(batches):
+                yield entries.assign(dl=entries["dl"] + 1)
+
+        monkeypatch.setattr(inc, "_decode_iter", shifted)
+    inc.compact(spark, store.root)
+    monkeypatch.undo()
+    report = fsck_index(spark, IndexStore(store.root))
+    assert report["ok"] is not mutate, report
+    dl = report["docmap_dl"]
+    if mutate:
+        assert dl["violations"] >= 1
+        assert dl["examples"][0].startswith("dl_mismatch"), dl
+    else:
+        assert dl == {"ok": True, "violations": 0, "examples": []}
+    # the other checks cannot see the shift
+    assert report["postings_blobs"]["ok"] and report["docmap_ranges"]["ok"]
+
+
+def test_field_terms_carry_no_dl_sample(spark, tmp_path):
+    """Field-qualified terms hold their field's length, not the docmap's
+    content dl, so they are left out of the sample (no false alarms)."""
+    pdf = pd.DataFrame(
+        {
+            "doc_id": [r[0] for r in ROWS],
+            "text": [r[1] for r in ROWS],
+            "lang": "en",
+            "source": "src1",
+            "n_chars": [len(r[1]) for r in ROWS],
+        }
+    )
+    cfg = EngineConfig(num_shards=2, indexed_fields=("content", "path"))
+    root = str(tmp_path / "idx")
+    build_index(spark, normalize_corpus(spark.createDataFrame(pdf)), root, cfg)
+    store = IndexStore(root)
+    audit = postings_audit(spark, store).toPandas()
+    field = audit["term"].str.startswith("path:")
+    assert field.any() and (~field).any()
+    assert all(len(s) == 0 for s in audit.loc[field, "sample_docno"])
+    assert all(len(s) >= 1 for s in audit.loc[~field, "sample_docno"])
+    report = fsck_index(spark, store)
+    assert report["ok"] and report["docmap_dl"]["ok"], report

@@ -101,6 +101,28 @@ def test_memo_keyed_on_dictionary_contents():
     assert korean_tokenize_series(s, dic=custom).iloc[0] == ["김치", "찌개", "주문"]
 
 
+def test_query_word_memo_keyed_on_user_dict():
+    """The query-side word memo (``plans.query.word_tokens``) keys on the
+    whole config, so two user dictionaries never share an entry; each
+    call returns a fresh list equal to the uncached analysis."""
+    from fastcatsearch3_spark.functions.analyzer import tokenize_text
+    from fastcatsearch3_spark.plans.query import parse_query, word_tokens
+
+    plain = EngineConfig(analyzer="korean_morph")
+    custom = EngineConfig(analyzer="korean_morph", user_dict=("김치찌개=김치+찌개",))
+    for cfg in (plain, custom, plain, custom):
+        assert word_tokens("김치찌개를", cfg) == tokenize_text("김치찌개를", cfg)
+    assert word_tokens("김치찌개를", plain) == ["김치찌개"]
+    assert word_tokens("김치찌개를", custom) == ["김치찌개", "김치", "찌개"]
+    first = word_tokens("김치찌개를", custom)
+    again = word_tokens("김치찌개를", custom)
+    assert first == again and first is not again
+    first.append("mutated")
+    assert word_tokens("김치찌개를", custom) == ["김치찌개", "김치", "찌개"]
+    assert parse_query("김치찌개를", plain).terms == ["김치찌개"]
+    assert parse_query("김치찌개를", custom).terms == ["김치찌개", "김치", "찌개"]
+
+
 def test_user_dictionary_simple_word():
     dic = KoreanDictionary(user_dict=("책상",))
     assert segment_eojeol("책상이", dic) == ["책상"]

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from fastcatsearch3_spark.functions.vbyte import encode_postings
 from fastcatsearch3_spark.plans.scoring import (
@@ -395,3 +397,193 @@ def test_factored_selection_maps_back_to_its_bm25_and_factor(seed, op, boost_mod
     np.testing.assert_array_equal(fac, factors[dn])
     combined = bm25 * fac if boost_mode == "multiply" else bm25 + fac
     np.testing.assert_allclose(finals, combined, rtol=1e-12)
+
+
+# ---------------------------------------------------------------------------
+# Shared posting lists: a kernel call decodes each list once and every query
+# of the batch reads that one decode. The answers must not move by a bit.
+# ---------------------------------------------------------------------------
+
+def _shared_corpus(seed: int, n_docs: int, block_size: int):
+    """Four random posting lists with positions over ``n_docs`` short docs
+    (short, so phrases match): term -> (blob, positions blob, df), dls."""
+    from fastcatsearch3_spark.functions.vbyte import (
+        encode_positions_blob,
+        vbyte_encode,
+    )
+
+    rng = np.random.default_rng(seed)
+    dls = rng.integers(2, 9, size=n_docs)
+    lists = {}
+    for t in range(4):
+        docs = np.nonzero(rng.random(n_docs) < rng.uniform(0.2, 0.8))[0]
+        if docs.size == 0:
+            docs = np.array([int(rng.integers(n_docs))])
+        runs = []
+        for d in docs:
+            tf = int(rng.integers(1, dls[d] + 1))
+            pos = np.sort(rng.choice(int(dls[d]), size=tf, replace=False))
+            gaps = np.diff(pos, prepend=0).astype(np.uint64)
+            runs.append(vbyte_encode(gaps).tobytes())
+        tfs = np.array(
+            [np.count_nonzero(np.frombuffer(r, np.uint8) < 128) for r in runs],
+            dtype=np.uint64,
+        )
+        blob = encode_postings(
+            docs.astype(np.uint64), tfs, dls[docs].astype(np.uint64),
+            block_size=block_size,
+        )
+        pos_blob = encode_positions_blob(np.array(runs, dtype=object), block_size)
+        lists[f"t{t}"] = (blob, pos_blob, int(docs.size))
+    return lists, dls
+
+
+def _score_all(lists, dls, n_docs, k, make_tp):
+    """Every scoring entry point over the lists: score_group under
+    AND / OR / NOT / msm / tree / phrase specs, score_group_factored and
+    score_bm25f. ``make_tp(term, idf)`` builds each TermPostings."""
+    from fastcatsearch3_spark.plans.query import Node
+    from fastcatsearch3_spark.plans.scoring import (
+        score_bm25f,
+        score_group_factored,
+    )
+
+    avgdl = float(dls.mean())
+    idf = {t: float(bm25_idf(n_docs, df)) for t, (_, _, df) in lists.items()}
+
+    def tps(*terms):
+        return [make_tp(t, idf[t]) for t in terms]
+
+    def leaf(t):
+        return Node("term", term=t)
+
+    kw = dict(k=k, k1=K1, b=B, avgdl=avgdl)
+    tree = Node("or", children=(
+        Node("and", children=(leaf("t0"), leaf("t1"))),
+        Node("and", children=(leaf("t2"), Node("not", children=(leaf("t3"),)))),
+    ))
+    factors = np.linspace(0.5, 2.0, n_docs)
+    out = [
+        score_group(tps("t0", "t1", "t2"), op="OR", **kw),
+        score_group(tps("t0", "t1", "t2"), op="OR", mode="taat", **kw),
+        score_group(tps("t0", "t1"), op="AND", **kw),
+        score_group(tps("t3", "t0", "t2"), op="AND", **kw),
+        score_group(tps("t0", "t1"), op="OR", not_terms=tps("t3"), **kw),
+        score_group(tps("t0", "t1", "t2"), op="AND", not_terms=tps("t3"), **kw),
+        score_group(tps("t0", "t1", "t2", "t3"), op="OR", msm=2, **kw),
+        score_group(
+            tps("t0", "t1", "t2", "t3"), op="OR", tree=tree,
+            tree_pos_terms={"t0", "t1", "t2"}, **kw,
+        ),
+        score_group(
+            tps("t0", "t1"), op="AND", phrase_tps=[tps("t0", "t1")], **kw
+        ),
+        score_group(
+            tps("t1", "t2", "t3"), op="OR", phrase_tps=[tps("t1", "t2")],
+            phrase_slops=[1], phrase_only_terms={"t1", "t2"}, **kw,
+        ),
+        score_group_factored(
+            tps("t0", "t1", "t2"), op="OR", factors=factors,
+            boost_mode="multiply", **kw,
+        ),
+        score_group_factored(
+            tps("t1", "t0"), op="AND", factors=factors, boost_mode="sum",
+            not_terms=tps("t3"), **kw,
+        ),
+        score_bm25f(
+            [(idf["t0"], [(1.0, make_tp("t0", idf["t0"])),
+                          (0.5, make_tp("t1", idf["t1"]))]),
+             (idf["t2"], [(1.0, make_tp("t2", idf["t2"]))])],
+            **kw,
+        ),
+    ]
+    return out
+
+
+def _assert_same(got, want):
+    assert len(got) == len(want)
+    for g, w in zip(got, want):
+        for a, b in zip(g, w):
+            assert a.dtype == b.dtype
+            np.testing.assert_array_equal(a, b)
+
+
+@given(
+    seed=st.integers(0, 2**32 - 1),
+    n_docs=st.integers(1, 300),
+    block_size=st.sampled_from([2, 8, 64]),
+    k=st.sampled_from([1, 5, 1000]),
+)
+@settings(max_examples=15, deadline=None)
+def test_shared_lists_score_bit_identical(seed, n_docs, block_size, k):
+    """The same answers, array for array and bit for bit, from fresh
+    TermPostings (block probes), from TermPostings over already-decoded
+    shared lists (probes search the decoded arrays), and from shared
+    lists decoded lazily as one batch of specs goes along."""
+    from fastcatsearch3_spark.plans.scoring import PostingList
+
+    lists, dls = _shared_corpus(seed, n_docs, block_size)
+
+    def fresh(t, idf):
+        blob, pos_blob, _ = lists[t]
+        return TermPostings(term=t, idf=idf, blob=blob, pos_blob=pos_blob)
+
+    want = _score_all(lists, dls, n_docs, k, fresh)
+
+    decoded = {t: PostingList(blob, pos) for t, (blob, pos, _) in lists.items()}
+    for pl in decoded.values():
+        pl.entries()
+        pl.positions()
+    _assert_same(
+        _score_all(lists, dls, n_docs, k,
+                   lambda t, idf: TermPostings.over(decoded[t], t, idf)),
+        want,
+    )
+
+    lazy = {t: PostingList(blob, pos) for t, (blob, pos, _) in lists.items()}
+    _assert_same(
+        _score_all(lists, dls, n_docs, k,
+                   lambda t, idf: TermPostings.over(lazy[t], t, idf)),
+        want,
+    )
+
+
+@given(
+    seed=st.integers(0, 2**32 - 1),
+    block_size=st.sampled_from([2, 8, 64]),
+    data=st.data(),
+)
+@settings(max_examples=20, deadline=None)
+def test_probe_over_decoded_list_equals_block_probe(seed, block_size, data):
+    """``_probe`` on a decoded list searches the decoded arrays; on a list
+    not yet decoded it decodes only the candidates' blocks. Same member
+    mask, same contributions."""
+    from unittest import mock
+
+    from fastcatsearch3_spark.plans import scoring
+
+    n_docs = 400
+    lists, dls = _shared_corpus(seed, n_docs, block_size)
+    cand = np.array(
+        sorted(data.draw(st.sets(st.integers(0, n_docs + 5), max_size=60))),
+        dtype=np.uint64,
+    )
+    avgdl = float(dls.mean())
+    for t, (blob, _, df) in lists.items():
+        idf = float(bm25_idf(n_docs, df))
+        tp = TermPostings(term=t, idf=idf, blob=blob)
+        with mock.patch.object(
+            scoring, "decode_blocks", wraps=scoring.decode_blocks
+        ) as blocks:
+            m1, c1 = scoring._probe(tp, cand, K1, B, avgdl)
+        assert not tp.postings.decoded
+        assert blocks.call_count == (1 if cand.size and cand[-1] >= tp.meta.block_first[0] else 0)
+        tp.postings.entries()
+        with mock.patch.object(
+            scoring, "decode_blocks", wraps=scoring.decode_blocks
+        ) as blocks:
+            m2, c2 = scoring._probe(tp, cand, K1, B, avgdl)
+        assert blocks.call_count == 0
+        np.testing.assert_array_equal(m1, m2)
+        assert c1.dtype == c2.dtype
+        np.testing.assert_array_equal(c1, c2)
