@@ -363,18 +363,7 @@ def decode_blocks(
     vals = vbyte_decode(
         b[ragged_ranges(meta.block_data_offsets()[idx], meta.block_bytes[idx])]
     )
-    vs = _starts(3 * cnt - 1)  # each block: cnt-1 gaps, cnt tfs, cnt dls
-    tfs = vals[ragged_ranges(vs + cnt - 1, cnt)]
-    dls = vals[ragged_ranges(vs + 2 * cnt - 1, cnt)]
-    # docnos: block_first at each block's first entry, gaps after it, then
-    # a cumsum reset per block
-    first = meta.block_first[idx]
-    estart = _starts(cnt)
-    full = np.empty(int(cnt.sum()), dtype=np.uint64)
-    full[ragged_ranges(estart + 1, cnt - 1)] = vals[ragged_ranges(vs, cnt - 1)]
-    full[estart] = first
-    acc = np.cumsum(full)
-    return acc - np.repeat(acc[estart] - first, cnt), tfs, dls
+    return _block_entries(vals, _starts(3 * cnt - 1), cnt, meta.block_first[idx])
 
 
 # ---------------------------------------------------------------------------
@@ -528,6 +517,16 @@ def _decode_slice(blobs):
     block_first = cs - (cs[first_blk] - bf_delta[first_blk])
     g = _starts(3 * cnt - 1)
     vs = (v0 + 4 + 4 * nb)[blk_run] + g - g[first_blk]
+    return np.repeat(np.arange(offs.size), n), *_block_entries(vals, vs, cnt, block_first)
+
+
+def _block_entries(
+    vals: np.ndarray, vs: np.ndarray, cnt: np.ndarray, block_first: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The entries of posting blocks decoded into ``vals`` → (docnos,
+    tfs, dls), blocks in order. Block i holds ``cnt[i]`` entries, its
+    values start at ``vals[vs[i]]`` (cnt-1 docno gaps, cnt tfs, cnt dls)
+    and its first docno is ``block_first[i]``."""
     tfs = vals[ragged_ranges(vs + cnt - 1, cnt)]
     dls = vals[ragged_ranges(vs + 2 * cnt - 1, cnt)]
     # docnos: block_first at each block's first entry, gaps after it, then
@@ -537,8 +536,7 @@ def _decode_slice(blobs):
     full[ragged_ranges(estart + 1, cnt - 1)] = vals[ragged_ranges(vs, cnt - 1)]
     full[estart] = block_first
     acc = np.cumsum(full)
-    docnos = acc - np.repeat(acc[estart] - block_first, cnt)
-    return np.repeat(np.arange(offs.size), n), docnos, tfs, dls
+    return acc - np.repeat(acc[estart] - block_first, cnt), tfs, dls
 
 
 def encode_positions_many(

@@ -65,17 +65,11 @@ DL_SAMPLE_MOD = 64
 _NO_SAMPLE = (np.zeros(0, np.int64), np.zeros(0, np.int64))
 
 
-def _audit_one(
-    blob: bytes, pos_blob, df_col: int, cf_col: int
-) -> tuple[int, int, int, int, list[str]]:
+def _audit_one(blob: bytes, pos_blob, df_col: int, cf_col: int) -> tuple:
     """Decode one posting blob and return (decoded_df, decoded_cf,
-    min_docno, max_docno, violations). Never raises."""
-    return _audit_sampled(blob, pos_blob, df_col, cf_col)[:5]
-
-
-def _audit_sampled(blob: bytes, pos_blob, df_col: int, cf_col: int) -> tuple:
-    """``_audit_one`` plus the list's dl sample as (docnos, dls) arrays
-    (empty when the blob does not decode). Never raises."""
+    min_docno, max_docno, violations, sample docnos, sample dls): the
+    dl sample as arrays, empty when the blob does not decode. Never
+    raises."""
     bad: list[str] = []
     try:
         b = np.frombuffer(blob, dtype=np.uint8)
@@ -174,7 +168,7 @@ def postings_audit(spark: SparkSession, store) -> DataFrame:
             }
             pos = pdf["positions"] if has_pos else None
             res = [
-                _audit_sampled(
+                _audit_one(
                     blob,
                     None if pos is None or pos.iloc[i] is None else pos.iloc[i],
                     int(out["df"][i]),

@@ -15,10 +15,11 @@ small text grammar covering the same clause algebra:
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from functools import lru_cache
+
+import pandas as pd
 
 from fastcatsearch3_spark.config import EngineConfig
-from fastcatsearch3_spark.functions.analyzer import tokenize_text
+from fastcatsearch3_spark.functions.analyzer import ANALYZERS
 
 
 @dataclass(frozen=True)
@@ -51,19 +52,58 @@ class Node:
             raise ValueError("not node needs exactly one child")
 
 
-@lru_cache(maxsize=4096)
-def _word_tokens(word: str, cfg: EngineConfig | None) -> tuple[str, ...]:
-    return tuple(tokenize_text(word, cfg))
+def analyze_words(words: list[str], cfg: EngineConfig) -> list[list[str]]:
+    """The analyzed tokens of each query word, from ONE call of the index
+    side's analyzer over all of them. The analyzer runs over a pandas
+    Series, so a call per word would pay that fixed cost per word."""
+    if not words:
+        return []
+    return list(ANALYZERS[cfg.analyzer](pd.Series(words, dtype=object), cfg))
 
 
-def word_tokens(word: str, cfg: EngineConfig | None) -> list[str]:
-    """``tokenize_text`` of one query word, memoized per (word, cfg): a
-    query batch repeats its words, and each analysis runs the analyzer
-    over a one-row pandas Series. ``EngineConfig`` is frozen and
-    hashable, and the Korean user dictionary rides in it, so two configs
-    never share an entry. Returns a fresh list. Whole documents go
-    through ``tokenize_text`` directly, uncached."""
-    return list(_word_tokens(word, cfg))
+class _WordTable:
+    """Query words analyzed in batches. A parse asks ``tokens(word)``; a
+    word not analyzed yet is noted and stands in for its own tokens, and
+    ``fill`` analyzes every noted word in one ``analyze_words`` call. A
+    parse that noted no word read real tokens only."""
+
+    def __init__(self, cfg: EngineConfig):
+        self.cfg = cfg
+        self.known: dict[str, list[str]] = {}
+        self.noted: dict[str, None] = {}
+
+    def tokens(self, word: str) -> list[str]:
+        if word in self.known:
+            return list(self.known[word])
+        self.noted[word] = None
+        return [word]
+
+    def fill(self) -> bool:
+        """Analyze the noted words; False when none was noted."""
+        words = list(self.noted)
+        self.noted.clear()
+        self.known.update(zip(words, analyze_words(words, self.cfg)))
+        return bool(words)
+
+
+def _parse_each(items: list, cfg: EngineConfig, parse_one) -> list:
+    """``parse_one(item, words)`` of every item, every query word they
+    analyze analyzed together: parse them all, analyze the words that
+    pass noted, and parse again until a pass notes none. That pass's
+    results stand, or its first error is raised. Errors of a pass that
+    noted words are dropped: they may come from stand-in tokens."""
+    words = _WordTable(cfg)
+    while True:
+        out, errors = [], []
+        for item in items:
+            try:
+                out.append(parse_one(item, words))
+            except ValueError as e:
+                errors.append(e)
+        if not words.fill():
+            if errors:
+                raise errors[0]
+            return out
 
 
 def tree_terms(node: Node) -> tuple[list[str], list[str]]:
@@ -212,7 +252,18 @@ def parse_multifield(
             )
     if not field_weights:
         raise ValueError("field_weights must name at least one field")
+    return _parse_each(
+        [text], cfg,
+        lambda t, words: _parse_multifield(t, field_weights, words, synonyms),
+    )[0]
 
+
+def _parse_multifield(
+    text: str,
+    field_weights: dict[str, float],
+    words: _WordTable,
+    synonyms: dict[str, list[str]] | None,
+) -> ParsedQuery:
     terms: list[str] = []
     groups: list[int] = []
     boosts: dict[str, float] = {}
@@ -222,14 +273,14 @@ def parse_multifield(
         neg = w.startswith("-") and len(w) > 1
         if neg:
             w = w[1:]
-        toks = word_tokens(w, cfg)
+        toks = words.tokens(w)
         if not toks:
             raise ValueError(f"query word {w!r} analyzed to nothing")
         for t in toks:
             expanded = [t]
             if synonyms and t in synonyms:
                 for s in synonyms[t]:
-                    expanded.extend(word_tokens(s, cfg))
+                    expanded.extend(words.tokens(s))
             for fld, wgt in field_weights.items():
                 pref = "" if fld == "content" else f"{fld}:"
                 for et in expanded:
@@ -390,7 +441,9 @@ def _split_boost(w: str) -> tuple[str, float | None]:
     return w, None
 
 
-def _analyze_word(w: str, cfg: EngineConfig) -> tuple[str, list[str]]:
+def _analyze_word(
+    w: str, cfg: EngineConfig, words: _WordTable
+) -> tuple[str, list[str]]:
     """→ (term key prefix, analyzed tokens). "repo:spark" qualifies the
     token to the repo field — term key "repo:spark" (multi-index
     collections); the default content field stays bare."""
@@ -403,13 +456,14 @@ def _analyze_word(w: str, cfg: EngineConfig) -> tuple[str, list[str]]:
                     f"{cfg.indexed_fields})"
                 )
             pref = "" if fld == "content" else f"{fld}:"
-            return pref, word_tokens(rest, cfg)
-    return "", word_tokens(w, cfg)
+            return pref, words.tokens(rest)
+    return "", words.tokens(w)
 
 
 def _word_node(
     w: str,
     cfg: EngineConfig,
+    words: _WordTable,
     synonyms: dict[str, list[str]] | None,
     boosts_out: dict[str, float] | None = None,
 ) -> Node:
@@ -434,7 +488,7 @@ def _word_node(
     if wc is not None:
         return Node("term", term=note(wc))
     if w.endswith("*") and len(w) > 1:
-        pref, toks = _analyze_word(w[:-1], cfg)
+        pref, toks = _analyze_word(w[:-1], cfg, words)
         if len(toks) != 1:
             raise ValueError(
                 f"prefix term {w!r} must analyze to one token, got {toks}"
@@ -443,13 +497,13 @@ def _word_node(
     fz = _fuzzy_suffix(w)
     if fz is not None:
         stem, d = fz
-        pref, toks = _analyze_word(stem, cfg)
+        pref, toks = _analyze_word(stem, cfg, words)
         if len(toks) != 1:
             raise ValueError(
                 f"fuzzy term {w!r} must analyze to one token, got {toks}"
             )
         return Node("term", term=note(f"{pref}{toks[0]}~{d}"))
-    pref, toks = _analyze_word(w, cfg)
+    pref, toks = _analyze_word(w, cfg, words)
     if not toks:
         raise ValueError(f"query word {w!r} analyzed to nothing")
     leaves: list[Node] = []
@@ -459,7 +513,7 @@ def _word_node(
             syn_leaves = tuple(
                 Node("term", term=note(st))
                 for s in synonyms[t]
-                for st in word_tokens(s, cfg)
+                for st in words.tokens(s)
             )
             if syn_leaves:
                 leaf = Node("or", children=(leaf,) + syn_leaves)
@@ -470,6 +524,7 @@ def _word_node(
 def _parse_tree(
     text: str,
     cfg: EngineConfig,
+    words: _WordTable,
     synonyms: dict[str, list[str]] | None,
     boosts_out: dict[str, float] | None = None,
 ) -> Node:
@@ -561,7 +616,7 @@ def _parse_tree(
         if t is None or t == ")":
             raise ValueError(f"unexpected token in query {text!r}")
         pos += 1
-        return _word_node(t, cfg, synonyms, boosts_out)
+        return _word_node(t, cfg, words, synonyms, boosts_out)
 
     root = parse_expr()
     if peek() is not None:
@@ -570,16 +625,35 @@ def _parse_tree(
 
 
 def parse_query(
-    text: str,
+    text: str | list[str],
     cfg: EngineConfig | None = None,
     synonyms: dict[str, list[str]] | None = None,
-) -> ParsedQuery:
+) -> ParsedQuery | list[ParsedQuery]:
     """Parse + analyze a query string (Q-1 then Q-2: the query side runs
     the SAME analyzer as the index side — core:ir.analysis reuse [K]).
     ``synonyms`` maps an analyzed term to expansion words (each re-analyzed),
     mirroring the reference's query-side synonym dictionary
-    (core:ir.analysis synonym term option [M])."""
+    (core:ir.analysis synonym term option [M]).
+
+    Given a list of query strings (a batch), returns their parses in
+    order, the batch's words analyzed in one analyzer call per parse
+    pass that meets new words (``_parse_each``), not one call per word;
+    raises the first failing text's error, as parsing them in order
+    would."""
     cfg = cfg or EngineConfig()
+    out = _parse_each(
+        [text] if isinstance(text, str) else list(text), cfg,
+        lambda t, words: _parse_query(t, cfg, words, synonyms),
+    )
+    return out[0] if isinstance(text, str) else out
+
+
+def _parse_query(
+    text: str,
+    cfg: EngineConfig,
+    words: _WordTable,
+    synonyms: dict[str, list[str]] | None,
+) -> ParsedQuery:
     import re as _re
 
     # phrase spans first: "exact phrase" → adjacency constraint (J-5);
@@ -591,7 +665,7 @@ def parse_query(
     for span, _tilde, slop in _re.findall(r'"([^"]*)"(~(\d+))?', text):
         ptoks: list[str] = []
         for w in span.split():
-            ptoks.extend(word_tokens(w, cfg))
+            ptoks.extend(words.tokens(w))
         if len(ptoks) >= 2:
             phrases.append(ptoks)
             phrase_slops.append(int(slop) if slop else 0)
@@ -603,7 +677,7 @@ def parse_query(
         # reference's arbitrarily nested Clause tree; the flat grammar
         # below stays byte-identical for unparenthesized queries)
         boosts: dict[str, float] = {}
-        root = _parse_tree(text, cfg, synonyms, boosts)
+        root = _parse_tree(text, cfg, words, synonyms, boosts)
         if phrase_words:
             # phrase words are required scored terms on top of the
             # positional constraint, exactly like the flat path
@@ -650,7 +724,7 @@ def parse_query(
     pos_words = phrase_words + pos_words
 
     def analyze_word(w: str) -> tuple[str, list[str]]:
-        return _analyze_word(w, cfg)
+        return _analyze_word(w, cfg, words)
 
     terms: list[str] = []
     groups: list[int] = []
@@ -729,7 +803,7 @@ def parse_query(
             groups.append(gid)
             if synonyms and not pref and t in synonyms:
                 for s in synonyms[t]:
-                    for st in word_tokens(s, cfg):
+                    for st in words.tokens(s):
                         terms.append(note(st))
                         groups.append(gid)
             gid += 1

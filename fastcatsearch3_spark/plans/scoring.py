@@ -34,7 +34,7 @@ BM25 (k1=1.2, b=0.75 pinned in EngineConfig; BASELINE.md):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import InitVar, dataclass, field
 
 import numpy as np
 
@@ -102,36 +102,27 @@ class TermPostings:
     """One query term's posting list within a (segment, shard) group:
     the per-query part (``idf`` with its boost, ``avgdl``) over a
     ``PostingList`` (``postings``), the part a batch shares.
-    ``pos_blob`` (optional) is the positions sidecar for phrase queries.
 
-    Built from a blob, the term owns a fresh list; ``over`` puts it on a
-    list the caller shares, so each list is decoded at most once however
-    many queries read it."""
+    Given ``postings``, the term reads that list, which the caller may
+    share, so each list is decoded at most once however many queries
+    read it. Otherwise the term owns a fresh list built from ``blob``,
+    ``pos_blob`` (the positions sidecar for phrase queries, optional)
+    and ``meta`` (a decoded header, optional)."""
 
     term: str
     idf: float
-    blob: bytes
-    pos_blob: bytes | None = None
+    blob: InitVar[bytes | None] = None
+    pos_blob: InitVar[bytes | None] = None
     # per-field average document length (multi-index collections): a
     # field-qualified term normalizes against ITS field's avgdl; None →
     # the caller's global (content) avgdl
     avgdl: float | None = None
-    # a pre-decoded header; left None, it is decoded from the blob
-    meta: PostingMeta | None = None
-    postings: PostingList = field(init=False, repr=False, compare=False)
+    meta: InitVar[PostingMeta | None] = None
+    postings: PostingList | None = field(default=None, repr=False, compare=False)
 
-    def __post_init__(self):
-        self.postings = PostingList(self.blob, self.pos_blob, self.meta)
-        self.meta = self.postings.meta
-
-    @classmethod
-    def over(
-        cls, plist: PostingList, term: str, idf: float,
-        avgdl: float | None = None,
-    ) -> "TermPostings":
-        tp = cls(term, idf, plist.blob, plist.pos_blob, avgdl, plist.meta)
-        tp.postings = plist
-        return tp
+    def __post_init__(self, blob, pos_blob, meta):
+        if self.postings is None:
+            self.postings = PostingList(blob, pos_blob, meta)
 
     def adl(self, global_avgdl: float) -> float:
         return self.avgdl if self.avgdl is not None else global_avgdl
@@ -139,14 +130,16 @@ class TermPostings:
     def upper_bound(self, k1: float, b: float, avgdl: float) -> float:
         """idf × max over blocks of tf_norm(max_tf, min_dl) — valid because
         tf_norm is increasing in tf and decreasing in dl."""
+        meta = self.postings.meta
         ub = bm25_tf_norm(
-            self.meta.block_maxtf, self.meta.block_mindl, k1, b, self.adl(avgdl)
+            meta.block_maxtf, meta.block_mindl, k1, b, self.adl(avgdl)
         )
         return float(self.idf * ub.max())
 
     def block_upper_bounds(self, k1: float, b: float, avgdl: float) -> np.ndarray:
+        meta = self.postings.meta
         return self.idf * bm25_tf_norm(
-            self.meta.block_maxtf, self.meta.block_mindl, k1, b, self.adl(avgdl)
+            meta.block_maxtf, meta.block_mindl, k1, b, self.adl(avgdl)
         )
 
 
@@ -167,13 +160,14 @@ def _probe(
     Returns (mask over cand of membership, contribution where member).
     A list the kernel call has already decoded is searched as it is;
     otherwise only the blocks that may hold a candidate are decoded."""
-    if tp.postings.decoded:
-        d, t, l = tp.postings.entries()
+    pl = tp.postings
+    if pl.decoded:
+        d, t, l = pl.entries()
     else:
-        blocks = _blocks_containing(tp.meta, cand)
+        blocks = _blocks_containing(pl.meta, cand)
         if blocks.size == 0:
             return np.zeros(cand.size, dtype=bool), np.zeros(0)
-        d, t, l = decode_blocks(tp.blob, tp.meta, blocks)
+        d, t, l = decode_blocks(pl.blob, pl.meta, blocks)
     pos = np.searchsorted(d, cand)
     ok = pos < d.size
     member = np.zeros(cand.size, dtype=bool)
@@ -202,7 +196,7 @@ def phrase_mask(
     keys: np.ndarray | None = None
     cand64 = cand.astype(np.int64)
     for j, tp in enumerate(phrase_tps):
-        if tp.pos_blob is None:
+        if tp.postings.pos_blob is None:
             raise ValueError(
                 f"term {tp.term!r} has no positions — build the index with "
                 "EngineConfig(store_positions=True) to run phrase queries"
@@ -623,7 +617,7 @@ def _score_and_bmw(
 ) -> tuple[np.ndarray, np.ndarray]:
     """Intersection starting from the rarest term; longer lists are only
     decoded blockwise where they can overlap the shrinking candidate set."""
-    order = sorted(terms, key=lambda t: (t.meta.n, t.term))
+    order = sorted(terms, key=lambda t: (t.postings.meta.n, t.term))
     lead = order[0]
     d, t, l = lead.postings.entries()
     cand = d.astype(np.int64)
@@ -657,7 +651,7 @@ def _score_or_maxscore(
 
     size = 0
     for tp in terms:
-        size = max(size, tp.meta.last_docno + 1)
+        size = max(size, tp.postings.meta.last_docno + 1)
     acc = np.zeros(size, dtype=np.float64)
     present = np.zeros(size, dtype=bool)
     theta = -np.inf
@@ -809,7 +803,7 @@ def _score_or_maxscore_factored(
 
     size = factors.size
     for tp in terms:
-        size = max(size, tp.meta.last_docno + 1)
+        size = max(size, tp.postings.meta.last_docno + 1)
     if factors.size < size:
         neutral = 1.0 if boost_mode == "multiply" else 0.0
         factors = np.concatenate(

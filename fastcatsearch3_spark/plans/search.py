@@ -40,7 +40,9 @@ return identical answers:
          decodes each of the group's posting lists at most once, on
          first use, and every query of the batch shares that decode
          (``_group_postings``); a list no query reads in full is only
-         block-probed. The call emits one hits frame for the group;
+         block-probed, and a list is freed once the last query that
+         reads it has scored (``_last_reads``). The call emits one
+         hits frame for the group;
     Q-6  top-k: pandas sorts the hits (score desc, doc_id asc) and pages
          them (offset / after), per query_id for a batch;
     Q-5  hydrate: doc_ids come from the per-epoch docmap; the result
@@ -88,7 +90,11 @@ from pyspark.sql import functions as F
 
 from fastcatsearch3_spark.config import EngineConfig
 from fastcatsearch3_spark.functions.vbyte import decode_postings_many, ragged_ranges
-from fastcatsearch3_spark.plans.query import ParsedQuery, parse_query, word_tokens
+from fastcatsearch3_spark.plans.query import (
+    ParsedQuery,
+    analyze_words,
+    parse_query,
+)
 from fastcatsearch3_spark.plans.scoring import (
     PostingList,
     TermPostings,
@@ -324,7 +330,29 @@ def _group_postings(pdf: pd.DataFrame) -> "dict[str, PostingList]":
     }
 
 
+def _last_reads(readers: list) -> list[list[str]]:
+    """Per reader (the terms one spec reads, in kernel order), the terms
+    no later reader reads: the kernel drops a list after its last
+    reader, so a list's decodes live only while a spec still needs
+    them."""
+    last: dict[str, int] = {}
+    for i, terms in enumerate(readers):
+        for t in terms:
+            last[t] = i
+    out: list[list[str]] = [[] for _ in readers]
+    for t, i in last.items():
+        out[i].append(t)
+    return out
+
+
+def _drop(lists: dict, terms: list[str]) -> None:
+    """Free the lists (and their decodes) of terms no later spec reads."""
+    for t in terms:
+        lists.pop(t, None)
+
+
 _NO_DOCNOS = np.zeros(0, dtype=np.uint64)
+_NO_HITS = (_NO_DOCNOS, np.zeros(0))
 _EMPTY_HITS = _GroupHits("score").frame(0, 0)
 
 
@@ -349,7 +377,8 @@ def make_kernel(
 
     ``pdf``: the group's rows of the fetched terms (``positions`` set
     only for phrase terms). Each list is decoded at most once per call
-    and shared by every spec (``_group_postings``). ``mask_pdf`` (or
+    and shared by every spec (``_group_postings``), then freed after
+    the last spec that reads it. ``mask_pdf`` (or
     None): the group's mask rows, kind -1 denied docnos and kind 1
     allowed docnos — per query_id when ``per_query_allow``, else for
     every query. A query in ``allow_qids`` with no allow rows here
@@ -361,6 +390,10 @@ def make_kernel(
     merge before the single saturation (``score_bm25f``), AND across
     words. ``after_score``: the cursor of ``search_index``'s ``after``
     paging (``score_group``)."""
+    last_reads = _last_reads(
+        [(*s.qidf, *s.nset) for s in specs]
+        + [[key for _, fkeys in words for _, _, key in fkeys] for _, words in f_specs]
+    )
 
     def kernel(pdf: pd.DataFrame, mask_pdf: pd.DataFrame | None) -> pd.DataFrame:
         if len(pdf) == 0:
@@ -395,10 +428,10 @@ def make_kernel(
 
         def posting(t: str, idf: float, adl: float | None) -> TermPostings | None:
             pl = lists.get(t)
-            return None if pl is None else TermPostings.over(pl, t, idf, adl)
+            return None if pl is None else TermPostings(t, idf, avgdl=adl, postings=pl)
 
-        hits = _GroupHits("score")
-        for s in specs:
+        def score_spec(s):
+            """(docnos, scores) of one spec's hits here."""
             flat = s.tree is None
             by_term = {}
             for t, idf in s.qidf.items():
@@ -406,7 +439,7 @@ def make_kernel(
                 if tp is not None:
                     by_term[t] = tp
             if not by_term:
-                continue
+                return _NO_HITS
             phrase_tps = None
             if s.phrases:
                 phrase_tps = [
@@ -419,7 +452,7 @@ def make_kernel(
                 if (s.op == "AND" or not flat) and any(
                     p is None for p in phrase_tps
                 ):
-                    continue
+                    return _NO_HITS
             if flat and s.op == "AND":
                 # required coverage here: every term (with synonym groups,
                 # every group) must have a posting list in this group
@@ -428,7 +461,7 @@ def make_kernel(
                     if s.groups is not None else len(by_term)
                 )
                 if covered < (s.n_groups if s.groups is not None else len(s.qidf)):
-                    continue
+                    return _NO_HITS
             pos_tps = list(by_term.values())
             neg_tps = []
             for t in s.nset:
@@ -440,7 +473,7 @@ def make_kernel(
                 elif t not in by_term:
                     # tree NOT leaves are evaluated inside the tree
                     pos_tps.append(tp)
-            docnos, scores = score_group(
+            return score_group(
                 pos_tps, k=k, op=s.op, mode=mode, k1=k1, b=b, avgdl=avgdl,
                 not_terms=neg_tps, allow_docnos=allow(s.qid), deny_docnos=deny,
                 groups=(
@@ -452,8 +485,8 @@ def make_kernel(
                 tree=s.tree, tree_pos_terms=None if flat else set(s.qidf),
                 phrase_only_terms=s.phrase_only, after_score=after_score,
             )
-            hits.add(s.qid, docnos, scores)
-        for qid, words in f_specs:
+
+        def score_f_spec(qid, words):
             ws = []
             for idf, fkeys in words:
                 ftps = [
@@ -461,15 +494,20 @@ def make_kernel(
                     if (tp := posting(key, idf, adl)) is not None
                 ]
                 if not ftps:
-                    break  # AND: this word is absent from this group
+                    return _NO_HITS  # AND: this word is absent from this group
                 ws.append((idf, ftps))
-            if len(ws) < len(words):
-                continue
-            docnos, scores = score_bm25f(
+            return score_bm25f(
                 ws, k=k, k1=k1, b=b, avgdl=avgdl,
                 deny_docnos=deny, allow_docnos=allow(qid),
             )
-            hits.add(qid, docnos, scores)
+
+        hits = _GroupHits("score")
+        for i, s in enumerate(specs):
+            hits.add(s.qid, *score_spec(s))
+            _drop(lists, last_reads[i])
+        for i, (qid, words) in enumerate(f_specs, len(specs)):
+            hits.add(qid, *score_f_spec(qid, words))
+            _drop(lists, last_reads[i])
         return hits.frame(seg, shard)
 
     return kernel
@@ -759,6 +797,13 @@ def expand_pattern(
             ) from None
         raise
     return [r["term"] for r in rows]
+
+
+def _parse_strings(queries: dict, cfg: EngineConfig) -> dict:
+    """``queries`` with every query string parsed, all of them in one
+    ``parse_query`` batch; other values pass through, in order."""
+    texts = {qid: q for qid, q in queries.items() if isinstance(q, str)}
+    return {**queries, **dict(zip(texts, parse_query(list(texts.values()), cfg)))}
 
 
 def _expand_prefixes(
@@ -1791,8 +1836,7 @@ def function_score_many(
         return empty
 
     parsed: dict[str, ParsedQuery] = {}
-    for qid, q in queries.items():
-        pq = parse_query(q, cfg) if isinstance(q, str) else q
+    for qid, pq in _parse_strings(queries, cfg).items():
         pq = _expand_prefixes(spark, store, pq, cfg)
         if pq is None:
             continue
@@ -1818,6 +1862,7 @@ def function_score_many(
     if not specs:
         return empty
     fetch = sorted({t for s in specs for t in (*s.qidf, *s.nset)})
+    last_reads = _last_reads([(*s.qidf, *s.nset) for s in specs])
     term_avgdl = _term_avgdl(fetch, stats)
     k1, b = cfg.k1, cfg.b
     neutral = 1.0 if boost_mode == "multiply" else 0.0
@@ -1840,22 +1885,22 @@ def function_score_many(
 
         def postings(terms: dict) -> list[TermPostings]:
             return [
-                TermPostings.over(lists[t], t, idf, term_avgdl.get(t))
+                TermPostings(t, idf, avgdl=term_avgdl.get(t), postings=lists[t])
                 for t, idf in terms.items() if t in lists
             ]
 
         hits = _GroupHits(*_FS_COLS)
-        for s in specs:
+        for s, done in zip(specs, last_reads):
             pos_tps = postings(s.qidf)
-            if not pos_tps or (s.op == "AND" and len(pos_tps) < len(s.qidf)):
-                continue
-            docnos, bm25, fac, finals = score_group_factored(
-                pos_tps, k=k, op=s.op, k1=k1, b=b, avgdl=avgdl,
-                factors=factors, boost_mode=boost_mode,
-                not_terms=postings(dict.fromkeys(s.nset, 0.0)),
-                deny_docnos=deny,
-            )
-            hits.add(s.qid, docnos, bm25, fac, finals)
+            # AND needs every term here
+            if pos_tps and (s.op != "AND" or len(pos_tps) == len(s.qidf)):
+                hits.add(s.qid, *score_group_factored(
+                    pos_tps, k=k, op=s.op, k1=k1, b=b, avgdl=avgdl,
+                    factors=factors, boost_mode=boost_mode,
+                    not_terms=postings(dict.fromkeys(s.nset, 0.0)),
+                    deny_docnos=deny,
+                ))
+            _drop(lists, done)
         return hits.frame(seg, shard)
 
     cand = (
@@ -2324,8 +2369,8 @@ def _bm25f_spec(
                 f"(indexed: {cfg.indexed_fields})"
             )
     bases: list[str] = []
-    for w in fq.text.split():
-        toks = word_tokens(w, cfg)
+    words = fq.text.split()
+    for w, toks in zip(words, analyze_words(words, cfg)):
         if not toks:
             raise ValueError(f"{where}query word {w!r} analyzed to nothing")
         bases.extend(t for t in toks if t not in bases)
@@ -2388,14 +2433,13 @@ def search_many(
     stats = store.stats()
     parsed: dict[str, ParsedQuery] = {}
     f_specs: list[tuple] = []
-    for qid, q in queries.items():
+    for qid, q in _parse_strings(queries, cfg).items():
         if isinstance(q, Bm25fQuery):
             fs = _bm25f_spec(spark, store, qid, q, cfg, stats)
             if fs is not None:
                 f_specs.append(fs)
             continue
-        pq = parse_query(q, cfg) if isinstance(q, str) else q
-        pq = _expand_prefixes(spark, store, pq, cfg)
+        pq = _expand_prefixes(spark, store, q, cfg)
         if pq is not None:  # None: an AND'd prefix matched nothing
             parsed[qid] = pq
     n_docs = stats["n_docs"]

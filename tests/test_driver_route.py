@@ -136,7 +136,8 @@ def test_batch_decodes_each_list_once(spark, states, monkeypatch):
     """A search_many kernel call decodes each (segment, shard, term) list
     in full at most once, and its positions at most once, however many
     queries of the batch read it; run one at a time, the same queries
-    decode the shared lists again."""
+    decode the shared lists again. The batch's texts are parsed in one
+    ``parse_query`` call, the parse layer's one entry point."""
     from collections import Counter
 
     from fastcatsearch3_spark.plans import scoring
@@ -146,12 +147,14 @@ def test_batch_decodes_each_list_once(spark, states, monkeypatch):
     col = Collection(spark, roots["mutated"], CFG)
     counts: Counter = Counter()
     call = [0]
+    held = []  # the kernel frees lists early: hold keys so ids stay unique
 
     def counted(fn, kind):
         # keyed by the list's own second argument (its header for the
         # entries, its decoded tf array for the positions): equal blobs
         # of two terms can be one bytes object after the Arrow read
         def wrapped(blob, own, *a):
+            held.append(own)
             counts[call[0], kind, id(own)] += 1
             return fn(blob, own, *a)
         return wrapped
@@ -174,9 +177,18 @@ def test_batch_decodes_each_list_once(spark, states, monkeypatch):
         scoring, "decode_positions_blob",
         counted(scoring.decode_positions_blob, "positions"),
     )
+    parses = []
+    real_parse = search_mod.parse_query
+
+    def parse_query(text, *a):
+        parses.append(text)
+        return real_parse(text, *a)
+
+    monkeypatch.setattr(search_mod, "parse_query", parse_query)
     queries = _queries(base)
     rows, jobs = _jobs(spark, "decode-once", lambda: _rows(col.search_many(queries, k=10)))
     assert jobs == [] and {r[0] for r in rows} == set(queries)
+    assert parses == [list(queries.values())]
     assert call[0] > 1 and counts
     assert max(counts.values()) == 1
     assert any(kind == "positions" for _, kind, _ in counts)

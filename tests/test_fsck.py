@@ -253,7 +253,7 @@ def test_bad_block_size_is_violation_not_crash():
     tampered = vbyte_encode(meta_vals).tobytes() + bytes(
         b[meta.data_offset :]
     )
-    dec_df, dec_cf, mn, mx, bad = _audit_one(tampered, None, 5, 5)
+    dec_df, dec_cf, mn, mx, bad = _audit_one(tampered, None, 5, 5)[:5]
     assert "bad_block_size" in bad
 
 

@@ -101,26 +101,28 @@ def test_memo_keyed_on_dictionary_contents():
     assert korean_tokenize_series(s, dic=custom).iloc[0] == ["김치", "찌개", "주문"]
 
 
-def test_query_word_memo_keyed_on_user_dict():
-    """The query-side word memo (``plans.query.word_tokens``) keys on the
-    whole config, so two user dictionaries never share an entry; each
-    call returns a fresh list equal to the uncached analysis."""
+def test_batched_query_analysis_keyed_on_user_dict():
+    """Query words are analyzed in one analyzer call per parse pass
+    (``plans.query.analyze_words``) under the query's own config, so a
+    user dictionary changes the batch's tokens as it changes
+    ``tokenize_text``'s."""
     from fastcatsearch3_spark.functions.analyzer import tokenize_text
-    from fastcatsearch3_spark.plans.query import parse_query, word_tokens
+    from fastcatsearch3_spark.plans.query import analyze_words, parse_query
 
     plain = EngineConfig(analyzer="korean_morph")
     custom = EngineConfig(analyzer="korean_morph", user_dict=("김치찌개=김치+찌개",))
-    for cfg in (plain, custom, plain, custom):
-        assert word_tokens("김치찌개를", cfg) == tokenize_text("김치찌개를", cfg)
-    assert word_tokens("김치찌개를", plain) == ["김치찌개"]
-    assert word_tokens("김치찌개를", custom) == ["김치찌개", "김치", "찌개"]
-    first = word_tokens("김치찌개를", custom)
-    again = word_tokens("김치찌개를", custom)
-    assert first == again and first is not again
-    first.append("mutated")
-    assert word_tokens("김치찌개를", custom) == ["김치찌개", "김치", "찌개"]
-    assert parse_query("김치찌개를", plain).terms == ["김치찌개"]
-    assert parse_query("김치찌개를", custom).terms == ["김치찌개", "김치", "찌개"]
+    words = ["김치찌개를", "주문", "김치찌개를"]
+    for cfg in (plain, custom):
+        assert analyze_words(words, cfg) == [tokenize_text(w, cfg) for w in words]
+    assert analyze_words(["김치찌개를"], plain) == [["김치찌개"]]
+    assert analyze_words(["김치찌개를"], custom) == [["김치찌개", "김치", "찌개"]]
+    texts = ["김치찌개를", "김치찌개를 주문"]
+    assert [p.terms for p in parse_query(texts, plain)] == [
+        ["김치찌개"], ["김치찌개", "주문"],
+    ]
+    assert [p.terms for p in parse_query(texts, custom)] == [
+        ["김치찌개", "김치", "찌개"], ["김치찌개", "김치", "찌개", "주문"],
+    ]
 
 
 def test_user_dictionary_simple_word():

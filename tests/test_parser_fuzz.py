@@ -25,6 +25,7 @@ from hypothesis import strategies as st
 
 from fastcatsearch3_spark.config import EngineConfig
 from fastcatsearch3_spark.functions.analyzer import tokenize_text
+from fastcatsearch3_spark.plans import query as query_mod
 from fastcatsearch3_spark.plans.query import ParsedQuery, parse_query
 
 CFG = EngineConfig()
@@ -62,6 +63,41 @@ def test_parse_query_total(q):
         assert len(ph) >= 2
     for b in parsed.boosts.values():
         assert b > 0
+
+
+_SYNONYMS = {"spark": ["Flink", "stream processing"], "join": ["hashJoin"]}
+
+
+@settings(max_examples=100, suppress_health_check=[HealthCheck.too_slow])
+@given(
+    st.lists(
+        st.lists(st.one_of(_WORDS, _JUNK), max_size=8).map(" ".join),
+        min_size=1, max_size=6,
+    ),
+    st.booleans(),
+)
+def test_batch_parse_equals_per_word_analysis(texts, with_synonyms):
+    """A batch parse, its words analyzed in one analyzer call per pass,
+    gives each text the parse that analyzing word by word gives, and
+    raises the first failing text's error."""
+
+    class PerWord:  # analyzes each word on its own, as it is asked
+        def tokens(self, word):
+            return tokenize_text(word, CFG)
+
+    syn = _SYNONYMS if with_synonyms else None
+    want, first_error = [], None
+    for t in texts:
+        try:
+            want.append(query_mod._parse_query(t, CFG, PerWord(), syn))
+        except ValueError as e:
+            first_error = first_error or str(e)
+    if first_error is not None:
+        with pytest.raises(ValueError) as err:
+            parse_query(texts, CFG, syn)
+        assert str(err.value) == first_error
+    else:
+        assert parse_query(texts, CFG, syn) == want
 
 
 # ---- structured valid-query generator ------------------------------------

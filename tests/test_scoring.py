@@ -536,14 +536,14 @@ def test_shared_lists_score_bit_identical(seed, n_docs, block_size, k):
         pl.positions()
     _assert_same(
         _score_all(lists, dls, n_docs, k,
-                   lambda t, idf: TermPostings.over(decoded[t], t, idf)),
+                   lambda t, idf: TermPostings(t, idf, postings=decoded[t])),
         want,
     )
 
     lazy = {t: PostingList(blob, pos) for t, (blob, pos, _) in lists.items()}
     _assert_same(
         _score_all(lists, dls, n_docs, k,
-                   lambda t, idf: TermPostings.over(lazy[t], t, idf)),
+                   lambda t, idf: TermPostings(t, idf, postings=lazy[t])),
         want,
     )
 
@@ -577,7 +577,7 @@ def test_probe_over_decoded_list_equals_block_probe(seed, block_size, data):
         ) as blocks:
             m1, c1 = scoring._probe(tp, cand, K1, B, avgdl)
         assert not tp.postings.decoded
-        assert blocks.call_count == (1 if cand.size and cand[-1] >= tp.meta.block_first[0] else 0)
+        assert blocks.call_count == (1 if cand.size and cand[-1] >= tp.postings.meta.block_first[0] else 0)
         tp.postings.entries()
         with mock.patch.object(
             scoring, "decode_blocks", wraps=scoring.decode_blocks
@@ -587,3 +587,60 @@ def test_probe_over_decoded_list_equals_block_probe(seed, block_size, data):
         np.testing.assert_array_equal(m1, m2)
         assert c1.dtype == c2.dtype
         np.testing.assert_array_equal(c1, c2)
+
+
+def test_kernel_frees_each_list_after_its_last_reader(monkeypatch):
+    """A kernel call keeps a decoded list only while a later spec of the
+    batch still reads it: a list read by one spec is freed before the
+    next spec decodes, a list read again later stays decoded (and is
+    decoded once), and nothing decoded outlives the call."""
+    import weakref
+
+    import pandas as pd
+
+    from fastcatsearch3_spark.plans import scoring
+    from fastcatsearch3_spark.plans.query import parse_query
+    from fastcatsearch3_spark.plans.search import make_kernel, query_spec
+
+    n_docs = 300
+    lists, dls = _shared_corpus(7, n_docs, 8)
+    pdf = pd.DataFrame({
+        "segment_id": 0, "shard": 0, "term": list(lists),
+        "postings": [blob for blob, _, _ in lists.values()],
+    })
+    dfmap = {t: df for t, (_, _, df) in lists.items()}
+    decodes = []  # per full decode: (term's df, decodes still alive then)
+
+    def alive_refs():
+        return [r for *_, r in decodes if r() is not None]
+
+    def tracked(blob, meta):
+        out = real(blob, meta)
+        decodes.append((meta.n, len(alive_refs()), weakref.ref(out[0])))
+        return out
+
+    real = scoring.decode_postings
+    monkeypatch.setattr(scoring, "decode_postings", tracked)
+
+    def run(texts):
+        decodes.clear()
+        specs = [
+            query_spec(f"q{i}", parse_query(t), dfmap, n_docs)
+            for i, t in enumerate(texts)
+        ]
+        kernel = make_kernel(
+            specs, k=5, mode="taat", k1=K1, b=B, avgdl=float(dls.mean()),
+            term_avgdl={},
+        )
+        hits = kernel(pdf, None)
+        assert set(hits["query_id"]) == {s.qid for s in specs}
+        return [(n, alive) for n, alive, _ in decodes]
+
+    # each list read by one spec only: freed before the next decode
+    assert run(["t0", "t1", "t2"]) == [
+        (dfmap["t0"], 0), (dfmap["t1"], 0), (dfmap["t2"], 0),
+    ]
+    assert alive_refs() == []
+    # t0 is read again by the last spec: kept (one decode) until then
+    assert run(["t0", "t1", "t0"]) == [(dfmap["t0"], 0), (dfmap["t1"], 1)]
+    assert alive_refs() == []
