@@ -7,8 +7,9 @@ query latency (p50/p95 over the query mix). Runs at $SPARK_GRAFT_SF_DIR
 
 Prints ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ...,
-   "build_docs_per_sec": ..., "query_p50_sec": ..., "query_p95_sec": ...}
+   "queries": {name: sec, ...}, "sf": ..., "cpus": ..., "git_sha": ...,
+   "loadavg": [1, 5, 15 min], "build_docs_per_sec": ...,
+   "query_p50_sec": ..., "query_p95_sec": ...}
 
 Noise policy (this shared host swings one-sided by 2× between identical
 runs — BENCH/WARM_AB_r03.md): warm queries are min-of-3, dedup pipelines
@@ -30,6 +31,19 @@ import tempfile
 import time
 
 import numpy as np
+
+
+def _git_sha() -> str | None:
+    """The checkout's commit, None outside a git work tree."""
+    import subprocess
+
+    try:
+        return subprocess.run(
+            ["git", "rev-parse", "HEAD"], cwd=os.path.dirname(os.path.abspath(__file__)),
+            capture_output=True, text=True, check=True,
+        ).stdout.strip()
+    except (OSError, subprocess.CalledProcessError):
+        return None
 
 
 def main() -> None:
@@ -435,6 +449,8 @@ def main() -> None:
         "sf": sf,
         "n_docs": int(n_docs),
         "cpus": cpus,
+        "git_sha": _git_sha(),
+        "loadavg": list(os.getloadavg()),
         "build_docs_per_sec": round(n_docs / timings["index_build"], 1),
         "query_p50_sec": round(float(np.percentile(lat, 50)), 4),
         "query_p95_sec": round(float(np.percentile(lat, 95)), 4),

@@ -41,30 +41,31 @@ means a scorer can establish a threshold and then decode ONLY the blocks
 whose upper bound is competitive — true block skipping, not just score
 skipping.
 
-Two APIs, one wire format. The query kernels read one term at a time with
-``decode_meta`` / ``decode_postings`` / ``decode_blocks`` (a kernel call
-holds each list's ``PostingMeta`` and full decode once, in
-``plans.scoring.PostingList``; ``decode_blocks`` decodes the selected
-blocks in one vbyte pass). The write path — the build's pack stage,
-appends and compaction — works on many posting lists at once, so it uses
-the batched codec, which crosses into numpy once per batch instead of
-once per list:
+One wire format, one batched codec: every function works on many posting
+lists at once and crosses into numpy once per batch instead of once per
+list; the one-list functions are one-list calls of it.
 
   * ``encode_postings_many(run_lens, docnos, tfs, dls, block_size)`` —
     the lists are consecutive runs of flat arrays; one ``vbyte_encode``
     for all block data and one for all meta streams, interleaved per run
-    with ragged gathers. Returns one blob per run.
-  * ``decode_postings_many(blobs)`` → (row, docnos, tfs, dls) — the blobs
-    are joined and decoded by one ``vbyte_decode``; every blob ends on a
-    terminal byte, so a blob's first value is found by counting the
-    terminal bytes before its offset.
-  * ``encode_positions_many`` / ``split_positions_many`` — the positions
-    sidecar, on one byte buffer with per-entry (start, len) arrays.
+    with ragged gathers. Returns one blob per run (``encode_postings``).
+  * ``decode_lists(blobs, budget)`` → per blob its ``PostingMeta`` and
+    entries — the query kernel's reader (``plans.scoring.PostingList``).
+    The blobs are joined and decoded by one vbyte pass; every blob ends
+    on a terminal byte, so a blob's first value is found by counting the
+    terminal bytes before its offset. With ``budget`` only the smallest
+    lists are decoded in full, the others' headers are read from bounded
+    prefixes (``decode_meta``, ``decode_postings``).
+  * ``decode_postings_many(blobs)`` → (row, docnos, tfs, dls), flat — the
+    same pass, for the write path.
+  * ``decode_blocks`` decodes selected blocks of one list in one pass
+    (the query kernel's probes).
+  * ``encode_positions_many`` / ``split_positions_many`` /
+    ``decode_positions_many`` — the positions sidecar, on one byte buffer
+    with per-entry (start, len) arrays (``encode_positions_blob``,
+    ``split_positions_bytes``, ``decode_positions_blob``).
 
-The batched functions produce the same bytes as the one-list ones
-(``encode_postings``, ``encode_positions_blob`` and
-``split_positions_bytes`` are one-list calls of them;
-tests/test_vbyte.py pins the bytes). Each batched call cuts its input at
+tests/test_vbyte.py pins the bytes. Each batched call cuts its input at
 list boundaries into slices of at most ``BATCH_ENTRIES`` entries
 (decode: blob bytes), so its temporaries stay bounded on a large Spark
 partition.
@@ -73,6 +74,7 @@ partition.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import NamedTuple
 
 import numpy as np
 
@@ -132,16 +134,24 @@ def vbyte_decode(buf: np.ndarray | bytes) -> np.ndarray:
 
 def _vbyte_decode_ends(b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """``vbyte_decode`` of a non-empty uint8 array, plus the index of each
-    value's terminal byte."""
-    is_last = (b & _CONT) == 0
-    ends = np.nonzero(is_last)[0]
+    value's terminal byte. Gathers byte k of every value longer than k,
+    for k = 0, 1, ... (most values take one or two bytes), instead of
+    shifting every byte and summing per value."""
+    if b[-1] & _CONT:
+        raise ValueError("vbyte stream truncated")
+    ends = np.flatnonzero(b < _CONT)
     starts = np.empty_like(ends)
     starts[0] = 0
     starts[1:] = ends[:-1] + 1
     lens = ends - starts + 1
-    pos_in_val = np.arange(b.size, dtype=np.int64) - np.repeat(starts, lens)
-    contrib = (b.astype(np.uint64) & _MASK7) << (pos_in_val.astype(np.uint64) * _U7)
-    return np.add.reduceat(contrib, starts), ends
+    low = b & _MASK7.astype(np.uint8)
+    vals = low[starts].astype(np.uint64)
+    k, sel = 1, np.flatnonzero(lens > 1)
+    while sel.size:
+        vals[sel] |= low[starts[sel] + k].astype(np.uint64) << np.uint64(7 * k)
+        k += 1
+        sel = sel[lens[sel] > k]
+    return vals, ends
 
 
 def vbyte_decode_prefix(buf: np.ndarray, nvals: int) -> tuple[np.ndarray, int]:
@@ -150,17 +160,10 @@ def vbyte_decode_prefix(buf: np.ndarray, nvals: int) -> tuple[np.ndarray, int]:
     Only scans a bounded prefix (≤ 10 bytes per value), so reading the
     meta stream of a huge posting blob never touches the data section.
     """
-    b = np.frombuffer(buf, dtype=np.uint8) if not isinstance(buf, np.ndarray) else buf
     if nvals == 0:
         return np.zeros(0, dtype=np.uint64), 0
-    window = b[: nvals * 10]
-    is_last = (window & _CONT) == 0
-    ends = np.nonzero(is_last)[0][:nvals]
-    if ends.size < nvals:
-        raise ValueError("vbyte stream truncated")
-    stop = int(ends[-1]) + 1
-    vals = vbyte_decode(window[:stop])
-    return vals[:nvals], stop
+    vals, ends, _ = _prefix([buf], np.array([nvals]))
+    return vals, int(ends[-1]) + 1
 
 
 # ---------------------------------------------------------------------------
@@ -238,54 +241,18 @@ def encode_postings(
 
 
 def decode_meta(blob: bytes | np.ndarray) -> PostingMeta:
-    b = np.frombuffer(blob, dtype=np.uint8) if not isinstance(blob, np.ndarray) else blob
-    head, consumed = vbyte_decode_prefix(b, 4)
-    n, nb, bs, last = int(head[0]), int(head[1]), int(head[2]), int(head[3])
-    rest, rest_bytes = vbyte_decode_prefix(b[consumed:], 4 * nb)
-    bf = np.cumsum(rest[:nb].astype(np.uint64))
-    return PostingMeta(
-        n=n,
-        block_size=bs,
-        last_docno=last,
-        block_first=bf,
-        block_maxtf=rest[nb : 2 * nb],
-        block_mindl=rest[2 * nb : 3 * nb],
-        block_bytes=rest[3 * nb : 4 * nb].astype(np.int64),
-        data_offset=consumed + rest_bytes,
-    )
+    """The header of one posting blob, read from a bounded prefix: the
+    one-list, header-only call of ``decode_lists``."""
+    return decode_lists([blob], 0)[0][0]
 
 
 def decode_postings(
     blob: bytes | np.ndarray, meta: PostingMeta | None = None
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Full decode → (docnos, tfs, dls), all uint64. One vectorized pass."""
-    b = np.frombuffer(blob, dtype=np.uint8) if not isinstance(blob, np.ndarray) else blob
-    meta = meta or decode_meta(b)
-    n, nb = meta.n, meta.nblocks
-    cnts = meta.block_counts()
-    V = vbyte_decode(b[meta.data_offset :])
-    nvals_per_block = 3 * cnts - 1
-    vstarts = np.concatenate(([0], np.cumsum(nvals_per_block)[:-1]))
-    dpos = ragged_ranges(vstarts, cnts - 1)
-    tpos = ragged_ranges(vstarts + (cnts - 1), cnts)
-    lpos = ragged_ranges(vstarts + (2 * cnts - 1), cnts)
-    tfs = V[tpos]
-    dls = V[lpos]
-    # reconstruct docnos: within each block, docno = block_first + cumsum(deltas)
-    full = np.zeros(n, dtype=np.uint64)
-    entry_starts = np.concatenate(([0], np.cumsum(cnts)[:-1]))
-    nonstart_mask = np.ones(n, dtype=bool)
-    nonstart_mask[entry_starts] = False
-    full[nonstart_mask] = V[dpos]
-    # block-start entries: delta from previous entry = block_first[i] - last
-    # docno of block i-1; expressed so a single global cumsum reconstructs.
-    deltasums = segment_sums(V[dpos], np.concatenate(([0], np.cumsum(cnts - 1)[:-1])), np.uint64)
-    prev_last = np.empty(nb, dtype=np.uint64)
-    prev_last[0] = 0
-    prev_last[1:] = meta.block_first[:-1] + deltasums[:-1]
-    full[entry_starts] = meta.block_first - prev_last
-    docnos = np.cumsum(full)
-    return docnos, tfs, dls
+    """Full decode → (docnos, tfs, dls), all uint64: the one-list call of
+    ``decode_lists``, whose one vbyte pass reads the header too, so a
+    caller's ``meta`` is not needed."""
+    return decode_lists([blob])[0][1]
 
 
 # ---------------------------------------------------------------------------
@@ -319,20 +286,8 @@ def decode_positions_blob(
 ) -> tuple[np.ndarray, np.ndarray]:
     """Full decode → (flat absolute positions, entry start offsets into it).
     ``tfs`` = per-entry tf values from the main blob decode (entry e has
-    tfs[e] positions). Vectorized: one vbyte pass + the cumsum-reset trick."""
-    b = np.frombuffer(blob, dtype=np.uint8) if not isinstance(blob, np.ndarray) else blob
-    head, consumed = vbyte_decode_prefix(b, 1)
-    nb = int(head[0])
-    _, skip = vbyte_decode_prefix(b[consumed:], nb)
-    vals = vbyte_decode(b[consumed + skip:])
-    tfs = tfs.astype(np.int64)
-    entry_starts = np.concatenate(([0], np.cumsum(tfs[:-1])))
-    if vals.size != int(tfs.sum()):
-        raise ValueError("positions blob length mismatch with tf stream")
-    cs = np.cumsum(vals)
-    base = cs[entry_starts] - vals[entry_starts]
-    flat = cs - np.repeat(base, tfs)
-    return flat, entry_starts
+    tfs[e] positions). The one-list call of ``decode_positions_many``."""
+    return decode_positions_many([blob], [tfs])[0]
 
 
 def split_positions_bytes(
@@ -482,6 +437,45 @@ def _encode_slice(run_lens, d, t, dl, bs: int) -> list[bytes]:
     )
 
 
+def decode_lists(
+    blobs, budget: int | None = None
+) -> list[tuple[PostingMeta, tuple[np.ndarray, np.ndarray, np.ndarray] | None]]:
+    """The read path's posting decoder: per blob in a sequence, its
+    ``PostingMeta`` and its entries (docnos, tfs, dls), all uint64.
+
+    Without ``budget`` every blob is decoded in full. With it, only the
+    smallest lists are, while their total entry count stays within
+    ``budget``; every other list gets None for its entries, and its header
+    is read from a bounded prefix (≤ 10 bytes per header value), so its
+    data section is not touched. Full decodes share one vbyte pass per
+    slice of at most BATCH_ENTRIES blob bytes (with ``budget``, entries);
+    headers alone take two passes over the prefixes (the first reads
+    each list's n and nblocks)."""
+    blobs = list(blobs)
+    out: list = [None] * len(blobs)
+    full = np.arange(len(blobs))
+    sizes = np.fromiter(map(len, blobs), np.int64, count=len(blobs))
+    if budget is not None and blobs:
+        head = _prefix(blobs, np.full(len(blobs), 4))[0].astype(np.int64)
+        n, nb = head[0::4], head[1::4]
+        order = np.argsort(n, kind="stable")
+        fits = np.cumsum(n[order]) <= budget
+        full, rest = np.sort(order[fits]), order[~fits]
+        if rest.size:
+            part = [blobs[i] for i in rest.tolist()]
+            heads = _heads(*_prefix(part, 4 + 4 * nb[rest])[:3])[0]
+            for i, meta in zip(rest.tolist(), _metas(heads)):
+                out[i] = (meta, None)
+        sizes = n  # the lists decoded in full fit the budget: one slice
+    for lo, hi, _, _ in _slices(sizes[full]):
+        idx = full[lo:hi].tolist()
+        heads, (d, t, dl) = _decode_slice([blobs[i] for i in idx])
+        spans = zip(_starts(heads.n).tolist(), heads.n.tolist())
+        for i, meta, (s, c) in zip(idx, _metas(heads), spans):
+            out[i] = (meta, (d[s : s + c], t[s : s + c], dl[s : s + c]))
+    return out
+
+
 def decode_postings_many(
     blobs,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
@@ -492,32 +486,98 @@ def decode_postings_many(
     parts: list[tuple] = []
     sizes = np.fromiter(map(len, blobs), np.int64, count=len(blobs))
     for lo, hi, _, _ in _slices(sizes):
-        row, d, t, dl = _decode_slice(blobs[lo:hi])
-        parts.append((row + lo, d, t, dl))
+        heads, entries = _decode_slice(blobs[lo:hi])
+        parts.append((np.repeat(np.arange(lo, hi), heads.n), *entries))
     if not parts:
         z = np.zeros(0, dtype=np.uint64)
         return np.zeros(0, dtype=np.int64), z, z.copy(), z.copy()
     return tuple(np.concatenate(c) for c in zip(*parts))
 
 
-def _decode_slice(blobs):
+class _Heads(NamedTuple):
+    """The headers of several posting lists, flat: per list (int64) its
+    entry count, block count, block size, last docno, data offset and
+    first block; per block the ``PostingMeta`` arrays, lists in order."""
+
+    n: np.ndarray
+    nb: np.ndarray
+    bs: np.ndarray
+    last: np.ndarray
+    data_offset: np.ndarray
+    first_blk: np.ndarray
+    block_first: np.ndarray
+    block_maxtf: np.ndarray
+    block_mindl: np.ndarray
+    block_bytes: np.ndarray
+
+
+def _heads(vals: np.ndarray, ends: np.ndarray, offs: np.ndarray):
+    """Parse the meta streams of posting lists decoded into ``vals``: list
+    i starts at byte ``offs[i]`` of the joined buffer whose value v ends
+    at byte ``ends[v]``. Every list ends on a terminal byte, so its first
+    value's index is the count of terminal bytes before its offset.
+    Returns the ``_Heads`` and, per block, (its list, its index within
+    the list, the index of its list's first data value)."""
+    v0 = np.searchsorted(ends, offs)
+    n, nb, bs, last = (vals[v0 + i].astype(np.int64) for i in range(4))
+    blk_run = np.repeat(np.arange(offs.size), nb)
+    first_blk = _starts(nb)
+    first = first_blk[blk_run]
+    j = np.arange(blk_run.size, dtype=np.int64) - first
+    m, stride = (v0 + 4)[blk_run] + j, nb[blk_run]
+    bf_delta = vals[m]
+    cs = np.cumsum(bf_delta)  # reset per list: block_first
+    data0 = v0 + 4 + 4 * nb
+    heads = _Heads(
+        n, nb, bs, last, ends[data0 - 1] + 1 - offs, first_blk,
+        cs - (cs[first] - bf_delta[first]),
+        vals[m + stride], vals[m + 2 * stride],
+        vals[m + 3 * stride].astype(np.int64),
+    )
+    return heads, (blk_run, j, data0[blk_run])
+
+
+def _metas(h: _Heads) -> list[PostingMeta]:
+    """One ``PostingMeta`` per list of ``h``; its block arrays are views."""
+    cols = (h.n, h.bs, h.last, h.data_offset, h.first_blk, h.nb)
+    return [
+        PostingMeta(
+            n=n, block_size=bs, last_docno=last,
+            block_first=h.block_first[f : f + nb],
+            block_maxtf=h.block_maxtf[f : f + nb],
+            block_mindl=h.block_mindl[f : f + nb],
+            block_bytes=h.block_bytes[f : f + nb],
+            data_offset=off,
+        )
+        for n, bs, last, off, f, nb in zip(*(c.tolist() for c in cols))
+    ]
+
+
+def _prefix(blobs, nvals: np.ndarray):
+    """Decode the first ``nvals[i]`` values of blob i, scanning at most
+    10 bytes per value → (vals, ends, offs) over the blobs' prefixes that
+    hold exactly those values, joined (``_vbyte_decode_ends``; prefix i at
+    byte ``offs[i]``)."""
+    windows = [b[: 10 * c] for b, c in zip(blobs, nvals.tolist())]
+    buf, woffs, wlens = join_bytes(windows)
+    term = np.flatnonzero(buf < _CONT)
+    k = np.searchsorted(term, woffs) + nvals - 1
+    if (k >= term.size).any() or (term[k] >= woffs + wlens).any():
+        raise ValueError("vbyte stream truncated")
+    lens = term[k] + 1 - woffs
+    return (*_vbyte_decode_ends(buf[ragged_ranges(woffs, lens)]), _starts(lens))
+
+
+def _decode_slice(blobs) -> tuple[_Heads, tuple[np.ndarray, np.ndarray, np.ndarray]]:
+    """Headers and entries of the blobs, from one vbyte pass."""
     buf, offs, _ = join_bytes(blobs)
     vals, ends = _vbyte_decode_ends(buf)
-    # every blob ends on a terminal byte, so its first value's index is the
-    # count of terminal bytes before its offset
-    v0 = np.searchsorted(ends, offs)
-    n, nb, bs = (vals[v0 + i].astype(np.int64) for i in range(3))
-    blk_run = np.repeat(np.arange(offs.size), nb)
-    first_blk = _starts(nb)[blk_run]
-    j = np.arange(blk_run.size, dtype=np.int64) - first_blk
-    bsb, nbb = bs[blk_run], nb[blk_run]
-    cnt = np.where(j == nbb - 1, n[blk_run] - bsb * (nbb - 1), bsb)
-    bf_delta = vals[v0[blk_run] + 4 + j]
-    cs = np.cumsum(bf_delta)  # reset per blob: block_first
-    block_first = cs - (cs[first_blk] - bf_delta[first_blk])
+    h, (blk_run, j, data0) = _heads(vals, ends, offs)
+    bsb, nbb = h.bs[blk_run], h.nb[blk_run]
+    cnt = np.where(j == nbb - 1, h.n[blk_run] - bsb * (nbb - 1), bsb)
     g = _starts(3 * cnt - 1)
-    vs = (v0 + 4 + 4 * nb)[blk_run] + g - g[first_blk]
-    return np.repeat(np.arange(offs.size), n), *_block_entries(vals, vs, cnt, block_first)
+    vs = data0 + g - g[h.first_blk[blk_run]]
+    return h, _block_entries(vals, vs, cnt, h.block_first)
 
 
 def _block_entries(
@@ -592,3 +652,34 @@ def split_positions_many(
         starts[e0:e1] = term[first - 1] + 1
         ends[e0:e1] = term[first + t - 1] + 1
     return buf, starts, ends - starts
+
+
+def decode_positions_many(
+    blobs, tfs
+) -> list[tuple[np.ndarray, np.ndarray]]:
+    """``decode_positions_blob`` of every blob in a sequence: ``tfs[r]``
+    holds the tf of each entry of blob r. One vbyte pass per slice of at
+    most BATCH_ENTRIES blob bytes, the per-entry delta decode (a cumsum
+    reset per entry) over all its lists at once."""
+    blobs = list(blobs)
+    out: list = []
+    sizes = np.fromiter(map(len, blobs), np.int64, count=len(blobs))
+    for lo, hi, _, _ in _slices(sizes):
+        buf, offs, _ = join_bytes(blobs[lo:hi])
+        vals, ends = _vbyte_decode_ends(buf)
+        v0 = np.searchsorted(ends, offs)
+        tf = [np.asarray(t).astype(np.int64) for t in tfs[lo:hi]]
+        ne = np.fromiter(map(len, tf), np.int64, count=len(tf))
+        tf = np.concatenate(tf)
+        npos = segment_sums(tf, _starts(ne))  # positions per list
+        first = v0 + 1 + vals[v0].astype(np.int64)  # after [nb, block_bytes]
+        if not np.array_equal(np.append(v0[1:], vals.size) - first, npos):
+            raise ValueError("positions blob length mismatch with tf stream")
+        pv = vals[ragged_ranges(first, npos)]
+        estart = _starts(tf)
+        cs = np.cumsum(pv)
+        flat = cs - np.repeat(cs[estart] - pv[estart], tf)
+        p0, e0 = _starts(npos).tolist(), _starts(ne).tolist()
+        for p, c, e, m in zip(p0, npos.tolist(), e0, ne.tolist()):
+            out.append((flat[p : p + c], estart[e : e + m] - p))
+    return out

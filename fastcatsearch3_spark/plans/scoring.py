@@ -34,15 +34,18 @@ BM25 (k1=1.2, b=0.75 pinned in EngineConfig; BASELINE.md):
 
 from __future__ import annotations
 
+import weakref
 from dataclasses import InitVar, dataclass, field
 
 import numpy as np
 
+from fastcatsearch3_spark.functions import vbyte
 from fastcatsearch3_spark.functions.vbyte import (
     PostingMeta,
     decode_blocks,
+    decode_lists,
     decode_meta,
-    decode_positions_blob,
+    decode_positions_many,
     decode_postings,
     ragged_ranges,
 )
@@ -63,20 +66,54 @@ def bm25_tf_norm(
 class PostingList:
     """One (segment, shard, term) posting list as a kernel call holds it:
     the blob, its positions sidecar (or None) and the header, plus the
-    full decodes, each made at most once, on first use, and then shared
-    by every query of the call that reads the list."""
+    full decodes, each made at most once per call and shared by every
+    query of the call that reads the list.
 
-    __slots__ = ("blob", "pos_blob", "meta", "_entries", "_positions")
+    ``group`` builds a call's lists in one batched pass
+    (``vbyte.decode_lists``): every header, and the entries of the
+    smallest lists while their total stays within ``vbyte.BATCH_ENTRIES``
+    (65,536 entries, about 1.5 MB decoded); their arrays are views of one
+    buffer, freed with the last of them. When a phrase first needs the
+    positions of one of those lists, the sidecars of all of them that are
+    still held are decoded in one pass too. A longer list stays lazy: its
+    entries are decoded on first full use (``decode_postings``), a probe
+    decodes only the blocks it needs (``decode_blocks``), and its
+    positions are decoded on their own."""
+
+    __slots__ = (
+        "blob", "pos_blob", "meta", "_entries", "_positions", "_peers",
+        "__weakref__",
+    )
 
     def __init__(
         self, blob: bytes, pos_blob: bytes | None = None,
         meta: PostingMeta | None = None,
+        entries: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None,
+        peers: list | None = None,
     ):
         self.blob = blob
         self.pos_blob = pos_blob
         self.meta = decode_meta(blob) if meta is None else meta
-        self._entries = None
+        self._entries = entries
         self._positions = None
+        # weak references to the lists (this one among them) whose
+        # positions decode together; weak, so a dropped list is freed
+        self._peers = peers
+
+    @classmethod
+    def group(cls, blobs: list, pos_blobs: list) -> "list[PostingList]":
+        """The lists of one kernel call (see the class docstring)."""
+        peers: list = []
+        out = []
+        for blob, pos_blob, (meta, entries) in zip(
+            blobs, pos_blobs, decode_lists(blobs, vbyte.BATCH_ENTRIES)
+        ):
+            batched = entries is not None and pos_blob is not None
+            pl = cls(blob, pos_blob, meta, entries, peers if batched else None)
+            if batched:
+                peers.append(weakref.ref(pl))
+            out.append(pl)
+        return out
 
     @property
     def decoded(self) -> bool:
@@ -91,9 +128,15 @@ class PostingList:
     def positions(self) -> tuple[np.ndarray, np.ndarray]:
         """(flat absolute positions, entry start offsets into them)."""
         if self._positions is None:
-            self._positions = decode_positions_blob(
-                self.pos_blob, self.entries()[1]
+            lists = [self] if self._peers is None else [
+                pl for ref in self._peers
+                if (pl := ref()) is not None and pl._positions is None
+            ]
+            decoded = decode_positions_many(
+                [pl.pos_blob for pl in lists], [pl.entries()[1] for pl in lists]
             )
+            for pl, pos in zip(lists, decoded):
+                pl._positions = pos
         return self._positions
 
 

@@ -37,12 +37,18 @@ return identical answers:
     Q-4  scoring: ``_run_local`` calls the kernel once per local
          (segment_id, shard) group, with that group's slice of the
          per-epoch denied set (docmap ⋈ deletes in pandas). A call
-         decodes each of the group's posting lists at most once, on
-         first use, and every query of the batch shares that decode
-         (``_group_postings``); a list no query reads in full is only
-         block-probed, and a list is freed once the last query that
-         reads it has scored (``_last_reads``). The call emits one
-         hits frame for the group;
+         decodes the group's posting lists in one batched pass
+         (``_group_postings``): every header, and the entries of the
+         smallest lists while their total stays within
+         ``vbyte.BATCH_ENTRIES`` (65,536 entries, about 1.5 MB
+         decoded); the positions of those lists are decoded together
+         when a phrase first needs them. A longer list stays lazy: it
+         is decoded on first full use, and a query that only probes it
+         decodes just the blocks it needs (block-max skipping). Each
+         list is decoded at most once per call, every query of the
+         batch shares that decode, and a list is freed once the last
+         query that reads it has scored (``_last_reads``). The call
+         emits one hits frame for the group;
     Q-6  top-k: pandas sorts the hits (score desc, doc_id asc) and pages
          them (offset / after), per query_id for a batch;
     Q-5  hydrate: doc_ids come from the per-epoch docmap; the result
@@ -61,7 +67,8 @@ return identical answers:
          (``_group_apply``) — every group holds all of its docs'
          postings for all query terms, so AND/OR/NOT and block-max
          pruning are shard-local and exact; the same kernel, so the
-         same once-per-call decode and one frame per group;
+         same batched once-per-call decode (whose budget bounds the
+         eager part on large groups) and one frame per group;
     Q-6  scatter-gather: each group emits its local top-k; the global
          orderBy(score desc, doc_id asc).limit(k) compiles to Spark's
          TakeOrderedAndProject — the same partial/final top-k merge the
@@ -318,16 +325,17 @@ class _GroupHits:
 
 
 def _group_postings(pdf: pd.DataFrame) -> "dict[str, PostingList]":
-    """A group's posting rows as term → ``PostingList``: each header is
-    decoded here, each list's entries and positions at most once, on
-    first use, and every spec of the kernel call shares them."""
+    """A group's posting rows as term → ``PostingList``, decoded in one
+    batched pass (``PostingList.group``: every header, the smallest
+    lists' entries within ``vbyte.BATCH_ENTRIES``, the rest lazily); every
+    spec of the kernel call shares them."""
     pos_blobs = (
         pdf["positions"] if "positions" in pdf.columns else [None] * len(pdf)
     )
-    return {
-        t: PostingList(bytes(bl), bytes(pbl) if pbl is not None else None)
-        for t, bl, pbl in zip(pdf["term"], pdf["postings"], pos_blobs)
-    }
+    return dict(zip(pdf["term"], PostingList.group(
+        [bytes(bl) for bl in pdf["postings"]],
+        [bytes(pbl) if pbl is not None else None for pbl in pos_blobs],
+    )))
 
 
 def _last_reads(readers: list) -> list[list[str]]:
@@ -376,8 +384,9 @@ def make_kernel(
     ``KERNEL_SCHEMA`` rows, all in one frame.
 
     ``pdf``: the group's rows of the fetched terms (``positions`` set
-    only for phrase terms). Each list is decoded at most once per call
-    and shared by every spec (``_group_postings``), then freed after
+    only for phrase terms). Each list is decoded at most once per call,
+    the smaller ones in one batched pass, and shared by every spec
+    (``_group_postings``), then freed after
     the last spec that reads it. ``mask_pdf`` (or
     None): the group's mask rows, kind -1 denied docnos and kind 1
     allowed docnos — per query_id when ``per_query_allow``, else for

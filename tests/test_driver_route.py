@@ -133,9 +133,10 @@ def test_routes_agree(spark, states, state, monkeypatch):
 
 
 def test_batch_decodes_each_list_once(spark, states, monkeypatch):
-    """A search_many kernel call decodes each (segment, shard, term) list
-    in full at most once, and its positions at most once, however many
-    queries of the batch read it; run one at a time, the same queries
+    """A search_many kernel call decodes its lists in one batched pass,
+    each (segment, shard, term) list in full at most once and its
+    positions at most once, however many queries of the batch read it;
+    run one at a time, the same queries
     decode the shared lists again. The batch's texts are parsed in one
     ``parse_query`` call, the parse layer's one entry point."""
     from collections import Counter
@@ -146,19 +147,36 @@ def test_batch_decodes_each_list_once(spark, states, monkeypatch):
     base, roots = states
     col = Collection(spark, roots["mutated"], CFG)
     counts: Counter = Counter()
+    passes: Counter = Counter()  # batched decode passes per kernel call
     call = [0]
     held = []  # the kernel frees lists early: hold keys so ids stay unique
 
-    def counted(fn, kind):
-        # keyed by the list's own second argument (its header for the
-        # entries, its decoded tf array for the positions): equal blobs
-        # of two terms can be one bytes object after the Arrow read
-        def wrapped(blob, own, *a):
-            held.append(own)
-            counts[call[0], kind, id(own)] += 1
-            return fn(blob, own, *a)
-        return wrapped
+    def count(kind, own):
+        held.append(own)
+        counts[call[0], kind, id(own)] += 1
 
+    # keyed by each list's own header (entries) or decoded tf array
+    # (positions): equal blobs of two terms can be one bytes object after
+    # the Arrow read
+    def batched(blobs, *a):
+        passes[call[0]] += 1
+        out = real_lists(blobs, *a)
+        for meta, entries in out:
+            if entries is not None:
+                count("entries", meta)
+        return out
+
+    def lazy(blob, meta):
+        count("entries", meta)
+        return real_full(blob, meta)
+
+    def positions(blobs, tfs):
+        for t in tfs:
+            count("positions", t)
+        return real_pos(blobs, tfs)
+
+    real_lists, real_full = scoring.decode_lists, scoring.decode_postings
+    real_pos = scoring.decode_positions_many
     real_make = search_mod.make_kernel
 
     def make_kernel(*a, **kw):
@@ -170,13 +188,9 @@ def test_batch_decodes_each_list_once(spark, states, monkeypatch):
         return per_call
 
     monkeypatch.setattr(search_mod, "make_kernel", make_kernel)
-    monkeypatch.setattr(
-        scoring, "decode_postings", counted(scoring.decode_postings, "entries")
-    )
-    monkeypatch.setattr(
-        scoring, "decode_positions_blob",
-        counted(scoring.decode_positions_blob, "positions"),
-    )
+    monkeypatch.setattr(scoring, "decode_lists", batched)
+    monkeypatch.setattr(scoring, "decode_postings", lazy)
+    monkeypatch.setattr(scoring, "decode_positions_many", positions)
     parses = []
     real_parse = search_mod.parse_query
 
@@ -190,6 +204,7 @@ def test_batch_decodes_each_list_once(spark, states, monkeypatch):
     assert jobs == [] and {r[0] for r in rows} == set(queries)
     assert parses == [list(queries.values())]
     assert call[0] > 1 and counts
+    assert set(passes.values()) == {1}
     assert max(counts.values()) == 1
     assert any(kind == "positions" for _, kind, _ in counts)
     batch = sum(counts.values())

@@ -518,8 +518,10 @@ def _assert_same(got, want):
 def test_shared_lists_score_bit_identical(seed, n_docs, block_size, k):
     """The same answers, array for array and bit for bit, from fresh
     TermPostings (block probes), from TermPostings over already-decoded
-    shared lists (probes search the decoded arrays), and from shared
-    lists decoded lazily as one batch of specs goes along."""
+    shared lists (probes search the decoded arrays), from shared lists
+    decoded lazily as one batch of specs goes along, and from the lists
+    of one batched pass (``PostingList.group``), all or some of them
+    decoded eagerly."""
     from fastcatsearch3_spark.plans.scoring import PostingList
 
     lists, dls = _shared_corpus(seed, n_docs, block_size)
@@ -546,6 +548,27 @@ def test_shared_lists_score_bit_identical(seed, n_docs, block_size, k):
                    lambda t, idf: TermPostings(t, idf, postings=lazy[t])),
         want,
     )
+
+    # one kernel call's batched pass (entries and positions), with every
+    # list within the eager budget, then with only the smallest one
+    from unittest import mock
+
+    from fastcatsearch3_spark.functions import vbyte
+
+    for budget in (vbyte.BATCH_ENTRIES, min(df for *_, df in lists.values())):
+        with mock.patch.object(vbyte, "BATCH_ENTRIES", budget):
+            grouped = dict(zip(lists, PostingList.group(
+                [blob for blob, _, _ in lists.values()],
+                [pos for _, pos, _ in lists.values()],
+            )))
+        assert sum(pl.decoded for pl in grouped.values()) == (
+            len(lists) if budget == vbyte.BATCH_ENTRIES else 1
+        )
+        _assert_same(
+            _score_all(lists, dls, n_docs, k,
+                       lambda t, idf: TermPostings(t, idf, postings=grouped[t])),
+            want,
+        )
 
 
 @given(
@@ -589,58 +612,157 @@ def test_probe_over_decoded_list_equals_block_probe(seed, block_size, data):
         np.testing.assert_array_equal(c1, c2)
 
 
-def test_kernel_frees_each_list_after_its_last_reader(monkeypatch):
-    """A kernel call keeps a decoded list only while a later spec of the
-    batch still reads it: a list read by one spec is freed before the
-    next spec decodes, a list read again later stays decoded (and is
-    decoded once), and nothing decoded outlives the call."""
+def _kernel_run(monkeypatch, lists, dls, n_docs, mode):
+    """A harness around one ``make_kernel`` call over ``lists``: ``run(texts)``
+    scores one spec per text (in order) and returns the hits frame. It
+    records, per call, the terms whose entries the batched pass decoded
+    (``batched``), the full decodes of lazy lists (``lazy``, term and how
+    many lazily decoded arrays were still alive then), the lists each
+    block probe read (``probed``), and, as each spec starts scoring, the
+    terms whose ``PostingList`` is still alive (``held``)."""
     import weakref
 
     import pandas as pd
 
     from fastcatsearch3_spark.plans import scoring
+    from fastcatsearch3_spark.plans import search as search_mod
     from fastcatsearch3_spark.plans.query import parse_query
-    from fastcatsearch3_spark.plans.search import make_kernel, query_spec
 
-    n_docs = 300
-    lists, dls = _shared_corpus(7, n_docs, 8)
-    pdf = pd.DataFrame({
-        "segment_id": 0, "shard": 0, "term": list(lists),
-        "postings": [blob for blob, _, _ in lists.values()],
-    })
+    term_of = {blob: t for t, (blob, _, _) in lists.items()}
     dfmap = {t: df for t, (_, _, df) in lists.items()}
-    decodes = []  # per full decode: (term's df, decodes still alive then)
+    rec = {"batched": [], "lazy": [], "probed": [], "held": []}
+    built: list = []  # weak refs to every PostingList of the call
+    lazy_refs: list = []
 
-    def alive_refs():
-        return [r for *_, r in decodes if r() is not None]
+    def alive(refs):
+        return [r for r in refs if r() is not None]
 
-    def tracked(blob, meta):
-        out = real(blob, meta)
-        decodes.append((meta.n, len(alive_refs()), weakref.ref(out[0])))
+    real_lists, real_full = scoring.decode_lists, scoring.decode_postings
+    real_blocks, real_group = scoring.decode_blocks, search_mod.score_group
+
+    def decode_lists(blobs, *a):
+        out = real_lists(blobs, *a)
+        rec["batched"].append(
+            [term_of[bytes(b)] for b, (_, e) in zip(blobs, out) if e is not None]
+        )
         return out
 
-    real = scoring.decode_postings
-    monkeypatch.setattr(scoring, "decode_postings", tracked)
+    def decode_postings(blob, meta):
+        out = real_full(blob, meta)
+        rec["lazy"].append((term_of[bytes(blob)], len(alive(lazy_refs))))
+        lazy_refs.append(weakref.ref(out[0]))
+        return out
+
+    def decode_blocks(blob, meta, idx):
+        rec["probed"].append(term_of[bytes(blob)])
+        return real_blocks(blob, meta, idx)
+
+    def group(blobs, pos_blobs):
+        out = real_group_lists(blobs, pos_blobs)
+        built.extend((term_of[pl.blob], weakref.ref(pl)) for pl in out)
+        return out
+
+    def score_group(*a, **kw):
+        rec["held"].append(sorted(t for t, r in built if r() is not None))
+        return real_group(*a, **kw)
+
+    real_group_lists = scoring.PostingList.group
+    monkeypatch.setattr(scoring, "decode_lists", decode_lists)
+    monkeypatch.setattr(scoring, "decode_postings", decode_postings)
+    monkeypatch.setattr(scoring, "decode_blocks", decode_blocks)
+    monkeypatch.setattr(scoring.PostingList, "group", staticmethod(group))
+    monkeypatch.setattr(search_mod, "score_group", score_group)
 
     def run(texts):
-        decodes.clear()
+        for v in rec.values():
+            v.clear()
+        built.clear()
+        lazy_refs.clear()
         specs = [
-            query_spec(f"q{i}", parse_query(t), dfmap, n_docs)
+            search_mod.query_spec(f"q{i}", parse_query(t), dfmap, n_docs)
             for i, t in enumerate(texts)
         ]
-        kernel = make_kernel(
-            specs, k=5, mode="taat", k1=K1, b=B, avgdl=float(dls.mean()),
+        terms = sorted({t for s in specs for t in (*s.qidf, *s.nset)})
+        pdf = pd.DataFrame({
+            "segment_id": 0, "shard": 0, "term": terms,
+            "postings": [lists[t][0] for t in terms],
+        })
+        kernel = search_mod.make_kernel(
+            specs, k=5, mode=mode, k1=K1, b=B, avgdl=float(dls.mean()),
             term_avgdl={},
         )
         hits = kernel(pdf, None)
         assert set(hits["query_id"]) == {s.qid for s in specs}
-        return [(n, alive) for n, alive, _ in decodes]
+        # nothing decoded outlives the call
+        assert alive([r for _, r in built]) == [] and alive(lazy_refs) == []
+        return hits
 
-    # each list read by one spec only: freed before the next decode
-    assert run(["t0", "t1", "t2"]) == [
-        (dfmap["t0"], 0), (dfmap["t1"], 0), (dfmap["t2"], 0),
+    return run, rec, dfmap
+
+
+def test_kernel_frees_each_list_after_its_last_reader(monkeypatch):
+    """A kernel call decodes its lists in one batched pass and keeps each
+    list only while a spec still reads it: as each spec starts scoring,
+    exactly the lists it or a later spec reads are held, each list is
+    decoded once, and nothing decoded outlives the call. With the eager
+    budget under every list, each list is decoded on first use instead,
+    and a list read by one spec is freed before the next decode."""
+    from fastcatsearch3_spark.functions import vbyte
+
+    n_docs = 300
+    lists, dls = _shared_corpus(7, n_docs, 8)
+    run, rec, _ = _kernel_run(monkeypatch, lists, dls, n_docs, "taat")
+
+    run(["t0", "t1", "t2"])
+    assert rec["batched"] == [["t0", "t1", "t2"]] and rec["lazy"] == []
+    assert rec["held"] == [["t0", "t1", "t2"], ["t1", "t2"], ["t2"]]
+    # t0 is read again by the last spec: held until then, decoded once
+    run(["t0", "t1", "t0"])
+    assert rec["batched"] == [["t0", "t1"]] and rec["lazy"] == []
+    assert rec["held"] == [["t0", "t1"], ["t0", "t1"], ["t0"]]
+
+    monkeypatch.setattr(vbyte, "BATCH_ENTRIES", 0)
+    run(["t0", "t1", "t2"])
+    assert rec["batched"] == [[]]
+    assert rec["lazy"] == [("t0", 0), ("t1", 0), ("t2", 0)]
+    assert rec["held"] == [["t0", "t1", "t2"], ["t1", "t2"], ["t2"]]
+    run(["t0", "t1", "t0"])
+    assert rec["lazy"] == [("t0", 0), ("t1", 1)]
+
+
+def test_lists_over_the_eager_budget_stay_lazy(monkeypatch):
+    """A group over the eager budget: the smallest lists are decoded in
+    the batched pass, the longer ones stay lazy. In ``bmw`` mode an AND
+    only block-probes the longer lists (no full decode), every list is
+    freed after its last reader, and the hits equal the all-eager call's
+    bit for bit."""
+    from fastcatsearch3_spark.functions import vbyte
+
+    n_docs = 3000
+    lists, dls = _shared_corpus(11, n_docs, 16)
+    run, rec, dfmap = _kernel_run(monkeypatch, lists, dls, n_docs, "bmw")
+    by_df = sorted(dfmap, key=dfmap.get)
+    small, big = by_df[:2], by_df[2:]
+    texts = [
+        f"{small[0]} {big[0]}", f"{small[1]} {big[1]}",
+        f"({small[0]} OR {big[1]}) {small[1]}",
+        f"{small[0]} {small[1]} {big[0]}",
     ]
-    assert alive_refs() == []
-    # t0 is read again by the last spec: kept (one decode) until then
-    assert run(["t0", "t1", "t0"]) == [(dfmap["t0"], 0), (dfmap["t1"], 1)]
-    assert alive_refs() == []
+    readers = [[small[0], big[0]], [small[1], big[1]],
+               [small[0], big[1], small[1]], [small[0], small[1], big[0]]]
+    held = [sorted({t for r in readers[i:] for t in r}) for i in range(4)]
+
+    eager = run(texts)
+    assert rec["batched"] == [sorted(by_df)] and rec["probed"] == []
+    assert rec["held"] == held
+
+    monkeypatch.setattr(vbyte, "BATCH_ENTRIES", dfmap[small[0]] + dfmap[small[1]])
+    lazy = run(texts)
+    assert rec["batched"] == [sorted(small)]
+    # the flat ANDs probe the longer lists' blocks; only the clause tree
+    # decodes one in full
+    assert set(rec["probed"]) == set(big)
+    assert rec["lazy"] == [(big[1], 0)]
+    assert rec["held"] == held
+    pd_eq = lazy.reset_index(drop=True).equals(eager.reset_index(drop=True))
+    assert pd_eq, (lazy, eager)

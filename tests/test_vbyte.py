@@ -20,8 +20,10 @@ settings.load_profile("vbyte")
 from fastcatsearch3_spark.functions import vbyte as V
 from fastcatsearch3_spark.functions.vbyte import (
     decode_blocks,
+    decode_lists,
     decode_meta,
     decode_positions_blob,
+    decode_positions_many,
     decode_postings,
     decode_postings_many,
     encode_positions_blob,
@@ -249,6 +251,125 @@ def test_decode_postings_many_equals_per_blob(runs, block_size, cap):
     np.testing.assert_array_equal(row, np.repeat(np.arange(len(blobs)), run_lens))
     for got, i in ((d, 0), (t, 1), (l, 2)):
         np.testing.assert_array_equal(got, np.concatenate([w[i] for w in want]))
+
+
+def _ref_varints(blob: bytes):
+    """The blob's vbyte values, one at a time (the reference reader)."""
+    v = shift = 0
+    for byte in blob:
+        v |= (byte & 0x7F) << shift
+        shift += 7
+        if byte < 0x80:
+            yield v
+            v = shift = 0
+
+
+def _ref_decode(blob: bytes):
+    """(header fields, docnos, tfs, dls) of one posting blob, read value
+    by value as the module docstring lays the format out."""
+    it = _ref_varints(blob)
+    n, nb, bs, last = (next(it) for _ in range(4))
+    rest = [next(it) for _ in range(4 * nb)]
+    first = list(np.cumsum(rest[:nb], dtype=np.uint64).tolist())
+    head = dict(
+        n=n, block_size=bs, last_docno=last, block_first=first,
+        block_maxtf=rest[nb : 2 * nb], block_mindl=rest[2 * nb : 3 * nb],
+        block_bytes=rest[3 * nb :],
+    )
+    docnos, tfs, dls = [], [], []
+    for i in range(nb):
+        cnt = bs if i < nb - 1 else n - bs * (nb - 1)
+        gaps = [next(it) for _ in range(cnt - 1)]
+        docnos += np.cumsum([first[i]] + gaps, dtype=np.uint64).tolist()
+        tfs += [next(it) for _ in range(cnt)]
+        dls += [next(it) for _ in range(cnt)]
+    return head, docnos, tfs, dls
+
+
+@st.composite
+def block_lists(draw):
+    """A block size from 1 to 128 and posting lists over it: single-entry
+    lists, lists a whole number of blocks long, and any length."""
+    bs = draw(st.integers(1, 128))
+    n_of = st.one_of(
+        st.just(1), st.integers(1, 4).map(lambda m: m * bs), st.integers(1, 400)
+    )
+    run_lens = np.array(draw(st.lists(n_of, min_size=1, max_size=8)), np.int64)
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    docnos = np.concatenate([
+        np.cumsum(rng.integers(1, 2**12, size=n, dtype=np.uint64)) for n in run_lens
+    ])
+    tfs = rng.integers(1, 2**9, size=docnos.size, dtype=np.uint64)
+    dls = rng.integers(1, 2**16, size=docnos.size, dtype=np.uint64)
+    return bs, run_lens, encode_postings_many(run_lens, docnos, tfs, dls, bs)
+
+
+@given(block_lists(), st.sampled_from([None, 0, 1, 300, 2**40]), _SMALL_BATCH)
+@settings(max_examples=60, deadline=None)
+def test_decode_lists_equals_per_list_decode(lists, budget, cap):
+    """The batched read decoder equals per-list ``decode_meta`` +
+    ``decode_postings`` and a value-by-value reference reader, field for
+    field and dtype for dtype; with a budget it decodes exactly the
+    smallest lists whose total entry count fits, and only headers of the
+    rest. A small BATCH_ENTRIES makes the lists span several slices."""
+    _, run_lens, blobs = lists
+    with pytest.MonkeyPatch.context() as m:
+        _batch(m, cap)
+        got = decode_lists(blobs, budget)
+    if budget is None:
+        eager = set(range(len(blobs)))
+    else:
+        order = np.argsort(run_lens, kind="stable")
+        eager = set(order[np.cumsum(run_lens[order]) <= budget].tolist())
+    assert len(got) == len(blobs)
+    for i, (blob, (meta, entries)) in enumerate(zip(blobs, got)):
+        one, want = decode_meta(blob), decode_postings(blob)
+        head, *ref = _ref_decode(blob)
+        for f, v in head.items():
+            a, b = getattr(meta, f), getattr(one, f)
+            assert type(a) is type(b)
+            if isinstance(a, np.ndarray):
+                assert a.dtype == b.dtype
+                np.testing.assert_array_equal(a, b)
+            else:
+                assert a == b
+            assert np.array_equal(np.asarray(a), np.asarray(v, dtype=np.asarray(a).dtype))
+        assert meta.data_offset == one.data_offset
+        assert meta.nblocks == -(-meta.n // meta.block_size)
+        assert (entries is not None) == (i in eager)
+        for arr in [] if entries is None else zip(entries, want, ref):
+            a, w, r = arr
+            assert a.dtype == w.dtype == np.uint64
+            np.testing.assert_array_equal(a, w)
+            np.testing.assert_array_equal(a, np.array(r, dtype=np.uint64))
+
+
+@given(posting_runs(), st.integers(1, 128), _SMALL_BATCH)
+@settings(max_examples=25, deadline=None)
+def test_decode_positions_many_equals_reference(runs, block_size, cap):
+    """The batched positions decoder equals per-list
+    ``decode_positions_blob`` and the reference: entry e's positions are
+    the running sum of its delta run."""
+    run_lens, _, tfs, _, ents = runs
+    pos_tfs = np.array([int(t) % 5 + 1 for t in tfs], dtype=np.uint64)
+    starts = np.concatenate(([0], np.cumsum(run_lens)))
+    buf, bstarts, blens = join_bytes(ents)
+    blobs = encode_positions_many(run_lens, buf, bstarts, blens, block_size)
+    tf_runs = [pos_tfs[a:b] for a, b in zip(starts[:-1], starts[1:])]
+    with pytest.MonkeyPatch.context() as m:
+        _batch(m, cap)
+        got = decode_positions_many(blobs, tf_runs)
+    for (flat, es), blob, tf, a, b in zip(got, blobs, tf_runs, starts[:-1], starts[1:]):
+        one = decode_positions_blob(blob, tf)
+        ref = np.concatenate([np.cumsum(vbyte_decode(e)) for e in ents[a:b]])
+        assert flat.dtype == one[0].dtype == np.uint64
+        assert es.dtype == one[1].dtype == np.int64
+        np.testing.assert_array_equal(flat, one[0])
+        np.testing.assert_array_equal(es, one[1])
+        np.testing.assert_array_equal(flat, ref)
+        np.testing.assert_array_equal(es, np.concatenate(([0], np.cumsum(tf.astype(np.int64))[:-1])))
+    with pytest.raises(ValueError):
+        decode_positions_many(blobs[:1], [tf_runs[0] + 1])
 
 
 @given(posting_runs(), st.sampled_from([4, 128]), _SMALL_BATCH)
